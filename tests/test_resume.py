@@ -1,15 +1,46 @@
-"""Checkpoint/resume: kill after round k, rerun, identical final state.
+"""Checkpoint/resume: kill the crawl at a commit boundary, rerun with
+resume=True, and get the uninterrupted run's final state.
 
-Simulates the kill by deleting every committed round manifest (and round
-data) after round k — exactly what a crash mid-round leaves behind: the
-last manifest wins, later partial writes are orphans the rerun overwrites.
+The kill-point matrix covers every boundary of the commit protocol:
+
+* ``manifests_dropped`` — delete every committed round after round k
+  (what a crash between rounds leaves behind: the last manifest wins);
+* ``mid_dataset_writes`` — one of round k's dataset writes fails after
+  the others have landed (orphan data, no manifest);
+* ``seen_appended_before_manifest`` — the bucketed-seen insert and every
+  dataset write landed, the manifest rename did not;
+* ``mid_compaction`` — the compacted seen table's new versioned directory
+  is written, the meta pointer has not advanced;
+* ``mid_export`` — the ordered export is staged, the rename did not run.
+
+Every kill except the first is injected in-process by a monkeypatched
+raise at that boundary. Each case checks that the resumed crawl equals
+the uninterrupted one on (round, url) order, the seen set with its
+first_round, the items and the export bytes.
 """
 
+import glob
+import json
+import os
 import shutil
+
+import pytest
+from pyspark.sql import DataFrameWriter
 
 from webcrawler_spark.fixtures import WHITELIST
 from webcrawler_spark.plans.crawl import CrawlConfig, run_crawl
 from webcrawler_spark.storage import RoundStore
+
+KILL_ROUND = 2
+
+
+class InjectedKill(RuntimeError):
+    pass
+
+
+def _cfg(**kw):
+    return CrawlConfig(whitelist=WHITELIST, max_depth=2, max_rounds=8,
+                       parsers="combined", **kw)
 
 
 def _collect_state(spark, result):
@@ -26,25 +57,14 @@ def _collect_state(spark, result):
     return order, seen, items
 
 
-def test_kill_after_round_k_resume(spark, fixture_web, tmp_path):
-    paths = fixture_web["paths"]
-    pages_df = spark.read.parquet(paths["pages"])
-    seeds_df = spark.read.parquet(paths["seeds"])
-    cfg = CrawlConfig(whitelist=WHITELIST, max_depth=2, max_rounds=8,
-                      parsers="combined")
+def _export_bytes(d):
+    files = sorted(glob.glob(os.path.join(RoundStore(d).export_path(), "part-*")))
+    assert len(files) == 1, files  # ONE ordered artifact
+    with open(files[0], "rb") as f:
+        return f.read()
 
-    # reference run
-    full_dir = str(tmp_path / "full")
-    full = run_crawl(spark, pages_df, seeds_df, cfg, checkpoint_dir=full_dir)
-    want = _collect_state(spark, full)
-    assert full.rounds >= 3  # needs something to kill
 
-    # run, then "kill" by dropping rounds > k
-    crash_dir = str(tmp_path / "crash")
-    run_crawl(spark, pages_df, seeds_df, cfg, checkpoint_dir=crash_dir)
-    store = RoundStore(crash_dir)
-    k = 1
-    import os
+def _drop_rounds_after(store: RoundStore, k: int) -> None:
     for rnd in store.committed_rounds():
         if rnd > k:
             os.remove(os.path.join(store.manifest_dir, f"round_{rnd}.json"))
@@ -55,29 +75,154 @@ def test_kill_after_round_k_resume(spark, fixture_web, tmp_path):
     assert store.last_committed() == k
     if m.get("done"):
         m["done"] = False
-        import json
         with open(os.path.join(store.manifest_dir, f"round_{k}.json"), "w") as f:
             json.dump(m, f)
 
-    resumed = run_crawl(spark, pages_df, seeds_df, cfg, checkpoint_dir=crash_dir,
-                        resume=True)
-    got = _collect_state(spark, resumed)
-    assert got == want
 
-    # --- ordered final export: produced exactly once, byte-stable ---
-    import glob
+@pytest.fixture(scope="module")
+def reference(spark, fixture_web, tmp_path_factory):
+    """The uninterrupted crawl every kill point must reproduce."""
+    paths = fixture_web["paths"]
+    pages_df = spark.read.parquet(paths["pages"])
+    seeds_df = spark.read.parquet(paths["seeds"])
+    full_dir = str(tmp_path_factory.mktemp("resume_full"))
+    full = run_crawl(spark, pages_df, seeds_df, _cfg(), checkpoint_dir=full_dir)
+    assert full.rounds > KILL_ROUND + 1  # needs something to kill
+    return {
+        "dir": full_dir,
+        "state": _collect_state(spark, full),
+        "export": _export_bytes(full_dir),
+    }
 
-    def export_bytes(d):
-        store_ = RoundStore(d)
-        files = sorted(glob.glob(os.path.join(store_.export_path(), "part-*")))
-        assert len(files) == 1, files  # ONE ordered artifact
-        with open(files[0], "rb") as f:
-            return f.read()
 
-    full_bytes = export_bytes(full_dir)
-    assert export_bytes(crash_dir) == full_bytes
-    # export content = items union ordered by (round, url), with file_path
-    exp = RoundStore(full_dir).read_export(spark)
+def _kill_mid_dataset_writes(mp, spark, crash_dir):
+    """One dataset write of round KILL_ROUND fails; the round's other
+    writes (and its seen insert) run to completion beside it."""
+    target = os.path.join(f"r={KILL_ROUND}", "next_candidates")
+    real = DataFrameWriter.parquet
+
+    def parquet(self, path, *a, **kw):
+        if path.endswith(target):
+            raise InjectedKill(path)
+        return real(self, path, *a, **kw)
+
+    mp.setattr(DataFrameWriter, "parquet", parquet)
+
+    def check(store):
+        assert store.last_committed() == KILL_ROUND - 1
+        landed = store.round_path(KILL_ROUND, "order")
+        assert glob.glob(os.path.join(landed, "part-*")), "no write landed"
+
+    return check
+
+
+def _kill_before_manifest_rename(mp, spark, crash_dir):
+    """Everything of round KILL_ROUND landed, incl. the bucketed seen
+    insert; the manifest's atomic rename is the one step missing."""
+    real = os.replace
+    manifest = os.path.join(crash_dir, "_manifests", f"round_{KILL_ROUND}.json")
+
+    def replace(src, dst, *a, **kw):
+        if os.fspath(dst) == manifest and not os.path.exists(manifest):
+            raise InjectedKill(dst)
+        return real(src, dst, *a, **kw)
+
+    mp.setattr(os, "replace", replace)
+
+    def check(store):
+        assert store.last_committed() == KILL_ROUND - 1
+        orphan_rounds = {
+            r["round"]
+            for r in spark.table(store.seen_table).select("round").distinct().collect()
+        }
+        assert KILL_ROUND in orphan_rounds  # the seen insert had landed
+
+    return check
+
+
+def _kill_mid_compaction(mp, spark, crash_dir):
+    """The first compaction dies after writing the new versioned seen
+    directory, before _store_meta.json points at it."""
+    real = RoundStore._write_meta
+    seen_new_dir = []
+
+    def write_meta(self, meta):
+        v = int(meta.get("seen_location_v", 0))
+        if v > int(self._read_meta().get("seen_location_v", 0)):
+            seen_new_dir.append(os.path.isdir(self._seen_location(v)))
+            raise InjectedKill(self._seen_location(v))
+        return real(self, meta)
+
+    mp.setattr(RoundStore, "_write_meta", write_meta)
+
+    def check(store):
+        assert seen_new_dir == [True]
+        assert int(store._read_meta().get("seen_location_v", 0)) == 0
+
+    return check
+
+
+def _kill_mid_export(mp, spark, crash_dir):
+    """The ordered export is staged; the rename into place never runs."""
+    real = os.replace
+    dest = RoundStore(crash_dir).export_path()
+
+    def replace(src, dst, *a, **kw):
+        if os.fspath(dst) == dest:
+            raise InjectedKill(dst)
+        return real(src, dst, *a, **kw)
+
+    mp.setattr(os, "replace", replace)
+
+    def check(store):
+        assert not store.is_done()
+        assert not os.path.exists(dest)
+        assert os.path.isdir(dest + "._tmp")
+
+    return check
+
+
+KILLS = {
+    "mid_dataset_writes": (_kill_mid_dataset_writes, {}),
+    "seen_appended_before_manifest": (_kill_before_manifest_rename, {}),
+    "mid_compaction": (_kill_mid_compaction,
+                       {"seen_compact_files_per_bucket": 1}),
+    "mid_export": (_kill_mid_export, {}),
+}
+
+
+@pytest.mark.parametrize("kill", ["manifests_dropped", *KILLS])
+def test_kill_after_round_k_resume(spark, fixture_web, reference, tmp_path,
+                                   monkeypatch, kill):
+    paths = fixture_web["paths"]
+    pages_df = spark.read.parquet(paths["pages"])
+    seeds_df = spark.read.parquet(paths["seeds"])
+    crash_dir = str(tmp_path / "crash")
+
+    if kill == "manifests_dropped":
+        cfg = _cfg()
+        run_crawl(spark, pages_df, seeds_df, cfg, checkpoint_dir=crash_dir)
+        _drop_rounds_after(RoundStore(crash_dir), k=1)
+    else:
+        inject, cfg_kw = KILLS[kill]
+        cfg = _cfg(**cfg_kw)
+        with monkeypatch.context() as mp:
+            check = inject(mp, spark, crash_dir)
+            with pytest.raises(InjectedKill):
+                run_crawl(spark, pages_df, seeds_df, cfg,
+                          checkpoint_dir=crash_dir)
+        check(RoundStore(crash_dir))
+
+    resumed = run_crawl(spark, pages_df, seeds_df, cfg,
+                        checkpoint_dir=crash_dir, resume=True)
+    assert _collect_state(spark, resumed) == reference["state"]
+    assert _export_bytes(crash_dir) == reference["export"]
+
+
+def test_export_is_ordered_and_enriched(spark, reference):
+    """Export content = items union ordered by (round, url), with
+    file_path on img rows only."""
+    exp = RoundStore(reference["dir"]).read_export(spark)
     rows = exp.select("round", "url", "kind", "file_path").collect()
     keys = [(r["round"], r["url"]) for r in rows]
     assert keys == sorted(keys)
@@ -105,8 +250,6 @@ def test_resume_legacy_checkpoint_without_priority_column(spark, fixture_web, tm
     the loop backfills priority=0 (every legacy row ranked equal, so
     order is preserved) on candidates/deferred/retry. Simulated by
     rewriting round-k's committed datasets without the column."""
-    from pyspark.sql import functions as F
-
     paths = fixture_web["paths"]
     pages_df = spark.read.parquet(paths["pages"])
     seeds_df = spark.read.parquet(paths["seeds"])
@@ -117,23 +260,11 @@ def test_resume_legacy_checkpoint_without_priority_column(spark, fixture_web, tm
     full = run_crawl(spark, pages_df, seeds_df, cfg, checkpoint_dir=full_dir)
     want = _collect_state(spark, full)
 
-    import json
-    import os
-
     part_dir = str(tmp_path / "part_lp")
     run_crawl(spark, pages_df, seeds_df, cfg, checkpoint_dir=part_dir)
     store = RoundStore(part_dir)
     k = 1
-    for rnd in store.committed_rounds():
-        if rnd > k:
-            os.remove(os.path.join(store.manifest_dir, f"round_{rnd}.json"))
-            shutil.rmtree(os.path.join(store.rounds_dir, f"r={rnd}"),
-                          ignore_errors=True)
-    m = store.manifest(k)
-    if m.get("done"):
-        m["done"] = False
-        with open(os.path.join(store.manifest_dir, f"round_{k}.json"), "w") as f:
-            json.dump(m, f)
+    _drop_rounds_after(store, k)
     # strip the priority column from the datasets resume reads (legacy shape)
     for name in ("next_candidates", "deferred", "retry"):
         p = store.round_path(k, name)
