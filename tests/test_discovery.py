@@ -208,3 +208,37 @@ def test_depth_limit_applies_to_sitemap_chain(spark, tmp_path):
     assert f"http://{HOT_HOST}/qy/prod/v/1-1" in {
         r["url"] for r in result.seen(spark).collect()
     }
+
+
+def test_robots_bodies_from_pages_one_body_per_host(spark):
+    """A host serving robots.txt under both schemes yields ONE body: https
+    wins, then the smallest url. Two bodies for one host would interleave
+    their lines in parse_robots' per-host windows (same line positions),
+    so its rules would depend on task order."""
+    from webcrawler_spark.plans.crawl import robots_bodies_from_pages
+    from webcrawler_spark.sources.robots import parse_robots
+
+    http_body = "User-agent: *\nDisallow: /http-only/\n"
+    https_body = "User-agent: OtherBot\nDisallow: /\n\nUser-agent: *\nAllow: /\n"
+    rows = [
+        (f"http://{HOT_HOST}/robots.txt", http_body),
+        (f"https://{HOT_HOST}/robots.txt", https_body),
+        ("http://solo.example.com/robots.txt", "User-agent: *\nDisallow: /s/\n"),
+    ]
+    pages = spark.createDataFrame(
+        [(u, bytearray(b.encode())) for u, b in rows], "url string, html binary"
+    )
+    bodies = {
+        r["host"]: r["body"] for r in robots_bodies_from_pages(pages).collect()
+    }
+    assert robots_bodies_from_pages(pages).count() == len(bodies) == 2
+    assert bodies[HOT_HOST] == https_body
+
+    def rules(n_partitions):
+        df = robots_bodies_from_pages(pages.repartition(n_partitions))
+        return sorted(
+            (r["host"], [tuple(x) for x in r["rules"]])
+            for r in parse_robots(df).collect()
+        )
+
+    assert rules(1) == rules(8)

@@ -199,7 +199,12 @@ def robots_bodies_from_pages(pages: DataFrame) -> DataFrame:
     byte scans (endswith + a length check against the host window) so the
     scan stays a pushdown-friendly codegen'd projection. Bodies decode as
     UTF-8 with replacement (undecodable bytes become U+FFFD line noise the
-    field parser ignores — never a task failure)."""
+    field parser ignores — never a task failure).
+
+    One body per host: a host serving robots.txt under both schemes keeps
+    the https body, then the smallest url. parse_robots orders each host's
+    lines by their position in the file, so two bodies for one host would
+    interleave in task order."""
     url = F.col("url")
     rest = U.url_rest_canonical(url)  # host[/path...]
     is_robots = url.endswith("/robots.txt") & (
@@ -210,9 +215,12 @@ def robots_bodies_from_pages(pages: DataFrame) -> DataFrame:
     return (
         pages.select("url", "html")
         .filter(is_robots)
-        .select(
-            U.url_host_canonical(url).alias("host"),
-            F.decode(F.col("html"), "UTF-8").alias("body"),
+        .groupBy(U.url_host_canonical(url).alias("host"))
+        .agg(
+            F.min_by(
+                F.decode(F.col("html"), "UTF-8"),
+                F.struct(~url.startswith("https://"), url),
+            ).alias("body")
         )
     )
 
