@@ -43,8 +43,6 @@ def main() -> None:
     ap.add_argument("--salt-buckets", default="auto",
                     help="'auto' (hot-host probe, default), 'none', or an int")
     ap.add_argument("--max-fetch-retries", type=int, default=0)
-    ap.add_argument("--seen-backend", choices=["bucketed", "parquet"],
-                    default="bucketed")
     ap.add_argument("--seen-buckets", type=int, default=None,
                     help="bucket count for the seen table (pinned at store "
                          "creation; default = defaultParallelism — pick "
@@ -81,7 +79,6 @@ def main() -> None:
         max_rounds=args.max_rounds,
         politeness_salt_buckets=salt,
         max_fetch_retries=args.max_fetch_retries,
-        seen_backend=args.seen_backend,
         seen_buckets=args.seen_buckets,
         robots_from_pages=args.robots_from_pages,
         round_seconds=args.round_seconds,

@@ -11,8 +11,7 @@ admission hot path exactly as a crawl round does (plans/crawl.py):
 
 Reports frontier-URLs-processed/sec = N / wall. The same function runs at
 ``local[8]`` and ``local[32]`` for the N→4N-cores scaling-efficiency
-evidence (tools/scaling_bench.py), and under bench.py for the per-round
-BENCH_r{N}.json numbers.
+evidence (tools/scaling_bench.py).
 
 Runnable standalone (spark-submit --py-files compatible):
     spark-submit --py-files webcrawler_spark.zip jobs/frontier_bench.py [N]
@@ -26,7 +25,6 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from webcrawler_spark.operators import admission
-from webcrawler_spark.operators.politeness import assign_fetch_slots
 
 WHITELIST = ["example.com", "example.com.cn", "example.net"]
 
@@ -78,7 +76,6 @@ def synth_seen(spark: SparkSession, n: int, partitions: int) -> DataFrame:
 def run_frontier_workload(
     spark: SparkSession, n: int = 1_000_000, partitions: int | None = None,
     max_depth: int = 4, budget: int = 50, workdir: str | None = None,
-    dedup_winner: str = "packed_string",
 ) -> dict:
     """One full admission+politeness round over N synthetic frontier URLs.
 
@@ -125,7 +122,6 @@ def run_frontier_workload(
         scratch: list = []
         admitted = admission.admit(
             cand, seen, WHITELIST, max_depth=max_depth, scratch=scratch,
-            dedup_winner=dedup_winner,
         )
         r = ranked(admitted).join(
             F.broadcast(budgets.select(F.col("host").alias("_b_host"),

@@ -1,12 +1,6 @@
-"""In-round dedup winner encodings: packed_string (default, reference-
-faithful lexicographic parent tiebreak, map-side-combined SortAggregate)
-vs numeric (HashAggregate experiment, round-3 verdict item 2). Both must
-admit the SAME URL set with deterministic winners; the numeric plan's
-min-aggregate must be hash-based."""
-
-import re
-
-from pyspark.sql import functions as F
+"""In-round dedup winner: one admitted row per URL, with the reference-
+faithful winner min (depth, parent_url, link_pos) — lexicographic parent
+tiebreak, NULL parent first — whatever the partitioning."""
 
 from webcrawler_spark.operators.admission import dedup_in_round
 
@@ -16,8 +10,8 @@ def _cand(spark):
         ("http://a/x", "k1", "a", "/x", 2, "http://p1", 5),
         ("http://a/x", "k1", "a", "/x", 1, "http://p9", 9),  # depth wins
         ("http://a/x", "k1", "a", "/x", 1, "http://p2", 3),  # parent tiebreak
-        ("http://a/y", "k2", "a", "/y", 0, None, 7),         # NULL parent
-        ("http://a/y", "k2", "a", "/y", 0, "http://p", 1),   # NULL wins
+        ("http://a/y", "k2", "a", "/y", 0, None, 7),         # NULL wins
+        ("http://a/y", "k2", "a", "/y", 0, "http://p", 1),
         ("http://a/z", "k3", "a", "/z", 3, "http://q", 2),
         ("http://a/z", "k3", "a", "/z", 3, "http://q", 2),   # identical dup
     ]
@@ -25,53 +19,22 @@ def _cand(spark):
         rows,
         "url string, url_sha1 string, host string, path string, "
         "depth long, parent_url string, link_pos long",
-    ).repartition(8)
+    )
 
 
 def test_same_urls_deterministic_winners(spark):
-    df = _cand(spark)
-    by_key = {}
-    for w in ("packed_string", "numeric"):
-        rows = dedup_in_round(df, winner=w).collect()
-        assert len(rows) == 3
-        by_key[w] = {r["url_sha1"]: r for r in rows}
-    assert set(by_key["packed_string"]) == set(by_key["numeric"]) == {
-        "k1", "k2", "k3"
+    def winners(n_partitions):
+        out = dedup_in_round(_cand(spark).repartition(n_partitions)).collect()
+        assert len(out) == 3
+        return {
+            r["url_sha1"]: (r["url"], r["depth"], r["parent_url"], r["link_pos"])
+            for r in out
+        }
+
+    got = winners(8)
+    assert got == {
+        "k1": ("http://a/x", 1, "http://p2", 3),
+        "k2": ("http://a/y", 0, None, 7),
+        "k3": ("http://a/z", 3, "http://q", 2),
     }
-    # shared invariants: lowest depth always wins; NULL parent sorts first
-    for w in by_key:
-        assert by_key[w]["k1"]["depth"] == 1
-        assert by_key[w]["k2"]["parent_url"] is None
-        assert by_key[w]["k3"]["parent_url"] == "http://q"
-    # the default keeps the reference-faithful lexicographic parent
-    assert by_key["packed_string"]["k1"]["parent_url"] == "http://p2"
-    # numeric is deterministic too (hash order), repeat-run stable
-    again = {r["url_sha1"]: r["parent_url"]
-             for r in dedup_in_round(df, winner="numeric").collect()}
-    assert again == {k: r["parent_url"] for k, r in by_key["numeric"].items()}
-
-
-def test_numeric_plan_uses_hash_aggregate(spark):
-    out = dedup_in_round(_cand(spark), winner="numeric")
-    plan = out._jdf.queryExecution().executedPlan().toString()
-    # the min(_pk) shuffle aggregate must be hash-based; the only sort
-    # aggregate allowed is the exchange-free post-join tie collapse
-    agg_lines = [ln for ln in plan.splitlines() if "Aggregate" in ln]
-    assert any("HashAggregate" in ln and "min" in ln for ln in agg_lines), plan
-    hash_spans = len(re.findall(r"HashAggregate", plan))
-    assert hash_spans >= 2, plan  # partial + final of the min agg
-
-
-def test_admit_accepts_winner_flag(spark):
-    from webcrawler_spark.operators import admission
-
-    raw = spark.createDataFrame(
-        [("http://www.example.com/a", 0, "", 0),
-         ("http://www.example.com/a", 1, "http://www.example.com/", 0),
-         ("http://www.example.com/b", 0, "", 1)],
-        "url string, depth long, parent_url string, link_pos long",
-    )
-    seen = spark.createDataFrame([], "url_sha1 string")
-    a = admission.admit(raw, seen, ["example.com"], 3)
-    b = admission.admit(raw, seen, ["example.com"], 3, dedup_winner="numeric")
-    assert {r["url"] for r in a.collect()} == {r["url"] for r in b.collect()}
+    assert winners(1) == got

@@ -1,16 +1,15 @@
-"""Seen-backend pinning + legacy backfill (ADVICE r3, high).
+"""Resuming a store whose seen keys are not in the bucketed seen table
+fails loudly.
 
-A checkpoint created under seen_backend='parquet' (or before the bucketed
-backend existed) holds its seen set only in per-round seen_delta parquet.
-Resuming it under the default 'bucketed' backend used to read a freshly
-created EMPTY table — silently re-admitting every previously crawled URL.
-Now: explicit backend mismatch fails loudly; a legacy store (no pin) is
-backfilled from the committed seen_delta parquet before the first read.
+A checkpoint written by the retired parquet seen backend, or before the
+bucketed table existed, holds its seen set only in per-round seen_delta
+parquet. Resuming it would read an EMPTY bucketed table and silently
+re-admit every URL already crawled, so resume raises instead.
 """
 
 import json
 import os
-import shutil
+import re
 
 import pytest
 
@@ -19,72 +18,46 @@ from webcrawler_spark.plans.crawl import CrawlConfig, run_crawl
 from webcrawler_spark.storage import RoundStore
 
 
-def _state(spark, result):
-    order = sorted((r["round"], r["url"]) for r in result.order(spark).collect())
-    seen = sorted(r["url_sha1"] for r in result.seen(spark).collect())
-    return order, seen
+def _stopped_crawl(spark, fixture_web, d):
+    """A 2-round crawl whose last round is committed but not done."""
+    paths = fixture_web["paths"]
+    pages = spark.read.parquet(paths["pages"])
+    seeds = spark.read.parquet(paths["seeds"])
+    cfg = CrawlConfig(whitelist=WHITELIST, max_depth=1, max_rounds=1,
+                      parsers="bm1365")
+    run_crawl(spark, pages, seeds, cfg, checkpoint_dir=d)
+    store = RoundStore(d)
+    last = store.last_committed()
+    m = store.manifest(last)
+    m["done"] = False
+    with open(os.path.join(store.manifest_dir, f"round_{last}.json"), "w") as f:
+        json.dump(m, f)
+    cfg.max_rounds = 4
 
+    def resume():
+        return run_crawl(spark, pages, seeds, cfg, checkpoint_dir=d, resume=True)
 
-def _kill_after(store: RoundStore, k: int) -> None:
-    for rnd in store.committed_rounds():
-        if rnd > k:
-            os.remove(os.path.join(store.manifest_dir, f"round_{rnd}.json"))
-            shutil.rmtree(
-                os.path.join(store.rounds_dir, f"r={rnd}"), ignore_errors=True
-            )
-    m = store.manifest(k)
-    if m.get("done"):
-        m["done"] = False
-        with open(os.path.join(store.manifest_dir, f"round_{k}.json"), "w") as f:
-            json.dump(m, f)
+    return store, resume
 
 
 def test_backend_mismatch_fails_loudly(spark, fixture_web, tmp_path):
-    paths = fixture_web["paths"]
-    pages = spark.read.parquet(paths["pages"])
-    seeds = spark.read.parquet(paths["seeds"])
+    """Store metadata of the parquet backend: pinned seen_backend, no
+    bucket count."""
     d = str(tmp_path / "pq")
-    cfg = CrawlConfig(whitelist=WHITELIST, max_depth=1, max_rounds=3,
-                      parsers="bm1365", seen_backend="parquet")
-    run_crawl(spark, pages, seeds, cfg, checkpoint_dir=d)
-    cfg_b = CrawlConfig(whitelist=WHITELIST, max_depth=1, max_rounds=3,
-                        parsers="bm1365", seen_backend="bucketed")
-    with pytest.raises(ValueError, match="seen_backend"):
-        run_crawl(spark, pages, seeds, cfg_b, checkpoint_dir=d, resume=True)
+    store, resume = _stopped_crawl(spark, fixture_web, d)
+    with open(store._meta_path(), "w") as f:
+        json.dump({"seen_backend": "parquet"}, f)
+    with pytest.raises(ValueError, match=re.escape(f"checkpoint at {d}")):
+        resume()
+    with open(store._meta_path()) as f:
+        assert json.load(f) == {"seen_backend": "parquet"}  # left untouched
 
 
-def test_legacy_store_backfills_seen_table(spark, fixture_web, tmp_path):
-    """Simulate a pre-pin checkpoint: parquet backend + meta file deleted.
-    Resuming under 'bucketed' must reproduce the uninterrupted run exactly
-    (no URL re-admitted, identical order/seen)."""
-    paths = fixture_web["paths"]
-    pages = spark.read.parquet(paths["pages"])
-    seeds = spark.read.parquet(paths["seeds"])
-    cfg_legacy = CrawlConfig(whitelist=WHITELIST, max_depth=2, max_rounds=8,
-                             parsers="combined", seen_backend="parquet")
-    cfg_new = CrawlConfig(whitelist=WHITELIST, max_depth=2, max_rounds=8,
-                          parsers="combined", seen_backend="bucketed")
-
-    want_dir = str(tmp_path / "want")
-    want = _state(
-        spark,
-        run_crawl(spark, pages, seeds, cfg_new, checkpoint_dir=want_dir),
-    )
-
+def test_pre_bucketed_store_fails_loudly(spark, fixture_web, tmp_path):
+    """A store from before the bucketed table: no _store_meta.json."""
     d = str(tmp_path / "legacy")
-    run_crawl(spark, pages, seeds, cfg_legacy, checkpoint_dir=d)
-    store = RoundStore(d)
-    _kill_after(store, k=1)
-    os.remove(store._meta_path())  # legacy stores have no _store_meta.json
-
-    resumed = run_crawl(spark, pages, seeds, cfg_new, checkpoint_dir=d,
-                        resume=True)
-    assert _state(spark, resumed) == want
-    # the table now holds every committed round's keys (incl. backfilled)
-    n_table = (
-        spark.table(store.seen_table)
-        .select("url_sha1").distinct().count()
-    )
-    assert n_table == len(want[1])
-    # and the backfill is idempotent: nothing missing on a second resume
-    assert store.backfill_seen_bucketed(spark, upto=store.last_committed()) == []
+    store, resume = _stopped_crawl(spark, fixture_web, d)
+    os.remove(store._meta_path())
+    with pytest.raises(ValueError, match="no bucketed seen table"):
+        resume()
+    assert not os.path.exists(store._meta_path())

@@ -5,8 +5,6 @@ priorities thread into the frontier `priority` column, and `Crawl-delay`
 derives the default politeness budget. Engine ≡ single-threaded oracle
 on order/seen/metrics throughout."""
 
-from pyspark.sql import functions as F
-
 from oracle import CrawlConfig as OracleConfig, crawl as oracle_crawl
 from webcrawler_spark.fixtures import HOT_HOST, WHITELIST
 from webcrawler_spark.plans.crawl import (
@@ -242,3 +240,53 @@ def test_robots_bodies_from_pages_one_body_per_host(spark):
         )
 
     assert rules(1) == rules(8)
+
+
+def test_resume_adds_sitemap_pointers(spark, tmp_path):
+    """A crawl started WITHOUT robots_bodies and resumed WITH them must
+    enqueue the Sitemap: pointers on resume too — they were never admitted,
+    so the seen anti-join keeps them (it drops only pointers a crawl that
+    started with robots_bodies already admitted)."""
+    import json
+    import os
+
+    from webcrawler_spark.storage import RoundStore
+
+    pages = _pages()
+    pages_df = spark.createDataFrame(
+        [(p["url"], bytearray(p["html"])) for p in pages], "url string, html binary"
+    )
+    leaf = f"http://{HOT_HOST}/news/a"
+    seeds_df = spark.createDataFrame([(leaf, 0)], "url string, order long")
+    d = str(tmp_path / "ckpt")
+
+    first = run_crawl(
+        spark, pages_df, seeds_df,
+        CrawlConfig(whitelist=WHITELIST, max_depth=4, max_rounds=0,
+                    parsers="generic"),
+        checkpoint_dir=d,
+    )
+    assert first.rounds == 1
+    store = RoundStore(d)
+    m = store.manifest(0)  # stopped after round 0, not finished
+    m["done"] = False
+    with open(os.path.join(store.manifest_dir, "round_0.json"), "w") as f:
+        json.dump(m, f)
+
+    robots_bodies = spark.createDataFrame(
+        [(HOT_HOST, ROBOTS_BODY)], "host string, body string"
+    )
+    resumed = run_crawl(
+        spark, pages_df, seeds_df,
+        CrawlConfig(whitelist=WHITELIST, max_depth=4, max_rounds=12,
+                    parsers="generic"),
+        checkpoint_dir=d, robots_bodies=robots_bodies, resume=True,
+    )
+    first_round = {
+        r["url"]: r["first_round"] for r in resumed.seen(spark).collect()
+    }
+    assert first_round[leaf] == 0
+    assert first_round[IDX_URL] == 1  # the pointer, admitted on resume
+    assert SM1_URL in first_round and SM2_URL in first_round
+    for u in LEAVES:
+        assert (u in first_round) == ("/private/" not in u)

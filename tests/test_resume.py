@@ -243,39 +243,3 @@ def test_resume_on_done_store_is_noop(spark, fixture_web, tmp_path):
     first = run_crawl(spark, pages_df, seeds_df, cfg, checkpoint_dir=d)
     again = run_crawl(spark, pages_df, seeds_df, cfg, checkpoint_dir=d, resume=True)
     assert _collect_state(spark, first) == _collect_state(spark, again)
-
-
-def test_resume_legacy_checkpoint_without_priority_column(spark, fixture_web, tmp_path):
-    """A checkpoint written before the r5 `priority` column must resume:
-    the loop backfills priority=0 (every legacy row ranked equal, so
-    order is preserved) on candidates/deferred/retry. Simulated by
-    rewriting round-k's committed datasets without the column."""
-    paths = fixture_web["paths"]
-    pages_df = spark.read.parquet(paths["pages"])
-    seeds_df = spark.read.parquet(paths["seeds"])
-    cfg = CrawlConfig(whitelist=WHITELIST, max_depth=2, max_rounds=8,
-                      parsers="combined")
-
-    full_dir = str(tmp_path / "full_lp")
-    full = run_crawl(spark, pages_df, seeds_df, cfg, checkpoint_dir=full_dir)
-    want = _collect_state(spark, full)
-
-    part_dir = str(tmp_path / "part_lp")
-    run_crawl(spark, pages_df, seeds_df, cfg, checkpoint_dir=part_dir)
-    store = RoundStore(part_dir)
-    k = 1
-    _drop_rounds_after(store, k)
-    # strip the priority column from the datasets resume reads (legacy shape)
-    for name in ("next_candidates", "deferred", "retry"):
-        p = store.round_path(k, name)
-        if not os.path.exists(p):
-            continue
-        df = spark.read.parquet(p)
-        assert "priority" in df.columns
-        df = df.drop("priority").localCheckpoint()
-        shutil.rmtree(p)
-        df.write.parquet(p)
-
-    resumed = run_crawl(spark, pages_df, seeds_df, cfg,
-                        checkpoint_dir=part_dir, resume=True)
-    assert _collect_state(spark, resumed) == want

@@ -140,33 +140,43 @@ def test_compaction_bounds_files_preserves_plan_and_data(spark, store):
     assert s2.seen_files_per_bucket() <= 1
 
 
-def test_crawl_with_aggressive_compaction_matches(spark, fixture_web, tmp_path):
-    """Compacting after (almost) every round must not change crawl
-    semantics: identical order + seen set vs the parquet backend, and the
-    store ends compacted."""
+def _crawl_vs_oracle(spark, fixture_web, ckpt, compact):
+    """One crawl of the fixture web on the bucketed seen table, and the
+    single-threaded oracle's (round, url) order and (url_sha1 -> url,
+    first_round) seen set for the same config."""
+    from oracle import CrawlConfig as OracleConfig, crawl as oracle_crawl
     from webcrawler_spark.fixtures import WHITELIST
     from webcrawler_spark.plans.crawl import CrawlConfig, run_crawl
 
     paths = fixture_web["paths"]
     pages = spark.read.parquet(paths["pages"])
     seeds = spark.read.parquet(paths["seeds"])
+    cfg = CrawlConfig(
+        whitelist=WHITELIST, max_depth=2, max_rounds=5,
+        seen_compact_files_per_bucket=compact,
+    )
+    res = run_crawl(spark, pages, seeds, cfg, checkpoint_dir=ckpt)
+    got_order = sorted((r["round"], r["url"]) for r in res.order(spark).collect())
+    got_seen = {
+        r["url_sha1"]: (r["url"], r["first_round"])
+        for r in res.seen(spark).collect()
+    }
+    golden = oracle_crawl(
+        fixture_web["pages"], fixture_web["seeds"],
+        OracleConfig(whitelist=WHITELIST, max_depth=2, max_rounds=5,
+                     parsers="combined"),
+    )
+    want_order = sorted((rnd, url) for rnd, _host, url, _sha in golden.order)
+    assert got_order == want_order
+    assert got_seen == golden.seen
+    return res
 
-    def run(backend: str, compact):
-        cfg = CrawlConfig(
-            whitelist=WHITELIST, max_depth=2, max_rounds=5,
-            seen_backend=backend, seen_compact_files_per_bucket=compact,
-        )
-        res = run_crawl(
-            spark, pages, seeds, cfg,
-            checkpoint_dir=str(tmp_path / f"ckpt_{backend}_{compact}"),
-        )
-        order = sorted((r["round"], r["url"]) for r in res.order(spark).collect())
-        seen = sorted(r["url_sha1"] for r in res.seen(spark).collect())
-        return order, seen, res
 
-    o1, s1, res = run("bucketed", 1)
-    o2, s2, _ = run("parquet", None)
-    assert (o1, s1) == (o2, s2)
+def test_crawl_with_aggressive_compaction_matches(spark, fixture_web, tmp_path):
+    """Compacting after (almost) every round must not change crawl
+    semantics: identical order + seen set vs the oracle, and the store
+    ends compacted."""
+    res = _crawl_vs_oracle(spark, fixture_web, str(tmp_path / "ckpt"), 1)
     assert res.store.seen_files_per_bucket() <= 2  # compacted near the end
 
 
@@ -203,30 +213,10 @@ def test_seen_table_provider_seam(spark, tmp_path, provider):
         assert json.load(f)["seen_provider"] == provider
 
 
-def test_crawl_bucketed_matches_parquet_backend(spark, fixture_web, tmp_path):
-    """Same crawl, both seen backends: identical order and seen set."""
-    from webcrawler_spark.fixtures import WHITELIST
-    from webcrawler_spark.plans.crawl import CrawlConfig, run_crawl
-
-    paths = fixture_web["paths"]
-    pages = spark.read.parquet(paths["pages"])
-    seeds = spark.read.parquet(paths["seeds"])
-
-    def run(backend: str):
-        cfg = CrawlConfig(
-            whitelist=WHITELIST, max_depth=2, max_rounds=5, seen_backend=backend
-        )
-        res = run_crawl(
-            spark, pages, seeds, cfg,
-            checkpoint_dir=str(tmp_path / f"ckpt_{backend}"),
-        )
-        order = sorted(
-            (r["round"], r["url"]) for r in res.order(spark).collect()
-        )
-        seen = sorted(r["url_sha1"] for r in res.seen(spark).collect())
-        return order, seen
-
-    assert run("bucketed") == run("parquet")
+def test_crawl_bucketed_matches_oracle(spark, fixture_web, tmp_path):
+    """Default crawl on the bucketed seen table: identical order and seen
+    set vs the oracle."""
+    _crawl_vs_oracle(spark, fixture_web, str(tmp_path / "ckpt"), None)
 
 
 def test_ensure_seen_table_repairs_stale_catalog_location(spark, store):
@@ -239,7 +229,6 @@ def test_ensure_seen_table_repairs_stale_catalog_location(spark, store):
     pointer."""
     import shutil
 
-    store.pin_backend("bucketed")
     store.ensure_seen_table(spark, 4)
     store.append_seen_bucketed(_keys(spark, 0, 20), 0)
     assert store.read_seen_bucketed(spark, upto=0).count() == 20

@@ -15,8 +15,8 @@ Plan-shape notes for 100 TB scale:
 * in-round duplicate resolution is an aggregation (min struct), never
   "first row wins" (task order is nondeterministic);
 * the seen anti-join is a shuffle on url_sha1; callers can pre-filter with
-  the sharded broadcast bloom (operators/bloom.py) so only probable-new
-  URLs reach the shuffle.
+  the sharded bloom (operators/bloom.BloomTable.split) so only probably-
+  seen URLs reach the exact join.
 """
 
 from __future__ import annotations
@@ -26,8 +26,6 @@ from pyspark.sql import functions as F
 
 from ..functions import urls as U
 from ..functions.urls import canonicalize_udf
-
-CANDIDATE_COLS = ["url", "url_sha1", "host", "path", "depth", "parent_url", "link_pos"]
 
 # Conservative test for "definitely already RFC-3986-canonical":
 # lowercase http(s) scheme, lowercase port/userinfo-free host, absolute
@@ -286,26 +284,16 @@ def admission_filters(
     return out
 
 
-def dedup_in_round(cand: DataFrame, winner: str = "packed_string") -> DataFrame:
+def dedup_in_round(cand: DataFrame) -> DataFrame:
     """Two candidates for one URL in one round -> exactly one admitted
     (the test-and-set race at scheduler.go:551-574), with a deterministic
     winner: min (depth, parent_url, link_pos). Aggregation, not
     dropDuplicates — task order must not pick the winner.
 
-    winner="numeric" switches to the HashAggregate variant (see
-    _dedup_in_round_numeric): same admitted URL set, winner metadata
-    ordered by (depth, xxhash64(parent), link_pos) instead of the
-    lexicographic parent — deterministic, but a different (and 2^-64
-    collision-tolerant) tie-break. Kept off the default path so the
-    contract queries pin the reference-faithful ordering.
-
     A `priority` column, when present, is NOT part of the winner ordering:
     the admitted row carries the MAX priority over all duplicates (a URL
     discovered both by a 0.9-priority sitemap entry and a plain link keeps
-    the sitemap's urgency) — one more column in the same aggregate, order-
-    free and identical across both winner variants."""
-    if winner == "numeric":
-        return _dedup_in_round_numeric(cand)
+    the sitemap's urgency) — one more column in the same aggregate."""
     has_priority = "priority" in cand.columns
     # Winner ordering packed into ONE string:
     #   packed = lpad(depth) \x00 parent_url \x00 lpad(link_pos)
@@ -358,77 +346,6 @@ def dedup_in_round(cand: DataFrame, winner: str = "packed_string") -> DataFrame:
     )
 
 
-def _dedup_in_round_numeric(cand: DataFrame) -> DataFrame:
-    """HashAggregate variant of the in-round dedup (the experiment the
-    packed-string docstring sketches): the winner ordinal is ONE
-    decimal(38,0) — depth*2^94 + parent_ordinal*2^30 + link_pos, where
-    parent_ordinal is 0 for NULL (sorts first, like the packed string's
-    empty field) else xxhash64(parent)+2^63+1 (unsigned-shifted, never 0).
-    Fixed-width decimal buffers are UnsafeRow-mutable, so min() executes
-    as HashAggregate with map-side partial aggregation — no per-group sort
-    and a 16-byte shuffle value instead of the packed parent string.
-
-    The winner row's full columns come from a join back on
-    (url_sha1, packed == min): the aggregate output is already hash-
-    partitioned on url_sha1, so only the candidate side exchanges for the
-    join — the same single candidate shuffle the string variant pays,
-    minus its map-side combine. Duplicate candidate rows that tie exactly
-    (fully identical rows, or distinct parents colliding in xxhash64 —
-    probability 2^-64 per group) are collapsed by a url_sha1-partitioned
-    dropDuplicates that reuses the join's partitioning (no extra
-    exchange).
-
-    Bounds: depth < 10^7 and link_pos < 2^30 — ENFORCED, not assumed.
-    With ANSI off, an overflowing decimal(7,0)/(10,0) cast yields NULL,
-    NULL `_pk` rows lose every min() and `_pk == _w` comparison, and the
-    URL would vanish SILENTLY; the raise_error branch (folded into the
-    packed expression so column pruning cannot drop it) turns that into a
-    loud task failure instead.
-    """
-    from decimal import Decimal
-
-    two94 = F.lit(Decimal(2 ** 94))
-    two63p1 = F.lit(Decimal(2 ** 63 + 1))
-    two30 = F.lit(Decimal(2 ** 30))
-    parent_ord = F.when(
-        F.col("parent_url").isNull(), F.lit(Decimal(0))
-    ).otherwise(
-        F.xxhash64(F.col("parent_url")).cast("decimal(20,0)") + two63p1
-    )
-    in_bounds = (F.col("depth") < F.lit(10 ** 7)) & (
-        F.col("link_pos") < F.lit(2 ** 30)
-    )
-    guard = F.when(in_bounds, F.lit(Decimal(0))).otherwise(
-        F.raise_error(
-            F.concat(
-                F.lit("dedup_in_round(winner='numeric') bounds exceeded: "
-                      "depth/link_pos out of range for url "),
-                F.col("url"),
-            )
-        ).cast("decimal(38,0)")
-    )
-    packed = (
-        F.col("depth").cast("decimal(7,0)") * two94
-        + parent_ord * two30
-        + F.col("link_pos").cast("decimal(10,0)")
-        + guard
-    ).cast("decimal(38,0)")
-    has_priority = "priority" in cand.columns
-    tagged = cand.withColumn("_pk", packed)
-    w_aggs = [F.min("_pk").alias("_w")]
-    if has_priority:
-        w_aggs.append(F.max("priority").alias("_prio"))
-    w = tagged.groupBy("url_sha1").agg(*w_aggs)
-    return (
-        tagged.join(w, on="url_sha1")
-        .filter(F.col("_pk") == F.col("_w"))
-        .dropDuplicates(["url_sha1"])
-        .select("url_sha1", "url", "host", "path", "depth", "parent_url",
-                "link_pos",
-                *([F.col("_prio").alias("priority")] if has_priority else []))
-    )
-
-
 def cap_per_host(
     cand: DataFrame, max_per_host: int,
     order_cols: tuple[str, ...] = ("depth", "link_pos", "url_sha1"),
@@ -470,7 +387,6 @@ def admit(
     robots: DataFrame | None = None,
     bloom_prefilter=None,
     scratch: list | None = None,
-    dedup_winner: str = "packed_string",
 ) -> DataFrame:
     """Full admission: returns the admitted frontier rows for this round.
 
@@ -490,7 +406,7 @@ def admit(
         cand = cand.persist(StorageLevel.MEMORY_AND_DISK)
         scratch.append(cand)
     cand = admission_filters(cand, whitelist, max_depth, robots=robots)
-    cand = dedup_in_round(cand, winner=dedup_winner)
+    cand = dedup_in_round(cand)
     if bloom_prefilter is not None:
         maybe_seen, definitely_new = bloom_prefilter(cand)
         return anti_join_seen(maybe_seen, seen).unionByName(definitely_new)

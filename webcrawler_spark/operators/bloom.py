@@ -1,4 +1,4 @@
-"""Sharded broadcast bloom filter over the URL-seen set (NEW per north_rule).
+"""Sharded bloom filter over the URL-seen set (NEW per north_rule).
 
 The reference's seen set is an O(1) in-process concurrent map
 (cmap/cmap.go); at 10^10 URLs the Spark equivalent — an exact anti-join
@@ -13,8 +13,9 @@ Design (scales to 10^10 keys):
 
 * the key space is sharded by the first hex nibbles of url_sha1 into
   2^shard_bits independent filters, so each shard's bit array stays small
-  enough to broadcast and filters can be built/updated per partition of a
-  seen table bucketed the same way;
+  enough for one task to hold (BloomTable.split ships each probe task one
+  shard) and filters can be built/updated per partition of a seen table
+  bucketed the same way;
 * per-partition build: mapInArrow computes a partial bitmap per input
   partition (these are the "per-partition delta filters" — each crawl round
   only the seen-DELTA's partials are built and OR-ed into the persisted
@@ -32,7 +33,7 @@ from typing import Iterator
 import numpy as np
 import pandas as pd
 import pyarrow as pa
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
@@ -396,35 +397,3 @@ class BloomTable:
         maybe = tagged.filter(F.col("_maybe_seen")).drop("_maybe_seen")
         new = tagged.filter(~F.col("_maybe_seen")).drop("_maybe_seen")
         return maybe, new
-
-
-def bloom_split(spark: SparkSession, bloom: ShardedBloom):
-    """Returns a callable df -> (maybe_seen, definitely_new) using a
-    broadcast of the bloom's shard bitmaps and an Arrow-vectorized probe.
-
-    SMALL-FILTER path only (total bitmap bytes must fit a broadcast
-    comfortably); the crawl uses BloomTable.split, which never ships more
-    than one shard to a task."""
-    bc = spark.sparkContext.broadcast(
-        {"shard_bits": bloom.shard_bits, "m": bloom.m, "k": bloom.k,
-         "shards": {sid: bm.tobytes() for sid, bm in bloom.shards.items()}}
-    )
-
-    from pyspark.sql.functions import pandas_udf
-
-    @pandas_udf("boolean")
-    def might_contain_udf(sha1_hex: pd.Series) -> pd.Series:
-        st = bc.value
-        bl = ShardedBloom(
-            st["shard_bits"], st["m"], st["k"],
-            {sid: np.frombuffer(b, dtype=np.uint8) for sid, b in st["shards"].items()},
-        )
-        return pd.Series(bl.might_contain(sha1_hex))
-
-    def split(df: DataFrame) -> tuple[DataFrame, DataFrame]:
-        tagged = df.withColumn("_maybe_seen", might_contain_udf(F.col("url_sha1")))
-        maybe = tagged.filter(F.col("_maybe_seen")).drop("_maybe_seen")
-        new = tagged.filter(~F.col("_maybe_seen")).drop("_maybe_seen")
-        return maybe, new
-
-    return split

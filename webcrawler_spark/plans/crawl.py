@@ -53,24 +53,18 @@ CANDIDATE_SCHEMA = T.StructType(
     ]
 )
 
-RAW_CANDIDATE_SCHEMA = T.StructType(
-    [
-        T.StructField("url", T.StringType()),
-        T.StructField("depth", T.LongType()),
-        T.StructField("parent_url", T.StringType()),
-        T.StructField("link_pos", T.LongType()),
-        T.StructField("priority", T.LongType()),
-    ]
-)
-
 # frontier priority units (SURVEY §1 `priority long`): plain links rank 0,
 # sitemap-discovered URLs carry their <priority> x PRIORITY_SCALE (0-100),
 # sitemap FETCHES (robots pointers + index children) rank above everything —
 # discovering a 50k-URL sitemap beats fetching any single page
 SITEMAP_PRIORITY = 2 * 100  # 2 x sitemap.PRIORITY_SCALE (> any <priority>)
 # link_pos for sitemap-discovered candidates: a distinct space above any
-# in-page link position (bounded < 2^30 for the numeric dedup variant)
+# in-page link position
 SITEMAP_LINK_POS = 1 << 29
+
+# auto-salt trigger: the previous round's queue had one host above this
+# share of its rows (and above CrawlConfig.hot_host_min_rows)
+HOT_HOST_SHARE = 0.05
 
 # queue rows = candidate columns + fetch-attempt counter (retry support)
 QUEUE_SCHEMA = T.StructType(
@@ -107,21 +101,16 @@ class CrawlConfig:
     politeness_salt_buckets: int | str | None = "auto"  # int = fixed salt,
     # None = plain per-host window, "auto" = salt with defaultParallelism
     # buckets whenever the PREVIOUS round's committed queue (order ∪
-    # deferred) had a host above hot_host_share of the rows AND above
+    # deferred) had a host above HOT_HOST_SHARE of the rows AND above
     # hot_host_min_rows — detection reads only the committed host column,
     # so the probe never taxes the hot path, and a hot host cannot pin its
     # whole queue to one task. The absolute floor matters: salting costs 3
     # extra plan branches, a net LOSS when the single-host window task is
     # already small (measured 2x slower on a 2k-page fixture crawl).
-    hot_host_share: float = 0.05
     hot_host_min_rows: int = 100_000
-    seen_backend: str = "bucketed"       # "bucketed": the anti-join reads a
-    # CLUSTERED BY (url_sha1) datasource table whose HashPartitioning
-    # reaches the join — no full-seen exchange per round (the Iceberg
-    # bucket-transform layout on plain parquet). "parquet": per-round delta
-    # union (re-shuffles the seen side every round; small crawls only).
-    seen_buckets: int | None = None      # bucket count, pinned at store
-    # creation (None = defaultParallelism); pick ~fleet-cores at 10^10
+    seen_buckets: int | None = None      # bucket count of the seen table
+    # (RoundStore.ensure_seen_table), pinned at store creation
+    # (None = defaultParallelism); pick ~fleet-cores at 10^10
     seen_compact_files_per_bucket: int | None = 16  # compact the bucketed
     # seen table (one-file-per-bucket rewrite, committed rounds only) when
     # the per-round inserts have stacked more than this many files per
@@ -142,11 +131,6 @@ class CrawlConfig:
     # with robots_bodies, hosts declaring `Crawl-delay: d` default to
     # budget_per_round = max(1, floor(round_seconds / d)) unless the caller's
     # explicit budgets table already names the host (explicit wins)
-    seen_partitions: int | None = None   # repartition seen deltas by url_sha1
-    parse_partitions: int | str | None = "auto"  # widen the parse stage:
-    # AQE coalesces the fetch-join output by BYTES, but HTML parsing is
-    # per-ROW cpu — small pages would leave most cores idle. "auto" =
-    # defaultParallelism, int = exact, None = trust AQE (large-blob case)
 
 
 @dataclass
@@ -298,16 +282,16 @@ def run_crawl(
     discovery chain, closed inside the round DAG."""
     store = RoundStore(checkpoint_dir)
     result = CrawlResult(store=store)
-    bucketed = cfg.seen_backend == "bucketed"
-    # backend is pinned per store: resuming a parquet-backend checkpoint
-    # under 'bucketed' (or vice versa) fails loudly instead of silently
-    # reading an empty seen table; legacy stores without a pin are safe
-    # because the bucketed resume path backfills below
-    store.pin_backend(cfg.seen_backend)
-    if bucketed:
-        store.ensure_seen_table(
-            spark, cfg.seen_buckets or spark.sparkContext.defaultParallelism
-        )
+    last = store.last_committed() if resume else None
+    if last is not None and store.is_done():
+        result.rounds = last + 1
+        result.metrics = [store.manifest(r)["stats"] for r in store.committed_rounds()]
+        return result
+    if last is not None:
+        store.check_seen_table_resumable()
+    store.ensure_seen_table(
+        spark, cfg.seen_buckets or spark.sparkContext.defaultParallelism
+    )
 
     if robots_bodies is None and cfg.robots_from_pages:
         # one column-pruned scan; bounded (one row per host) so the
@@ -337,83 +321,45 @@ def run_crawl(
             ).localCheckpoint()
 
     # ---- resume or cold start -------------------------------------------
-    last = store.last_committed() if resume else None
     if last is not None:
-        if store.is_done():
-            result.rounds = last + 1
-            result.metrics = [store.manifest(r)["stats"] for r in store.committed_rounds()]
-            return result
-        import os as _os
-
         candidates = store.read(spark, last, "next_candidates")
         deferred = store.read(spark, last, "deferred")
-        if "attempts" not in deferred.columns:
-            # checkpoint written before retry support: deferred rows never
-            # failed a fetch, so attempts starts at 0
-            deferred = deferred.withColumn("attempts", F.lit(0).cast("long"))
-        retry = (
-            store.read(spark, last, "retry")
-            if _os.path.exists(store.round_path(last, "retry"))
-            else _empty(spark, QUEUE_SCHEMA)
-        )
-        # checkpoint written before the priority column (legacy): every row
-        # ranked equal then, so 0 (the plain-link default) preserves order
-        if "priority" not in candidates.columns:
-            candidates = candidates.withColumn("priority", F.lit(0).cast("long"))
-        if "priority" not in deferred.columns:
-            deferred = deferred.withColumn("priority", F.lit(0).cast("long"))
-        if "priority" not in retry.columns:
-            retry = retry.withColumn("priority", F.lit(0).cast("long"))
-        if bucketed:
-            # legacy / cross-backend checkpoints: the table may be missing
-            # committed rounds' keys — refill from seen_delta parquet first
-            store.backfill_seen_bucketed(spark, upto=last)
-        seen = (
-            store.read_seen_bucketed(spark, upto=last)
-            if bucketed
-            else store.read_all(spark, "seen_delta", upto=last)
-        )
+        retry = store.read(spark, last, "retry")
+        seen = store.read_seen_bucketed(spark, upto=last)
         rnd = last + 1
-        result.metrics = [store.manifest(r)["stats"] for r in store.committed_rounds()]
+        manifests = [store.manifest(r) for r in store.committed_rounds()]
+        result.metrics = [m["stats"] for m in manifests]
         # driver-side running counts from the committed manifests — no
         # re-count jobs on resume
-        last_counts = store.manifest(last).get("counts", {})
-        n_candidates = (
-            last_counts["next_candidates"]
-            if "next_candidates" in last_counts
-            else candidates.count()
-        )
-        n_seen_total = sum(
-            store.manifest(r).get("counts", {}).get("seen_delta", 0)
-            for r in store.committed_rounds()
-        )
+        n_candidates = manifests[-1]["counts"]["next_candidates"]
+        n_seen_total = sum(m["counts"]["seen_delta"] for m in manifests)
+        # skew signal from the last committed round's queue, so a resumed
+        # run salts its first round when that queue had a hot host (instead
+        # of waiting one round to re-learn); absent if the kill came
+        # between the commit and its stats update
+        hot_host = bool(manifests[-1]["stats"].get("hot_host_next", False))
     else:
         candidates = seeds_to_candidates(seeds)
-        if robots_bodies is not None:
-            # Sitemap: pointers bootstrap the frontier alongside the seeds
-            # (cold start only — on resume they are already in the seen set)
-            candidates = candidates.unionByName(
-                sitemap_pointer_candidates(robots_bodies)
-            )
         deferred = _empty(spark, QUEUE_SCHEMA)
         retry = _empty(spark, QUEUE_SCHEMA)
         seen = None
         rnd = 0
-        n_candidates = candidates.count()
         n_seen_total = 0
+        hot_host = False
+    if robots_bodies is not None:
+        # Sitemap: pointers bootstrap the frontier alongside the seeds. On
+        # resume too: a crawl started without robots_bodies never admitted
+        # them, and the seen anti-join drops the ones already admitted
+        pointers = sitemap_pointer_candidates(robots_bodies)
+        candidates = candidates.unionByName(pointers)
+        if last is not None:
+            n_candidates += pointers.count()
+    if last is None:
+        n_candidates = candidates.count()
 
     # pages is scanned every round: url + html only (column pruning reaches
     # the parquet scan; `text`/`lang` are never read by the crawl plan)
     pages_fetch = pages.select("url", "html")
-
-    # skew signal from the previous round's queue; persisted in the manifest
-    # stats so a resumed run salts its first round when the last committed
-    # round's queue had a hot host (instead of waiting one round to re-learn)
-    hot_host = False
-    if last is not None:
-        hot_host = bool(
-            store.manifest(last).get("stats", {}).get("hot_host_next", False)
-        )
 
     # the bloom lives ACROSS rounds: built once from the full seen set when
     # the threshold is crossed (or on resume), then maintained per round by
@@ -459,8 +405,6 @@ def run_crawl(
             candidates, seen_df, cfg.whitelist, cfg.max_depth,
             robots=robots, bloom_prefilter=prefilter, scratch=scratch,
         )
-        if cfg.seen_partitions:
-            admitted = admitted.repartition(cfg.seen_partitions, "url_sha1")
         admitted = admitted.persist(StorageLevel.MEMORY_AND_DISK)
 
         # crawl-trap guard: overflow beyond the per-host cap is marked SEEN
@@ -535,12 +479,10 @@ def run_crawl(
             (F.col("status") == 200) & F.col("content_type").startswith("text/html")
         ).select("url", "host", "depth", "html")
 
-        if cfg.parse_partitions == "auto":
-            html_pages = html_pages.repartition(
-                spark.sparkContext.defaultParallelism
-            )
-        elif isinstance(cfg.parse_partitions, int):
-            html_pages = html_pages.repartition(cfg.parse_partitions)
+        # widen the parse stage: AQE coalesces the fetch-join output by
+        # BYTES, but HTML parsing is per-ROW cpu — small pages would leave
+        # most cores idle
+        html_pages = html_pages.repartition(spark.sparkContext.defaultParallelism)
 
         parsed_all = html_pages.withColumn(
             "p", parse_html_udf(F.col("html"), F.col("url"))
@@ -654,17 +596,6 @@ def run_crawl(
             "errors": 0,
             "deferred": 0,
         }
-        extra_writes = []
-        if bucketed:
-            # committed with the round (before the manifest rename): a
-            # manifest implies the keys are in the table; orphans from a
-            # crashed attempt carry this round number and stay invisible
-            # until the round actually commits (reads filter round <= K)
-            extra_writes.append(
-                lambda: store.append_seen_bucketed(
-                    admitted.select("url_sha1"), rnd
-                )
-            )
         manifest = store.commit_round(
             rnd,
             {
@@ -678,7 +609,13 @@ def run_crawl(
                 "retry": retry_next,
             },
             stats=stats,
-            extra_writes=extra_writes,
+            # committed with the round (before the manifest rename): a
+            # manifest implies the keys are in the table; orphans from a
+            # crashed attempt carry this round number and stay invisible
+            # until the round actually commits (reads filter round <= K)
+            extra_writes=[
+                lambda: store.append_seen_bucketed(admitted.select("url_sha1"), rnd)
+            ],
         )
 
         # post-commit stats: observe() metrics captured during the writes
@@ -707,7 +644,7 @@ def run_crawl(
             hot_host = bool(
                 top and top["total"]
                 and top["mx"] > cfg.hot_host_min_rows
-                and top["mx"] / top["total"] > cfg.hot_host_share
+                and top["mx"] / top["total"] > HOT_HOST_SHARE
             )
         stats.update({"admitted": n_admitted, "fetched": n_fetch,
                       "items": items_c, "errors": errors_c,
@@ -719,16 +656,11 @@ def run_crawl(
 
         candidates = store.read(spark, rnd, "next_candidates")
         if (
-            bucketed
-            and cfg.seen_compact_files_per_bucket
+            cfg.seen_compact_files_per_bucket
             and store.seen_files_per_bucket() > cfg.seen_compact_files_per_bucket
         ):
             store.compact_seen_bucketed(spark, upto=rnd)
-        seen = (
-            store.read_seen_bucketed(spark, upto=rnd)
-            if bucketed
-            else store.read_all(spark, "seen_delta", upto=rnd)
-        )
+        seen = store.read_seen_bucketed(spark, upto=rnd)
 
         # incremental bloom maintenance: fold ONLY this round's committed
         # delta into the persisted bitmaps (cost ~ |delta| + filter size),
@@ -784,46 +716,3 @@ def export_items(spark: SparkSession, store: RoundStore) -> str | None:
         ).otherwise(F.lit(None).cast("string")),
     )
     return store.write_export(enriched.orderBy("round", "url"))
-
-
-_ORDER_SCHEMA = T.StructType(
-    [
-        T.StructField("round", T.LongType()),
-        T.StructField("host", T.StringType()),
-        T.StructField("url", T.StringType()),
-        T.StructField("url_sha1", T.StringType()),
-    ]
-)
-
-_ERRORS_SCHEMA = T.StructType(
-    [
-        T.StructField("round", T.LongType()),
-        T.StructField("url", T.StringType()),
-        T.StructField("stage", T.StringType()),
-        T.StructField("message", T.StringType()),
-    ]
-)
-
-_LINEAGE_SCHEMA = T.StructType(
-    [
-        T.StructField("partition_id", T.IntegerType()),
-        T.StructField("rows", T.LongType()),
-        T.StructField("fetched_ok", T.LongType()),
-        T.StructField("round", T.LongType()),
-    ]
-)
-
-
-def _items_schema() -> T.StructType:
-    return T.StructType(
-        [
-            T.StructField("round", T.LongType()),
-            T.StructField("url", T.StringType()),
-            T.StructField("kind", T.StringType()),
-            T.StructField("file_name", T.StringType()),
-            T.StructField("file_ext", T.StringType()),
-            T.StructField("file_size", T.LongType()),
-            T.StructField("jcux", JCUX_SCHEMA),
-            T.StructField("payload", T.BinaryType()),
-        ]
-    )

@@ -22,7 +22,6 @@ import json
 import os
 import shutil
 import time
-from typing import Iterable
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -146,14 +145,9 @@ class RoundStore:
     def read(self, spark: SparkSession, rnd: int, name: str) -> DataFrame:
         return spark.read.parquet(self.round_path(rnd, name))
 
-    def read_all(self, spark: SparkSession, name: str,
-                 upto: int | None = None) -> DataFrame | None:
-        """Union of a dataset across all committed rounds (e.g. the full
-        seen set from its per-round deltas)."""
-        rounds: Iterable[int] = self.committed_rounds()
-        if upto is not None:
-            rounds = [r for r in rounds if r <= upto]
-        paths = [self.round_path(r, name) for r in rounds
+    def read_all(self, spark: SparkSession, name: str) -> DataFrame | None:
+        """Union of a dataset across all committed rounds that wrote it."""
+        paths = [self.round_path(r, name) for r in self.committed_rounds()
                  if os.path.exists(self.round_path(r, name))]
         if not paths:
             return None
@@ -218,27 +212,18 @@ class RoundStore:
             json.dump(meta, f)
         os.replace(tmp, self._meta_path())
 
-    def pin_backend(self, backend: str) -> None:
-        """Pin the seen backend on first use; fail loudly on a mismatch.
-
-        A checkpoint written with seen_backend='parquet' holds its seen set
-        only in per-round seen_delta parquet; resuming it under 'bucketed'
-        would read a freshly created EMPTY table and silently re-admit every
-        previously crawled URL. A store with no pin (legacy, pre-round-4) is
-        pinned to the resuming run's backend — safe, because the bucketed
-        resume path backfills the table from the committed seen_delta
-        parquet (backfill_seen_bucketed) before its first read."""
+    def check_seen_table_resumable(self) -> None:
+        """Refuse to resume a store whose committed seen keys are not in the
+        bucketed seen table: a store from before the table existed (no
+        ``seen_buckets`` pin) or one written with the retired parquet seen
+        backend. Resuming either would read an EMPTY table and silently
+        re-admit every URL the store has already crawled."""
         meta = self._read_meta()
-        pinned = meta.get("seen_backend")
-        if pinned is None:
-            meta["seen_backend"] = backend
-            self._write_meta(meta)
-        elif pinned != backend:
+        if "seen_buckets" not in meta or meta.get("seen_backend", "bucketed") != "bucketed":
             raise ValueError(
-                f"checkpoint at {self.root} was written with "
-                f"seen_backend={pinned!r}; resuming with {backend!r} would "
-                f"lose the seen set. Pass seen_backend={pinned!r} (or start "
-                "a fresh checkpoint_dir)."
+                f"checkpoint at {self.root} has no bucketed seen table "
+                f"(_store_meta.json: {meta}); resuming it would re-admit "
+                "every URL it already crawled. Start a fresh checkpoint_dir."
             )
 
     def seen_table_ddl(self, n_buckets: int, provider: str = "parquet",
@@ -397,36 +382,6 @@ class RoundStore:
         shutil.rmtree(self._seen_location(v), ignore_errors=True)
         return new_loc
 
-    def backfill_seen_bucketed(self, spark: SparkSession, upto: int) -> list[int]:
-        """Re-insert any committed round's seen keys missing from the
-        bucketed table, from the seen_delta parquet (written every round
-        regardless of backend). Covers resuming a legacy checkpoint created
-        before the bucketed backend existed — or under seen_backend=
-        'parquet' — where ensure_seen_table just created an EMPTY table:
-        without the backfill the resume would silently lose the entire seen
-        set and re-admit every crawled URL. Idempotent: a committed round's
-        insert completed before its manifest (commit protocol), so presence
-        of ANY row for a round implies all of them. One distinct-scan of the
-        table's long `round` column per resume; returns backfilled rounds."""
-        committed = [
-            r for r in self.committed_rounds()
-            if r <= upto
-            and self.manifest(r).get("counts", {}).get("seen_delta", 1) != 0
-            and os.path.exists(self.round_path(r, "seen_delta"))
-        ]
-        if not committed:
-            return []
-        present = {
-            int(row["round"])
-            for row in spark.table(self.seen_table).select("round").distinct().collect()
-        }
-        missing = [r for r in committed if r not in present]
-        for r in missing:
-            self.append_seen_bucketed(
-                self.read(spark, r, "seen_delta").select("url_sha1"), r
-            )
-        return missing
-
     def append_seen_bucketed(self, keys: DataFrame, rnd: int) -> None:
         """Insert one round's url_sha1 keys. The pre-repartition on the
         bucket key makes each task hold exactly one bucket's rows (Spark's
@@ -474,6 +429,3 @@ class RoundStore:
 
     def read_export(self, spark: SparkSession, name: str = "items_sorted") -> DataFrame:
         return spark.read.parquet(self.export_path(name))
-
-    def destroy(self) -> None:
-        shutil.rmtree(self.root, ignore_errors=True)
