@@ -18,46 +18,35 @@ from webcrawler_spark.plans.crawl import CrawlConfig, run_crawl
 from webcrawler_spark.storage import RoundStore
 
 
-def _stopped_crawl(spark, fixture_web, d):
-    """A 2-round crawl whose last round is committed but not done."""
+def test_backend_mismatch_fails_loudly(spark, fixture_web, tmp_path):
+    """A stopped crawl's store, relabelled first with the parquet backend's
+    metadata (pinned seen_backend, no bucket count), then as a store from
+    before the bucketed table (no _store_meta.json): both resumes raise
+    and leave the store as they found it."""
     paths = fixture_web["paths"]
     pages = spark.read.parquet(paths["pages"])
     seeds = spark.read.parquet(paths["seeds"])
+    d = str(tmp_path / "ckpt")
     cfg = CrawlConfig(whitelist=WHITELIST, max_depth=1, max_rounds=1,
                       parsers="bm1365")
     run_crawl(spark, pages, seeds, cfg, checkpoint_dir=d)
     store = RoundStore(d)
     last = store.last_committed()
-    m = store.manifest(last)
+    m = store.manifest(last)  # stopped, not finished
     m["done"] = False
     with open(os.path.join(store.manifest_dir, f"round_{last}.json"), "w") as f:
         json.dump(m, f)
     cfg.max_rounds = 4
 
-    def resume():
-        return run_crawl(spark, pages, seeds, cfg, checkpoint_dir=d, resume=True)
-
-    return store, resume
-
-
-def test_backend_mismatch_fails_loudly(spark, fixture_web, tmp_path):
-    """Store metadata of the parquet backend: pinned seen_backend, no
-    bucket count."""
-    d = str(tmp_path / "pq")
-    store, resume = _stopped_crawl(spark, fixture_web, d)
     with open(store._meta_path(), "w") as f:
         json.dump({"seen_backend": "parquet"}, f)
     with pytest.raises(ValueError, match=re.escape(f"checkpoint at {d}")):
-        resume()
+        run_crawl(spark, pages, seeds, cfg, checkpoint_dir=d, resume=True)
     with open(store._meta_path()) as f:
-        assert json.load(f) == {"seen_backend": "parquet"}  # left untouched
+        assert json.load(f) == {"seen_backend": "parquet"}
 
-
-def test_pre_bucketed_store_fails_loudly(spark, fixture_web, tmp_path):
-    """A store from before the bucketed table: no _store_meta.json."""
-    d = str(tmp_path / "legacy")
-    store, resume = _stopped_crawl(spark, fixture_web, d)
     os.remove(store._meta_path())
     with pytest.raises(ValueError, match="no bucketed seen table"):
-        resume()
+        run_crawl(spark, pages, seeds, cfg, checkpoint_dir=d, resume=True)
     assert not os.path.exists(store._meta_path())
+    assert store.last_committed() == last

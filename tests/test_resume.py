@@ -116,18 +116,24 @@ def _kill_mid_dataset_writes(mp, spark, crash_dir):
     return check
 
 
-def _kill_before_manifest_rename(mp, spark, crash_dir):
-    """Everything of round KILL_ROUND landed, incl. the bucketed seen
-    insert; the manifest's atomic rename is the one step missing."""
+def _fail_rename_into(mp, target):
+    """os.replace raises instead of creating ``target``."""
     real = os.replace
-    manifest = os.path.join(crash_dir, "_manifests", f"round_{KILL_ROUND}.json")
 
     def replace(src, dst, *a, **kw):
-        if os.fspath(dst) == manifest and not os.path.exists(manifest):
-            raise InjectedKill(dst)
+        if os.fspath(dst) == target and not os.path.exists(target):
+            raise InjectedKill(target)
         return real(src, dst, *a, **kw)
 
     mp.setattr(os, "replace", replace)
+
+
+def _kill_before_manifest_rename(mp, spark, crash_dir):
+    """Everything of round KILL_ROUND landed, incl. the bucketed seen
+    insert; the manifest's atomic rename is the one step missing."""
+    _fail_rename_into(
+        mp, os.path.join(crash_dir, "_manifests", f"round_{KILL_ROUND}.json")
+    )
 
     def check(store):
         assert store.last_committed() == KILL_ROUND - 1
@@ -164,15 +170,8 @@ def _kill_mid_compaction(mp, spark, crash_dir):
 
 def _kill_mid_export(mp, spark, crash_dir):
     """The ordered export is staged; the rename into place never runs."""
-    real = os.replace
     dest = RoundStore(crash_dir).export_path()
-
-    def replace(src, dst, *a, **kw):
-        if os.fspath(dst) == dest:
-            raise InjectedKill(dst)
-        return real(src, dst, *a, **kw)
-
-    mp.setattr(os, "replace", replace)
+    _fail_rename_into(mp, dest)
 
     def check(store):
         assert not store.is_done()

@@ -140,7 +140,7 @@ def test_compaction_bounds_files_preserves_plan_and_data(spark, store):
     assert s2.seen_files_per_bucket() <= 1
 
 
-def _crawl_vs_oracle(spark, fixture_web, ckpt, compact):
+def _crawl_vs_oracle(spark, fixture_web, ckpt, **cfg_kw):
     """One crawl of the fixture web on the bucketed seen table, and the
     single-threaded oracle's (round, url) order and (url_sha1 -> url,
     first_round) seen set for the same config."""
@@ -151,10 +151,7 @@ def _crawl_vs_oracle(spark, fixture_web, ckpt, compact):
     paths = fixture_web["paths"]
     pages = spark.read.parquet(paths["pages"])
     seeds = spark.read.parquet(paths["seeds"])
-    cfg = CrawlConfig(
-        whitelist=WHITELIST, max_depth=2, max_rounds=5,
-        seen_compact_files_per_bucket=compact,
-    )
+    cfg = CrawlConfig(whitelist=WHITELIST, max_depth=2, max_rounds=5, **cfg_kw)
     res = run_crawl(spark, pages, seeds, cfg, checkpoint_dir=ckpt)
     got_order = sorted((r["round"], r["url"]) for r in res.order(spark).collect())
     got_seen = {
@@ -176,7 +173,8 @@ def test_crawl_with_aggressive_compaction_matches(spark, fixture_web, tmp_path):
     """Compacting after (almost) every round must not change crawl
     semantics: identical order + seen set vs the oracle, and the store
     ends compacted."""
-    res = _crawl_vs_oracle(spark, fixture_web, str(tmp_path / "ckpt"), 1)
+    res = _crawl_vs_oracle(spark, fixture_web, str(tmp_path / "ckpt"),
+                           seen_compact_files_per_bucket=1)
     assert res.store.seen_files_per_bucket() <= 2  # compacted near the end
 
 
@@ -216,7 +214,7 @@ def test_seen_table_provider_seam(spark, tmp_path, provider):
 def test_crawl_bucketed_matches_oracle(spark, fixture_web, tmp_path):
     """Default crawl on the bucketed seen table: identical order and seen
     set vs the oracle."""
-    _crawl_vs_oracle(spark, fixture_web, str(tmp_path / "ckpt"), None)
+    _crawl_vs_oracle(spark, fixture_web, str(tmp_path / "ckpt"))
 
 
 def test_ensure_seen_table_repairs_stale_catalog_location(spark, store):

@@ -329,9 +329,8 @@ def run_crawl(
         rnd = last + 1
         manifests = [store.manifest(r) for r in store.committed_rounds()]
         result.metrics = [m["stats"] for m in manifests]
-        # driver-side running counts from the committed manifests — no
-        # re-count jobs on resume
-        n_candidates = manifests[-1]["counts"]["next_candidates"]
+        # driver-side running count from the committed manifests — no
+        # re-count of the seen table on resume
         n_seen_total = sum(m["counts"]["seen_delta"] for m in manifests)
         # skew signal from the last committed round's queue, so a resumed
         # run salts its first round when that queue had a hot host (instead
@@ -350,12 +349,10 @@ def run_crawl(
         # Sitemap: pointers bootstrap the frontier alongside the seeds. On
         # resume too: a crawl started without robots_bodies never admitted
         # them, and the seen anti-join drops the ones already admitted
-        pointers = sitemap_pointer_candidates(robots_bodies)
-        candidates = candidates.unionByName(pointers)
-        if last is not None:
-            n_candidates += pointers.count()
-    if last is None:
-        n_candidates = candidates.count()
+        candidates = candidates.unionByName(
+            sitemap_pointer_candidates(robots_bodies)
+        )
+    n_candidates = candidates.count()
 
     # pages is scanned every round: url + html only (column pruning reaches
     # the parquet scan; `text`/`lang` are never read by the crawl plan)
