@@ -283,11 +283,12 @@ def run_crawl(
     store = RoundStore(checkpoint_dir)
     result = CrawlResult(store=store)
     last = store.last_committed() if resume else None
-    if last is not None and store.is_done():
-        result.rounds = last + 1
-        result.metrics = [store.manifest(r)["stats"] for r in store.committed_rounds()]
-        return result
     if last is not None:
+        manifests = [store.manifest(r) for r in store.committed_rounds()]
+        result.metrics = [m["stats"] for m in manifests]
+        if store.is_done():
+            result.rounds = last + 1
+            return result
         store.check_seen_table_resumable()
     store.ensure_seen_table(
         spark, cfg.seen_buckets or spark.sparkContext.defaultParallelism
@@ -327,8 +328,6 @@ def run_crawl(
         retry = store.read(spark, last, "retry")
         seen = store.read_seen_bucketed(spark, upto=last)
         rnd = last + 1
-        manifests = [store.manifest(r) for r in store.committed_rounds()]
-        result.metrics = [m["stats"] for m in manifests]
         # driver-side running count from the committed manifests — no
         # re-count of the seen table on resume
         n_seen_total = sum(m["counts"]["seen_delta"] for m in manifests)
