@@ -4,14 +4,17 @@ spark-submit --py-files on a multi-executor cluster").
 Usage:
     spark-submit --py-files webcrawler_spark.zip jobs/crawl_round.py \
         --pages PATH --seeds PATH [--robots PATH] \
-        [--robots-bodies PATH | --robots-from-pages] --checkpoint DIR \
-        [--whitelist d1,d2] [--max-depth 3] [--max-rounds 20] [--resume]
+        [--robots-bodies PATH | --robots-from-pages] [--round-seconds 60] \
+        --checkpoint DIR [--whitelist d1,d2] [--max-depth 3] \
+        [--max-rounds 20] [--max-fetch-retries 0] [--seen-buckets N] \
+        [--resume]
 
 All engine state lives in the checkpoint dir (per-round atomic manifests),
 so re-submitting with --resume continues exactly where a killed job
 stopped. On a real cluster nothing changes except --master and the
 executor/memory flags; the plan shapes (broadcast dims, url_sha1-keyed
-shuffles, salted politeness ranking) were chosen for that case.
+shuffles, salted politeness ranking) were chosen for that case; the crawl
+picks the bloom prefilter and the salting from the sizes it measures.
 """
 
 from __future__ import annotations
@@ -30,8 +33,10 @@ def main() -> None:
                          "derives admission rules, Crawl-delay budgets and "
                          "the Sitemap: frontier bootstrap")
     ap.add_argument("--robots-from-pages", action="store_true",
+                    dest="pages_robots",
                     help="self-configure from the pages table's own "
-                         "scheme://host/robots.txt rows (no side channel)")
+                         "scheme://host/robots.txt rows (no side channel; "
+                         "--robots-bodies wins)")
     ap.add_argument("--round-seconds", type=float, default=60.0,
                     help="polite wall-clock one round models (Crawl-delay "
                          "d => floor(round_seconds/d) fetch slots)")
@@ -40,8 +45,6 @@ def main() -> None:
                     help="comma-separated primary domains; default: fixtures.WHITELIST")
     ap.add_argument("--max-depth", type=int, default=3)
     ap.add_argument("--max-rounds", type=int, default=20)
-    ap.add_argument("--salt-buckets", default="auto",
-                    help="'auto' (hot-host probe, default), 'none', or an int")
     ap.add_argument("--max-fetch-retries", type=int, default=0)
     ap.add_argument("--seen-buckets", type=int, default=None,
                     help="bucket count for the seen table (pinned at store "
@@ -53,16 +56,22 @@ def main() -> None:
     from pyspark.sql import SparkSession
 
     from webcrawler_spark import fixtures
-    from webcrawler_spark.plans.crawl import CrawlConfig, run_crawl
+    from webcrawler_spark.plans.crawl import (
+        CrawlConfig,
+        robots_bodies_from_pages,
+        run_crawl,
+    )
 
     spark = SparkSession.builder.appName("webcrawler-spark-crawl").getOrCreate()
 
     pages = spark.read.parquet(args.pages)
     seeds = spark.read.parquet(args.seeds)
     budgets = robots = None
-    robots_bodies = (
-        spark.read.parquet(args.robots_bodies) if args.robots_bodies else None
-    )
+    robots_bodies = None
+    if args.robots_bodies:
+        robots_bodies = spark.read.parquet(args.robots_bodies)
+    elif args.pages_robots:
+        robots_bodies = robots_bodies_from_pages(pages)
     if args.robots:
         robots_df = spark.read.parquet(args.robots)
         budgets = robots_df.select("host", "budget_per_round")
@@ -71,16 +80,12 @@ def main() -> None:
         robots = robots_df.select("host", rcol)
 
     whitelist = args.whitelist.split(",") if args.whitelist else fixtures.WHITELIST
-    sb = args.salt_buckets
-    salt = None if sb == "none" else ("auto" if sb == "auto" else int(sb))
     cfg = CrawlConfig(
         whitelist=whitelist,
         max_depth=args.max_depth,
         max_rounds=args.max_rounds,
-        politeness_salt_buckets=salt,
         max_fetch_retries=args.max_fetch_retries,
         seen_buckets=args.seen_buckets,
-        robots_from_pages=args.robots_from_pages,
         round_seconds=args.round_seconds,
     )
     result = run_crawl(

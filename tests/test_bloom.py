@@ -1,10 +1,7 @@
-"""Sharded bloom: no false negatives ever; false-positive guard; delta merge."""
+"""Sharded bloom (BloomTable): no false negatives ever; false-positive
+guard; multi-shard probe; delta merge; sizing."""
 
-import numpy as np
-import pandas as pd
-import pytest
-
-from webcrawler_spark.operators.bloom import BloomTable, ShardedBloom
+from webcrawler_spark.operators.bloom import BloomTable
 from webcrawler_spark.urlnorm import sha1_hex
 
 
@@ -12,42 +9,10 @@ def _hashes(n, prefix):
     return [sha1_hex(f"{prefix}-{i}") for i in range(n)]
 
 
-def test_no_false_negatives(spark):
-    keys = _hashes(5000, "in")
-    df = spark.createDataFrame([(k,) for k in keys], ["url_sha1"]).repartition(8)
-    bloom = ShardedBloom.build(df, expected_per_shard=10000, fpp=0.01)
-    hits = bloom.might_contain(pd.Series(keys))
-    assert hits.all(), "bloom false negative — would lose URLs"
-
-
-def test_false_positive_rate_bounded(spark):
-    keys = _hashes(5000, "in")
-    df = spark.createDataFrame([(k,) for k in keys], ["url_sha1"]).repartition(8)
-    bloom = ShardedBloom.build(df, expected_per_shard=10000, fpp=0.01)
-    probes = pd.Series(_hashes(20000, "out"))
-    fpr = bloom.might_contain(probes).mean()
-    assert fpr < 0.05, f"fp rate {fpr} too high"
-
-
-def test_sharded_variant(spark):
-    keys = _hashes(4000, "in")
-    df = spark.createDataFrame([(k,) for k in keys], ["url_sha1"]).repartition(4)
-    bloom = ShardedBloom.build(df, expected_per_shard=2000, fpp=0.01, shard_bits=4)
-    assert len(bloom.shards) > 1  # keys spread over shards
-    assert bloom.might_contain(pd.Series(keys)).all()
-    fpr = bloom.might_contain(pd.Series(_hashes(10000, "out"))).mean()
-    assert fpr < 0.05
-
-
-def test_delta_merge(spark):
-    a = _hashes(1000, "a")
-    b = _hashes(1000, "b")
-    df_a = spark.createDataFrame([(k,) for k in a], ["url_sha1"])
-    df_b = spark.createDataFrame([(k,) for k in b], ["url_sha1"])
-    bl_a = ShardedBloom.build(df_a, expected_per_shard=4000, fpp=0.01)
-    bl_b = ShardedBloom.build(df_b, expected_per_shard=4000, fpp=0.01)
-    merged = bl_a.merged_with(bl_b)
-    assert merged.might_contain(pd.Series(a + b)).all()
+def _cand_df(spark, keys):
+    return spark.createDataFrame(
+        [(k, f"u{i}") for i, k in enumerate(keys)], ["url_sha1", "url"]
+    ).repartition(8)
 
 
 def test_auto_sizing_bounds_shard_bitmaps():
@@ -56,15 +21,15 @@ def test_auto_sizing_bounds_shard_bitmaps():
     import math
 
     for n in [10_000, 10**6, 10**7, 10**8, 10**10]:
-        sb, expected = ShardedBloom.plan(n, fpp=0.01)
-        m = ShardedBloom._optimal_m(expected, 0.01)
-        assert m // 8 <= ShardedBloom.MAX_SHARD_BYTES, (n, sb, m // 8)
-        # capacity: shards x expected_per_shard covers n with the safety factor
+        sb, expected = BloomTable.plan(n, fpp=0.01)
+        m = BloomTable._optimal_m(expected, 0.01)
+        assert m // 8 <= BloomTable.MAX_SHARD_BYTES, (n, sb, m // 8)
+        # capacity: shards x per-shard keys covers n with the safety factor
         assert (1 << sb) * expected >= n
         # never over-sharded: one fewer bit would blow the cap (when sb > 0)
         if sb > 0:
             m_total = -n * 1.2 * math.log(0.01) / (math.log(2) ** 2)
-            assert m_total / (1 << (sb - 1)) > ShardedBloom.MAX_SHARD_BYTES * 8
+            assert m_total / (1 << (sb - 1)) > BloomTable.MAX_SHARD_BYTES * 8
 
 
 def test_auto_build_small_input(spark):
@@ -72,44 +37,19 @@ def test_auto_build_small_input(spark):
     no-false-negative guarantee."""
     keys = _hashes(3000, "auto")
     df = spark.createDataFrame([(k,) for k in keys], ["url_sha1"]).repartition(8)
-    bloom = ShardedBloom.build(df, n_seen=3000)
-    assert bloom.shard_bits == 0  # tiny input -> single shard
-    assert bloom.might_contain(pd.Series(keys)).all()
-
-
-def test_sharded_build_distributed_merge(spark):
-    """Sharded build repartitions by shard id and merges in-cluster: the
-    result must still be exact (no false negatives) with multiple shards."""
-    keys = _hashes(6000, "dist")
-    df = spark.createDataFrame([(k,) for k in keys], ["url_sha1"]).repartition(16)
-    bloom = ShardedBloom.build(df, expected_per_shard=1000, fpp=0.01, shard_bits=3)
-    assert len(bloom.shards) == 8
-    assert bloom.might_contain(pd.Series(keys)).all()
-    fpr = bloom.might_contain(pd.Series(_hashes(10000, "out"))).mean()
-    assert fpr < 0.05
-
-
-def test_empty_seen(spark):
-    df = spark.createDataFrame([], "url_sha1 string")
-    bloom = ShardedBloom.build(df, expected_per_shard=1000, fpp=0.01)
-    probes = pd.Series(_hashes(100, "x"))
-    assert not bloom.might_contain(probes).any()  # everything definitely new
-
-
-# ---------------------------------------------------------------------------
-# BloomTable: the sharded DISTRIBUTED probe (no whole-filter broadcast)
-# ---------------------------------------------------------------------------
-
-def _cand_df(spark, keys):
-    return spark.createDataFrame(
-        [(k, f"u{i}") for i, k in enumerate(keys)], ["url_sha1", "url"]
-    ).repartition(8)
+    table = BloomTable.build(df, n_seen=3000)
+    try:
+        assert table.shard_bits == 0  # tiny input -> single shard
+        maybe, new = table.split(_cand_df(spark, keys))
+        assert new.count() == 0
+    finally:
+        table.unpersist()
 
 
 def test_bloomtable_split_no_false_negatives(spark):
     seen_keys = _hashes(5000, "in")
     seen = spark.createDataFrame([(k,) for k in seen_keys], ["url_sha1"]).repartition(8)
-    table = BloomTable.build(seen, expected_per_shard=2000, fpp=0.01, shard_bits=4)
+    table = BloomTable.build(seen, fpp=0.01, shard_bits=4)
     try:
         scratch: list = []
         maybe, new = table.split(_cand_df(spark, seen_keys), scratch=scratch)
@@ -126,7 +66,7 @@ def test_bloomtable_split_fp_bounded_and_schema(spark):
     seen = spark.createDataFrame(
         [(k,) for k in _hashes(5000, "in")], ["url_sha1"]
     ).repartition(8)
-    table = BloomTable.build(seen, expected_per_shard=2000, fpp=0.01, shard_bits=4)
+    table = BloomTable.build(seen, fpp=0.01, shard_bits=4)
     try:
         out_keys = _hashes(20000, "out")
         maybe, new = table.split(_cand_df(spark, out_keys))
@@ -149,13 +89,13 @@ def test_bloomtable_one_shard_per_task(spark):
     seen = spark.createDataFrame(
         [(k,) for k in _hashes(20000, "big")], ["url_sha1"]
     ).repartition(16)
-    table = BloomTable.build(seen, expected_per_shard=1000, fpp=0.01, shard_bits=5)
+    table = BloomTable.build(seen, fpp=0.01, shard_bits=5)
     try:
         rows = table.bitmaps.collect()
         assert 1 < len(rows) <= 32
         assert len({r["shard"] for r in rows}) == len(rows)  # one bitmap/shard
         for r in rows:
-            assert len(r["bitmap"]) <= ShardedBloom.MAX_SHARD_BYTES
+            assert len(r["bitmap"]) <= BloomTable.MAX_SHARD_BYTES
         # probing still exact through the cogroup path
         maybe, new = table.split(_cand_df(spark, _hashes(20000, "big")))
         assert new.count() == 0
@@ -170,14 +110,14 @@ def test_bloomtable_merge_delta_bit_exact(spark):
     a, b = _hashes(3000, "a"), _hashes(1500, "b")
     df_a = spark.createDataFrame([(k,) for k in a], ["url_sha1"]).repartition(8)
     df_b = spark.createDataFrame([(k,) for k in b], ["url_sha1"]).repartition(4)
-    table = BloomTable.build(df_a, expected_per_shard=2000, fpp=0.01, shard_bits=3)
+    table = BloomTable.build(df_a, fpp=0.01, shard_bits=3)
     merged = table.merge_delta(df_b)
     try:
         assert merged.capacity_keys == table.capacity_keys
         assert (merged.shard_bits, merged.m, merged.k) == (
             table.shard_bits, table.m, table.k
         )
-        full = ShardedBloom._bitmap_table(
+        full = BloomTable._bitmap_table(
             df_a.unionByName(df_b), "url_sha1",
             merged.shard_bits, merged.m, merged.k,
         )
@@ -191,7 +131,8 @@ def test_bloomtable_merge_delta_bit_exact(spark):
         merged.unpersist()
 
 
-def test_crawl_builds_bloom_once_then_merges_deltas(spark, fixture_web, tmp_path):
+def test_crawl_builds_bloom_once_then_merges_deltas(spark, fixture_web, tmp_path,
+                                                    monkeypatch):
     """The round loop must never rebuild the bloom from the full seen set:
     ONE full build when the threshold is crossed, then one merge_delta per
     committed round whose input is exactly that round's seen_delta."""
@@ -215,13 +156,13 @@ def test_crawl_builds_bloom_once_then_merges_deltas(spark, fixture_web, tmp_path
     pages = spark.read.parquet(paths["pages"])
     seeds = spark.read.parquet(paths["seeds"])
     cfg = CrawlConfig(whitelist=WHITELIST, max_depth=2, max_rounds=8,
-                      parsers="combined", bloom_min_seen=1)
-    ref_cfg = CrawlConfig(whitelist=WHITELIST, max_depth=2, max_rounds=8,
-                          parsers="combined", use_bloom=False)
-    ref = run_crawl(spark, pages, seeds, ref_cfg,
+                      parsers="combined")
+    # the fixture web stays below BLOOM_MIN_SEEN: no bloom in the reference
+    ref = run_crawl(spark, pages, seeds, cfg,
                     checkpoint_dir=str(tmp_path / "ref"))
     want = sorted((r["round"], r["url"]) for r in ref.order(spark).collect())
 
+    monkeypatch.setattr(crawl_mod, "BLOOM_MIN_SEEN", 1)
     try:
         crawl_mod.BloomTable.build = classmethod(counting_build)
         crawl_mod.BloomTable.merge_delta = counting_merge
@@ -247,7 +188,7 @@ def test_crawl_builds_bloom_once_then_merges_deltas(spark, fixture_web, tmp_path
 
 def test_bloomtable_empty_seen(spark):
     seen = spark.createDataFrame([], "url_sha1 string")
-    table = BloomTable.build(seen, expected_per_shard=1000, fpp=0.01)
+    table = BloomTable.build(seen, fpp=0.01)
     try:
         maybe, new = table.split(_cand_df(spark, _hashes(200, "x")))
         assert maybe.count() == 0

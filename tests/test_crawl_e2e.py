@@ -9,13 +9,13 @@ list, same politeness budgets.
 import pytest
 from pyspark.sql import functions as F
 
+import webcrawler_spark.plans.crawl as crawl_mod
 from oracle import CrawlConfig as OracleConfig, crawl as oracle_crawl
 from webcrawler_spark.fixtures import WHITELIST
 from webcrawler_spark.plans.crawl import CrawlConfig, run_crawl
 
 
-def _run_both(spark, fixture_web, tmp_path, parsers, with_politeness, use_bloom=True,
-              salt_buckets=None, bloom_min_seen=None, hot_host_min_rows=None):
+def _run_both(spark, fixture_web, tmp_path, parsers, with_politeness):
     paths = fixture_web["paths"]
     pages_df = spark.read.parquet(paths["pages"])
     seeds_df = spark.read.parquet(paths["seeds"])
@@ -39,12 +39,7 @@ def _run_both(spark, fixture_web, tmp_path, parsers, with_politeness, use_bloom=
 
     cfg = CrawlConfig(
         whitelist=WHITELIST, max_depth=3, max_rounds=12, parsers=parsers,
-        use_bloom=use_bloom, politeness_salt_buckets=salt_buckets,
     )
-    if bloom_min_seen is not None:
-        cfg.bloom_min_seen = bloom_min_seen
-    if hot_host_min_rows is not None:
-        cfg.hot_host_min_rows = hot_host_min_rows
     result = run_crawl(
         spark, pages_df, seeds_df, cfg,
         checkpoint_dir=str(tmp_path / f"ckpt_{parsers}_{with_politeness}"),
@@ -90,10 +85,18 @@ def test_engine_matches_oracle_with_politeness(spark, fixture_web, tmp_path):
     _assert_match(spark, golden, result)
 
 
-def test_politeness_budgets_enforced(spark, fixture_web, tmp_path):
+def test_politeness_budgets_enforced(spark, fixture_web, tmp_path, monkeypatch):
+    """The hot-host fixture (one host owns well over HOT_HOST_SHARE of the
+    queue) with the hot-host row floor lowered to fixture scale: the salted
+    two-phase top-k engages in at least one round, order/seen/metrics
+    still match the oracle exactly, and no host fetches past its budget in
+    any round."""
+    monkeypatch.setattr(crawl_mod, "HOT_HOST_MIN_ROWS", 0)
     golden, result = _run_both(spark, fixture_web, tmp_path, "combined",
-                               with_politeness=True, salt_buckets=4)
+                               with_politeness=True)
     _assert_match(spark, golden, result)
+    assert any(m.get("salted") for m in result.metrics), \
+        "salting never engaged on the hot-host fixture"
     budgets = {r["host"]: r["budget_per_round"] for r in fixture_web["robots"]}
     per_round_host = (
         result.order(spark).groupBy("round", "host").count().collect()
@@ -101,19 +104,6 @@ def test_politeness_budgets_enforced(spark, fixture_web, tmp_path):
     for row in per_round_host:
         if row["host"] in budgets:
             assert row["count"] <= budgets[row["host"]]
-
-
-def test_auto_salt_on_hot_host(spark, fixture_web, tmp_path):
-    """politeness_salt_buckets='auto': the hot-host fixture (one host owns
-    well over hot_host_share of the queue) must trigger the salted two-phase
-    top-k in at least one round, with order/seen/metrics still matching the
-    oracle exactly."""
-    golden, result = _run_both(spark, fixture_web, tmp_path, "combined",
-                               with_politeness=True, salt_buckets="auto",
-                               hot_host_min_rows=0)  # fixture-scale trigger
-    _assert_match(spark, golden, result)
-    assert any(m.get("salted") for m in result.metrics), \
-        "auto-salt never engaged on the hot-host fixture"
 
 
 def test_items_and_byte_identical_text(spark, fixture_web, tmp_path):
@@ -304,12 +294,12 @@ def test_host_cap_trap_guard(spark, fixture_web, tmp_path):
     assert res2.order(spark).count() > len(fetched)
 
 
-def test_bloom_never_loses_urls(spark, fixture_web, tmp_path):
+def test_bloom_never_loses_urls(spark, fixture_web, tmp_path, monkeypatch):
     """bloom 'maybe-seen' still passes the exact anti-join: results with and
     without the bloom prefilter are identical."""
-    # bloom_min_seen=1 forces the prefilter on at fixture scale (the
+    # BLOOM_MIN_SEEN=1 forces the prefilter on at fixture scale (the
     # default threshold would silently skip it and no-op this test)
+    monkeypatch.setattr(crawl_mod, "BLOOM_MIN_SEEN", 1)
     golden_a, with_bloom = _run_both(spark, fixture_web, tmp_path, "combined",
-                                     with_politeness=False, use_bloom=True,
-                                     bloom_min_seen=1)
+                                     with_politeness=False)
     _assert_match(spark, golden_a, with_bloom)

@@ -11,6 +11,7 @@ from webcrawler_spark.plans.crawl import (
     SITEMAP_LINK_POS,
     SITEMAP_PRIORITY,
     CrawlConfig,
+    robots_bodies_from_pages,
     run_crawl,
 )
 
@@ -76,7 +77,7 @@ def _run_engine(spark, tmp_path, pages, budgets_rows=None, max_depth=4,
     )
     seeds_df = spark.createDataFrame([], "url string, order long")
     robots_bodies = (
-        None
+        robots_bodies_from_pages(pages_df)
         if from_pages
         else spark.createDataFrame(
             [(HOT_HOST, ROBOTS_BODY)], "host string, body string"
@@ -88,7 +89,7 @@ def _run_engine(spark, tmp_path, pages, budgets_rows=None, max_depth=4,
         else None
     )
     cfg = CrawlConfig(whitelist=WHITELIST, max_depth=max_depth, max_rounds=12,
-                      parsers="generic", robots_from_pages=from_pages)
+                      parsers="generic")
     return run_crawl(
         spark, pages_df, seeds_df, cfg,
         checkpoint_dir=str(tmp_path / "ckpt"),
@@ -173,8 +174,8 @@ def test_explicit_budget_overrides_crawl_delay(spark, tmp_path):
     assert max(r["count"] for r in per_round) > 2  # the override engaged
 
 
-def test_robots_from_pages_self_configures_the_crawl(spark, tmp_path):
-    """robots_from_pages=True: the corpus's own scheme://host/robots.txt
+def test_robots_bodies_from_pages_self_configures_the_crawl(spark, tmp_path):
+    """robots_bodies_from_pages(pages): the corpus's own scheme://host/robots.txt
     row supplies rules, Crawl-delay budget AND the Sitemap bootstrap — no
     side channel at all (pages table + empty seeds in, full crawl out),
     identical to passing the same body via robots_bodies and to the
@@ -213,7 +214,6 @@ def test_robots_bodies_from_pages_one_body_per_host(spark):
     wins, then the smallest url. Two bodies for one host would interleave
     their lines in parse_robots' per-host windows (same line positions),
     so its rules would depend on task order."""
-    from webcrawler_spark.plans.crawl import robots_bodies_from_pages
     from webcrawler_spark.sources.robots import parse_robots
 
     http_body = "User-agent: *\nDisallow: /http-only/\n"
@@ -290,3 +290,4 @@ def test_resume_adds_sitemap_pointers(spark, tmp_path):
     assert SM1_URL in first_round and SM2_URL in first_round
     for u in LEAVES:
         assert (u in first_round) == ("/private/" not in u)
+

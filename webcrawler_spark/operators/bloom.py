@@ -37,136 +37,138 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
-class ShardedBloom:
-    """Immutable sharded bloom built from partial bitmaps."""
+def _hashes(sha1_hex: pd.Series) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
+    """(shard_key_u32, h1, h2) — all derived from the hex digest itself,
+    vectorized via fixed-width byte views (no per-row Python)."""
+    a = sha1_hex.to_numpy(dtype="U40")
+    # U40 -> 4 bytes per char little-endian codepoints
+    codes = a.view(np.uint32).reshape(len(a), 40)
+    # hex char -> value: '0'-'9' => c-48, 'a'-'f' => c-87
+    vals = np.where(codes >= 97, codes - 87, codes - 48).astype(np.uint64)
+    def slice_val(lo: int, hi: int) -> np.ndarray:
+        out = np.zeros(len(a), dtype=np.uint64)
+        for i in range(lo, hi):
+            out = out * np.uint64(16) + vals[:, i]
+        return out
+    shard_key = slice_val(0, 8)     # first 32 bits
+    h1 = slice_val(8, 23)           # 60 bits
+    h2 = slice_val(23, 38) | np.uint64(1)  # odd
+    return shard_key, h1, h2
+
+
+def _positions(h1: np.ndarray, h2: np.ndarray, m: int, k: int) -> list[np.ndarray]:
+    m = np.uint64(m)
+    return [(h1 + np.uint64(i) * h2) % m for i in range(k)]
+
+
+def _or_merge(pdf: pd.DataFrame) -> pd.DataFrame:
+    out = np.frombuffer(pdf["bitmap"].iloc[0], dtype=np.uint8).copy()
+    for b in pdf["bitmap"].iloc[1:]:
+        out |= np.frombuffer(b, dtype=np.uint8)
+    return pd.DataFrame(
+        {"shard": [pdf["shard"].iloc[0]], "bitmap": [out.tobytes()]}
+    )
+
+
+def _shard_expr(key_col, shard_bits: int):
+    """Native shard id of a sha1-hex key: first 8 hex chars as uint32
+    >> (32 - shard_bits). Must match _hashes exactly."""
+    return F.shiftright(
+        F.conv(F.substring(key_col, 1, 8), 16, 10).cast("long"), 32 - shard_bits
+    )
+
+
+class BloomTable:
+    """The 10^10-key bloom: bitmaps live in a (shard, bitmap) DataFrame that
+    is NEVER collected to the driver and never broadcast whole.
+
+    ``split`` probes by cogrouping the candidates with the bitmap table on
+    (shard id, salt): each applyInPandas call receives one group's
+    candidate rows plus AT MOST ONE <=16 MB shard bitmap — peak memory per
+    task is one shard, not the fleet (the round-2 probe broadcast packed
+    every shard into one dict: ~14 GB to the driver AND each executor at
+    10^10 keys). The salt replicates each bitmap row `salt_n` times so a
+    low shard count still fans out across all cores; replication shuffle
+    volume is bounded by ~2 x cores x 16 MB, independent of n_seen.
+
+    The exact anti-join downstream remains the source of truth for the
+    bloom-positive rows.
+    """
+
+    MAX_SHARD_BYTES = 16 << 20  # per-shard bitmap cap: one task holds one
 
     def __init__(self, shard_bits: int, m_bits_per_shard: int, k: int,
-                 shards: dict[int, np.ndarray]):
+                 bitmaps: DataFrame, persist: bool = True,
+                 capacity_keys: int | None = None):
         self.shard_bits = shard_bits
         self.m = m_bits_per_shard
         self.k = k
-        self.shards = shards  # shard id -> uint8 bitmap array (m/8 bytes)
+        # keys the (shard_bits, m, k) geometry was sized for at target fpp;
+        # inserting past this degrades fpp — callers rebuild then
+        self.capacity_keys = capacity_keys
+        if persist:
+            from pyspark.storagelevel import StorageLevel
 
-    # -- hashing ----------------------------------------------------------
-    @staticmethod
-    def _hashes(sha1_hex: pd.Series) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
-        """(shard_key_u32, h1, h2) — all derived from the hex digest itself,
-        vectorized via fixed-width byte views (no per-row Python)."""
-        a = sha1_hex.to_numpy(dtype="U40")
-        # U40 -> 4 bytes per char little-endian codepoints
-        codes = a.view(np.uint32).reshape(len(a), 40)
-        # hex char -> value: '0'-'9' => c-48, 'a'-'f' => c-87
-        vals = np.where(codes >= 97, codes - 87, codes - 48).astype(np.uint64)
-        def slice_val(lo: int, hi: int) -> np.ndarray:
-            out = np.zeros(len(a), dtype=np.uint64)
-            for i in range(lo, hi):
-                out = out * np.uint64(16) + vals[:, i]
-            return out
-        shard_key = slice_val(0, 8)     # first 32 bits
-        h1 = slice_val(8, 23)           # 60 bits
-        h2 = slice_val(23, 38) | np.uint64(1)  # odd
-        return shard_key, h1, h2
-
-    def _positions(self, h1: np.ndarray, h2: np.ndarray) -> list[np.ndarray]:
-        m = np.uint64(self.m)
-        return [(h1 + np.uint64(i) * h2) % m for i in range(self.k)]
-
-    def might_contain(self, sha1_hex: pd.Series) -> np.ndarray:
-        """Vectorized membership probe -> bool ndarray."""
-        n = len(sha1_hex)
-        if n == 0:
-            return np.zeros(0, dtype=bool)
-        shard_key, h1, h2 = self._hashes(sha1_hex)
-        shard_ids = (shard_key >> np.uint64(32 - self.shard_bits)).astype(np.int64) \
-            if self.shard_bits else np.zeros(n, dtype=np.int64)
-        result = np.zeros(n, dtype=bool)
-        positions = self._positions(h1, h2)
-        for sid in np.unique(shard_ids):
-            bitmap = self.shards.get(int(sid))
-            if bitmap is None:
-                continue  # empty shard -> definitely new
-            mask = shard_ids == sid
-            hit = np.ones(mask.sum(), dtype=bool)
-            for pos in positions:
-                p = pos[mask]
-                byte = bitmap[(p >> np.uint64(3)).astype(np.int64)]
-                bit = (byte >> (p & np.uint64(7)).astype(np.uint8)) & 1
-                hit &= bit.astype(bool)
-            result[mask] = hit
-        return result
-
-    # -- construction ------------------------------------------------------
-
-    MAX_SHARD_BYTES = 16 << 20  # broadcast-friendly per-shard bitmap cap
+            bitmaps = bitmaps.persist(StorageLevel.MEMORY_AND_DISK)
+        self.bitmaps = bitmaps
 
     @classmethod
-    def plan(cls, n_seen: int, fpp: float = 0.01,
-             max_shard_bytes: int | None = None) -> tuple[int, int]:
-        """Size the filter for n_seen keys: -> (shard_bits, expected_per_shard).
+    def plan(cls, n_seen: int, fpp: float = 0.01) -> tuple[int, int]:
+        """Size the filter for n_seen keys: -> (shard_bits, keys_per_shard).
 
-        shard_bits grows until every shard's bitmap fits max_shard_bytes
-        (default 16 MB); expected_per_shard carries a 1.2x safety factor.
+        shard_bits grows until every shard's bitmap fits MAX_SHARD_BYTES
+        (16 MB); keys_per_shard carries a 1.2x safety factor.
         At n=10^10, fpp=0.01 this lands at 2^10 shards of ~12 MB — each
         partial stays executor/driver friendly, vs. a single 12 GB bitmap.
         """
         n_eff = max(1, n_seen) * 1.2  # safety factor, applied before sizing
-        cap_bits = (max_shard_bytes or cls.MAX_SHARD_BYTES) * 8
+        cap_bits = cls.MAX_SHARD_BYTES * 8
         m_total = -n_eff * math.log(fpp) / (math.log(2) ** 2)
         shard_bits = 0
         while m_total / (1 << shard_bits) > cap_bits and shard_bits < 24:
             shard_bits += 1
-        expected_per_shard = max(1024, math.ceil(n_eff / (1 << shard_bits)))
-        return shard_bits, expected_per_shard
+        keys_per_shard = max(1024, math.ceil(n_eff / (1 << shard_bits)))
+        return shard_bits, keys_per_shard
+
+    @staticmethod
+    def _optimal_m(n: int, fpp: float) -> int:
+        m = int(-n * math.log(fpp) / (math.log(2) ** 2))
+        return max(64, (m + 63) // 64 * 64)  # byte/word aligned
 
     @classmethod
     def build(cls, seen: DataFrame, key_col: str = "url_sha1",
-              expected_per_shard: int | None = None, fpp: float = 0.01,
-              shard_bits: int | None = None,
-              n_seen: int | None = None, as_table: bool = False,
-              headroom: float = 1.0):
+              fpp: float = 0.01, shard_bits: int | None = None,
+              n_seen: int | None = None,
+              headroom: float = 1.0) -> "BloomTable":
         """Build from a seen table, distributed end-to-end:
 
-        1. sizing: explicit (expected_per_shard, shard_bits) or derived
-           from n_seen via plan() (counted if neither given); `headroom`
-           over-sizes by that factor so delta merges (BloomTable.
-           merge_delta) can add keys without an immediate rebuild;
+        1. sizing from the key count alone (counted when n_seen is not
+           given): plan() picks the shard count, or an explicit shard_bits
+           sizes each shard for the keys that land in it; `headroom`
+           over-sizes by that factor so merge_delta can add keys without
+           an immediate rebuild;
         2-4. see _bitmap_table (shard-repartitioned partials, cluster-side
-           OR-merge; the driver receives at most one bitmap per shard).
+           OR-merge; nothing reaches the driver).
         """
-        if expected_per_shard is None or shard_bits is None:
-            if n_seen is None:
-                n_seen = seen.count()
-            n_seen = math.ceil(max(1, n_seen) * max(1.0, headroom))
-            if shard_bits is None and expected_per_shard is None:
-                shard_bits, expected_per_shard = cls.plan(n_seen, fpp)
-            elif shard_bits is None:
-                # expected_per_shard given: shard count must hold n_seen
-                # at that per-shard load
-                shard_bits = max(
-                    0, math.ceil(math.log2(max(1.0, n_seen * 1.2 / expected_per_shard)))
-                )
-            else:
-                # shard_bits given: size each shard for the keys that will
-                # actually land in it (deriving from plan()'s AUTO shard
-                # count instead would e.g. pack n keys meant for 2^auto
-                # shards into 2^shard_bits and saturate the filter)
-                expected_per_shard = max(
-                    1024, math.ceil(n_seen * 1.2 / (1 << shard_bits))
-                )
-        m = cls._optimal_m(expected_per_shard, fpp)
-        k = max(1, round(m / max(1, expected_per_shard) * math.log(2)))
-
+        if n_seen is None:
+            n_seen = seen.count()
+        n_seen = math.ceil(max(1, n_seen) * max(1.0, headroom))
+        if shard_bits is None:
+            shard_bits, per_shard = cls.plan(n_seen, fpp)
+        else:
+            # size each shard for the keys that will actually land in it
+            # (deriving from plan()'s AUTO shard count instead would e.g.
+            # pack n keys meant for 2^auto shards into 2^shard_bits and
+            # saturate the filter)
+            per_shard = max(1024, math.ceil(n_seen * 1.2 / (1 << shard_bits)))
+        m = cls._optimal_m(per_shard, fpp)
+        k = max(1, round(m / per_shard * math.log(2)))
         bitmaps = cls._bitmap_table(seen, key_col, shard_bits, m, k)
-        if as_table:
-            return shard_bits, m, k, expected_per_shard, bitmaps
-        shards: dict[int, np.ndarray] = {
-            int(row["shard"]): np.frombuffer(row["bitmap"], dtype=np.uint8)
-            for row in bitmaps.collect()
-        }
-        return cls(shard_bits, m, k, shards)
+        return cls(shard_bits, m, k, bitmaps,
+                   capacity_keys=per_shard * (1 << shard_bits))
 
-    @classmethod
-    def _bitmap_table(cls, keys: DataFrame, key_col: str, shard_bits: int,
+    @staticmethod
+    def _bitmap_table(keys: DataFrame, key_col: str, shard_bits: int,
                       m: int, k: int, merge: bool = True) -> DataFrame:
         """(shard, bitmap) table for `keys` at EXACT (shard_bits, m, k) —
         the low-level builder shared by full builds and delta merges.
@@ -179,7 +181,6 @@ class ShardedBloom:
         3. when merge=True, OR-merge per shard INSIDE the cluster
            (groupBy(shard) + applyInPandas) — the driver never sees the
            per-partition partials."""
-        proto = cls(shard_bits, m, k, {})
         m_bytes = m // 8
         sb = shard_bits
 
@@ -189,10 +190,10 @@ class ShardedBloom:
                 s = pd.Series(batch.column(0).to_pandas())
                 if len(s) == 0:
                     continue
-                shard_key, h1, h2 = cls._hashes(s)
+                shard_key, h1, h2 = _hashes(s)
                 shard_ids = (shard_key >> np.uint64(32 - sb)).astype(np.int64) \
                     if sb else np.zeros(len(s), dtype=np.int64)
-                positions = proto._positions(h1, h2)
+                positions = _positions(h1, h2, m, k)
                 for sid in np.unique(shard_ids):
                     bitmap = local.setdefault(int(sid), np.zeros(m_bytes, dtype=np.uint8))
                     mask = shard_ids == sid
@@ -220,83 +221,6 @@ class ShardedBloom:
             _or_merge, "shard long, bitmap binary"
         )
 
-    @staticmethod
-    def _optimal_m(n: int, fpp: float) -> int:
-        m = int(-n * math.log(fpp) / (math.log(2) ** 2))
-        return max(64, (m + 63) // 64 * 64)  # byte/word aligned
-
-    def merged_with(self, other: "ShardedBloom") -> "ShardedBloom":
-        """OR-merge two blooms with identical parameters (delta update)."""
-        assert (self.shard_bits, self.m, self.k) == (other.shard_bits, other.m, other.k)
-        shards = dict(self.shards)
-        for sid, bm in other.shards.items():
-            shards[sid] = (shards[sid] | bm) if sid in shards else bm
-        return ShardedBloom(self.shard_bits, self.m, self.k, shards)
-
-
-def _or_merge(pdf: pd.DataFrame) -> pd.DataFrame:
-    out = np.frombuffer(pdf["bitmap"].iloc[0], dtype=np.uint8).copy()
-    for b in pdf["bitmap"].iloc[1:]:
-        out |= np.frombuffer(b, dtype=np.uint8)
-    return pd.DataFrame(
-        {"shard": [pdf["shard"].iloc[0]], "bitmap": [out.tobytes()]}
-    )
-
-
-def _shard_expr(key_col, shard_bits: int):
-    """Native shard id of a sha1-hex key: first 8 hex chars as uint32
-    >> (32 - shard_bits). Must match ShardedBloom._hashes exactly."""
-    return F.shiftright(
-        F.conv(F.substring(key_col, 1, 8), 16, 10).cast("long"), 32 - shard_bits
-    )
-
-
-class BloomTable:
-    """The 10^10-key bloom: bitmaps live in a (shard, bitmap) DataFrame that
-    is NEVER collected to the driver and never broadcast whole.
-
-    ``split`` probes by cogrouping the candidates with the bitmap table on
-    (shard id, salt): each applyInPandas call receives one group's
-    candidate rows plus AT MOST ONE <=16 MB shard bitmap — peak memory per
-    task is one shard, not the fleet (the round-2 probe broadcast packed
-    every shard into one dict: ~14 GB to the driver AND each executor at
-    10^10 keys). The salt replicates each bitmap row `salt_n` times so a
-    low shard count still fans out across all cores; replication shuffle
-    volume is bounded by ~2 x cores x 16 MB, independent of n_seen.
-
-    False-negative-free by the same construction as ShardedBloom; the
-    exact anti-join downstream remains the source of truth for the
-    bloom-positive rows.
-    """
-
-    def __init__(self, shard_bits: int, m_bits_per_shard: int, k: int,
-                 bitmaps: DataFrame, persist: bool = True,
-                 capacity_keys: int | None = None):
-        self.shard_bits = shard_bits
-        self.m = m_bits_per_shard
-        self.k = k
-        # keys the (shard_bits, m, k) geometry was sized for at target fpp;
-        # inserting past this degrades fpp — callers rebuild then
-        self.capacity_keys = capacity_keys
-        if persist:
-            from pyspark.storagelevel import StorageLevel
-
-            bitmaps = bitmaps.persist(StorageLevel.MEMORY_AND_DISK)
-        self.bitmaps = bitmaps
-
-    @classmethod
-    def build(cls, seen: DataFrame, key_col: str = "url_sha1",
-              expected_per_shard: int | None = None, fpp: float = 0.01,
-              shard_bits: int | None = None,
-              n_seen: int | None = None,
-              headroom: float = 1.0) -> "BloomTable":
-        sb, m, k, per_shard, bitmaps = ShardedBloom.build(
-            seen, key_col=key_col, expected_per_shard=expected_per_shard,
-            fpp=fpp, shard_bits=shard_bits, n_seen=n_seen, as_table=True,
-            headroom=headroom,
-        )
-        return cls(sb, m, k, bitmaps, capacity_keys=per_shard * (1 << sb))
-
     def merge_delta(self, delta: DataFrame, key_col: str = "url_sha1") -> "BloomTable":
         """OR-merge a key DELTA into the bitmaps — the per-round maintenance
         path. Cost is O(|delta| scan + one shuffle bounded by the FILTER
@@ -313,7 +237,7 @@ class BloomTable:
         storage — it already has a stable (shard, bitmap) schema — bounds
         recompute-on-executor-loss; the RoundStore checkpoint makes even a
         full loss a one-time rebuild, never a correctness event.)"""
-        partials = ShardedBloom._bitmap_table(
+        partials = self._bitmap_table(
             delta, key_col, self.shard_bits, self.m, self.k, merge=False
         )
         merged = (
@@ -339,8 +263,6 @@ class BloomTable:
         caller to unpersist) so the two returned branches share ONE probe
         execution — without it each branch would re-run the cogroup.
         """
-        import numpy as np
-
         from pyspark.sql import types as T
         from pyspark.storagelevel import StorageLevel
 
@@ -378,12 +300,17 @@ class BloomTable:
                     f"probe group got {len(right)} bitmaps for one shard"
                 )
             if len(right) == 0 or len(left) == 0:
+                # no bitmap: the shard has no seen keys -> definitely new
                 out["_maybe_seen"] = np.zeros(len(out), dtype=bool)
                 return out
+            # every row of the group is in this bitmap's shard
             bitmap = np.frombuffer(bytes(right["bitmap"].iloc[0]), dtype=np.uint8)
-            sid = int(right["_shard"].iloc[0])
-            bl = ShardedBloom(sb, m, k, {sid: bitmap})
-            out["_maybe_seen"] = bl.might_contain(left[key_col])
+            _, h1, h2 = _hashes(left[key_col])
+            hit = np.ones(len(left), dtype=bool)
+            for p in _positions(h1, h2, m, k):
+                byte = bitmap[(p >> np.uint64(3)).astype(np.int64)]
+                hit &= ((byte >> (p & np.uint64(7)).astype(np.uint8)) & 1).astype(bool)
+            out["_maybe_seen"] = hit
             return out
 
         tagged = (

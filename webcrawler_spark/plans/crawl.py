@@ -62,9 +62,14 @@ SITEMAP_PRIORITY = 2 * 100  # 2 x sitemap.PRIORITY_SCALE (> any <priority>)
 # in-page link position
 SITEMAP_LINK_POS = 1 << 29
 
-# auto-salt trigger: the previous round's queue had one host above this
-# share of its rows (and above CrawlConfig.hot_host_min_rows)
+# bloom prefilter gate: below this many seen keys the exact anti-join is
+# cheaper than building a bloom
+BLOOM_MIN_SEEN = 100_000
+# salting trigger: the previous round's queue had one host above this share
+# of its rows AND above HOT_HOST_MIN_ROWS rows (salting costs 3 plan
+# branches, a net loss when the single-host window task is small)
 HOT_HOST_SHARE = 0.05
+HOT_HOST_MIN_ROWS = 100_000
 
 # queue rows = candidate columns + fetch-attempt counter (retry support)
 QUEUE_SCHEMA = T.StructType(
@@ -88,26 +93,14 @@ class CrawlConfig:
     # parse failure is deterministic (same bytes every attempt) so its
     # retries always exhaust; live fetches make them transient — the
     # counter-gated plumbing is identical for both.
-    use_bloom: bool = True
-    bloom_min_seen: int = 100_000        # below this the exact anti-join is
-                                         # cheaper than building a bloom
-    bloom_fpp: float = 0.01
+    bloom_fpp: float = 0.01              # target false-positive rate of
+    # the prefilter (gated on BLOOM_MIN_SEEN)
     bloom_shard_bits: int | None = None  # None = auto-size from n_seen
                                          # (each shard bitmap <= 16 MB)
     bloom_headroom: float = 4.0          # over-size the bloom by this factor
     # so per-round maintenance is an OR-merge of the seen DELTA only; the
     # full build re-runs only when n_seen outgrows the sized capacity —
     # geometric steps, so amortized O(1) work per key over the crawl life
-    politeness_salt_buckets: int | str | None = "auto"  # int = fixed salt,
-    # None = plain per-host window, "auto" = salt with defaultParallelism
-    # buckets whenever the PREVIOUS round's committed queue (order ∪
-    # deferred) had a host above HOT_HOST_SHARE of the rows AND above
-    # hot_host_min_rows — detection reads only the committed host column,
-    # so the probe never taxes the hot path, and a hot host cannot pin its
-    # whole queue to one task. The absolute floor matters: salting costs 3
-    # extra plan branches, a net LOSS when the single-host window task is
-    # already small (measured 2x slower on a 2k-page fixture crawl).
-    hot_host_min_rows: int = 100_000
     seen_buckets: int | None = None      # bucket count of the seen table
     # (RoundStore.ensure_seen_table), pinned at store creation
     # (None = defaultParallelism); pick ~fleet-cores at 10^10
@@ -122,11 +115,6 @@ class CrawlConfig:
     # queued (drop-forever — politeness only PACES fetches, it cannot stop
     # a trap host from growing the frontier without bound) and surfaces as
     # error rows (stage='admission', message='host_cap'). None = off.
-    robots_from_pages: bool = False      # self-configure from the corpus:
-    # derive robots_bodies from the pages table's own
-    # scheme://host/robots.txt rows (robots_bodies_from_pages) — rules,
-    # Crawl-delay budgets, and Sitemap bootstrap with no side channel.
-    # An explicit robots_bodies argument wins.
     round_seconds: float = 60.0          # polite wall-clock a round models;
     # with robots_bodies, hosts declaring `Crawl-delay: d` default to
     # budget_per_round = max(1, floor(round_seconds / d)) unless the caller's
@@ -294,11 +282,11 @@ def run_crawl(
         spark, cfg.seen_buckets or spark.sparkContext.defaultParallelism
     )
 
-    if robots_bodies is None and cfg.robots_from_pages:
-        # one column-pruned scan; bounded (one row per host) so the
-        # checkpoint keeps the robots scan out of every derived plan
-        robots_bodies = robots_bodies_from_pages(pages).localCheckpoint()
     if robots_bodies is not None:
+        # bounded (one row per robots file): the checkpoint keeps the
+        # robots scan (e.g. robots_bodies_from_pages) out of every plan
+        # derived from it
+        robots_bodies = robots_bodies.localCheckpoint()
         from ..sources.robots import (
             budgets_from_crawl_delay,
             crawl_delays,
@@ -375,7 +363,7 @@ def run_crawl(
 
         scratch: list = []
         prefilter = None
-        if cfg.use_bloom and seen is not None and n_seen_total >= cfg.bloom_min_seen:
+        if seen is not None and n_seen_total >= BLOOM_MIN_SEEN:
             if (
                 bloom_table is not None
                 and bloom_table.capacity_keys is not None
@@ -426,12 +414,7 @@ def run_crawl(
             "url_sha1", "url", F.lit(rnd).cast("long").alias("first_round")
         )
 
-        if cfg.politeness_salt_buckets == "auto":
-            salt_buckets = (
-                spark.sparkContext.defaultParallelism if hot_host else None
-            )
-        else:
-            salt_buckets = cfg.politeness_salt_buckets
+        salt_buckets = spark.sparkContext.defaultParallelism if hot_host else None
         fetch_now, deferred_next = assign_fetch_slots(
             queue, budgets, salt_buckets=salt_buckets
         )
@@ -626,22 +609,24 @@ def run_crawl(
         deferred = store.read(spark, rnd, "deferred")
         retry = store.read(spark, rnd, "retry")
 
-        # hot-host probe for next round's auto-salt: committed host column
-        # of this round's queue (order ∪ deferred) — a cheap columnar scan
-        if cfg.politeness_salt_buckets == "auto" and budgets is not None:
-            q_hosts = store.read(spark, rnd, "order").select("host").unionByName(
-                deferred.select("host")
-            )
-            top = (
-                q_hosts.groupBy("host").count()
-                .agg(F.max("count").alias("mx"), F.sum("count").alias("total"))
-                .first()
-            )
-            hot_host = bool(
-                top and top["total"]
-                and top["mx"] > cfg.hot_host_min_rows
-                and top["mx"] / top["total"] > HOT_HOST_SHARE
-            )
+        # hot-host probe for next round's salting: committed host column
+        # of this round's queue (order ∪ deferred) — a cheap columnar scan,
+        # skipped when the committed counts alone rule a hot host out (no
+        # host can hold more than HOT_HOST_MIN_ROWS of a queue that small)
+        if budgets is not None:
+            hot_host = False
+            if n_fetch + deferred_c > HOT_HOST_MIN_ROWS:
+                q_hosts = store.read(spark, rnd, "order").select(
+                    "host").unionByName(deferred.select("host"))
+                top = (
+                    q_hosts.groupBy("host").count()
+                    .agg(F.max("count").alias("mx"), F.sum("count").alias("total"))
+                    .first()
+                )
+                hot_host = bool(
+                    top["mx"] > HOT_HOST_MIN_ROWS
+                    and top["mx"] / top["total"] > HOT_HOST_SHARE
+                )
         stats.update({"admitted": n_admitted, "fetched": n_fetch,
                       "items": items_c, "errors": errors_c,
                       "deferred": deferred_c, "retried": retry_c,
