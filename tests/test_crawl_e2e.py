@@ -106,6 +106,36 @@ def test_politeness_budgets_enforced(spark, fixture_web, tmp_path, monkeypatch):
             assert row["count"] <= budgets[row["host"]]
 
 
+def test_hot_host_probe_skipped_below_row_floor(spark, fixture_web, tmp_path,
+                                               monkeypatch):
+    """A budgeted crawl whose queues never exceed HOT_HOST_MIN_ROWS skips
+    the hot-host probe: the commit's observe() counts already rule a hot
+    host out, so no round re-reads its committed order after the commit."""
+    from webcrawler_spark.storage import RoundStore
+
+    reads: list[str] = []
+    real_read = RoundStore.read
+
+    def read(self, spark, rnd, name):
+        reads.append(name)
+        return real_read(self, spark, rnd, name)
+
+    monkeypatch.setattr(RoundStore, "read", read)
+    robots_df = spark.read.parquet(fixture_web["paths"]["robots"])
+    result = run_crawl(
+        spark,
+        spark.read.parquet(fixture_web["paths"]["pages"]),
+        spark.read.parquet(fixture_web["paths"]["seeds"]),
+        CrawlConfig(whitelist=WHITELIST, max_depth=2, max_rounds=3),
+        checkpoint_dir=str(tmp_path / "ckpt_probe"),
+        budgets=robots_df.select("host", "budget_per_round"),
+    )
+    assert any(m["deferred"] > 0 for m in result.metrics)  # budgets bind
+    assert "deferred" in reads  # the post-commit re-reads go through read
+    assert "order" not in reads
+    assert not any(m["salted"] or m["hot_host_next"] for m in result.metrics)
+
+
 def test_items_and_byte_identical_text(spark, fixture_web, tmp_path):
     golden, result = _run_both(spark, fixture_web, tmp_path, "combined",
                                with_politeness=True)
