@@ -228,17 +228,22 @@ def crawl(pages: list[dict], seeds: list[dict], cfg: CrawlConfig) -> CrawlResult
             if ct == "application/xml":
                 # Sitemaps protocol: index children re-enter admission as
                 # fetchable URLs, urlset entries as page candidates with
-                # their <priority> — same constants/regexes as the engine
+                # their <priority> — same constants/regexes/root gate as
+                # the engine; other XML (feeds) yields nothing
                 from webcrawler_spark.plans.crawl import (
                     SITEMAP_LINK_POS,
                     SITEMAP_PRIORITY,
                 )
                 from webcrawler_spark.sources.sitemap import (
+                    is_sitemap_root_py,
                     parse_sitemaps_py,
                     priority_units_py,
                 )
 
-                for blk in parse_sitemaps_py(page["html"].decode("utf-8")):
+                body = page["html"].decode("utf-8")
+                if not is_sitemap_root_py(body):
+                    continue
+                for blk in parse_sitemaps_py(body):
                     if blk["kind"] == "sitemap":
                         lp = SITEMAP_LINK_POS + blk["pos"]
                         pr = SITEMAP_PRIORITY

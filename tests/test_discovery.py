@@ -291,3 +291,46 @@ def test_resume_adds_sitemap_pointers(spark, tmp_path):
     for u in LEAVES:
         assert (u in first_round) == ("/private/" not in u)
 
+
+def test_feed_xml_is_not_a_sitemap(spark, tmp_path):
+    """An RSS feed served as .xml (application/xml) that carries <url><loc>
+    and <sitemap><loc> blocks is fetched, but it is not a sitemap: none of
+    its <loc>s is admitted. A real urlset behind an XML declaration and
+    leading whitespace still is. Engine ≡ oracle."""
+    feed_url = f"http://{HOT_HOST}/feed.xml"
+    sm_url = f"http://{HOT_HOST}/sm/real.xml"
+    injected = f"http://{HOT_HOST}/news/injected"
+    injected_sm = f"http://{HOT_HOST}/sm/injected.xml"
+    listed = f"http://{HOT_HOST}/news/listed"
+    feed = (
+        '<?xml version="1.0"?><rss version="2.0"><channel><item>'
+        f"<url><loc>{injected}</loc></url>"
+        f"<sitemap><loc>{injected_sm}</loc></sitemap>"
+        "</item></channel></rss>"
+    )
+    real = '\n <?xml version="1.0" encoding="UTF-8"?>\n' + _urlset({listed: 0.5})
+    pages = [
+        {"url": feed_url, "html": feed.encode()},
+        {"url": sm_url, "html": real.encode()},
+        {"url": injected, "html": _leaf_html([])},
+        {"url": injected_sm, "html": _urlset({injected: 0.9}).encode()},
+        {"url": listed, "html": _leaf_html([])},
+    ]
+    seeds = [{"url": feed_url, "order": 0}, {"url": sm_url, "order": 1}]
+    pages_df = spark.createDataFrame(
+        [(p["url"], bytearray(p["html"])) for p in pages], "url string, html binary"
+    )
+    seeds_df = spark.createDataFrame(
+        [(s["url"], s["order"]) for s in seeds], "url string, order long"
+    )
+    cfg = CrawlConfig(whitelist=WHITELIST, max_depth=4, max_rounds=6,
+                      parsers="generic")
+    result = run_crawl(spark, pages_df, seeds_df, cfg,
+                       checkpoint_dir=str(tmp_path / "ckpt"))
+    golden = oracle_crawl(pages, seeds, OracleConfig(
+        whitelist=WHITELIST, max_depth=4, max_rounds=6, parsers="generic",
+    ))
+    _assert_match(spark, golden, result)
+    seen = {r["url"] for r in result.seen(spark).collect()}
+    assert feed_url in seen and listed in seen
+    assert injected not in seen and injected_sm not in seen

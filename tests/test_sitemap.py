@@ -144,3 +144,30 @@ def test_recrawl_candidates_rules(spark):
         # dup: max lastmod 2024-03-01 > 2024-02-01; max priority 0.6 -> 60
         "http://e/dup": ("stale", 60),
     }
+
+
+def test_sitemap_root_gate_engine_equals_python_twin(spark):
+    """is_sitemap_root (engine) and is_sitemap_root_py (oracle) agree: a
+    <urlset>/<sitemapindex> root, after whitespace and an XML declaration,
+    is a sitemap; feeds and other XML with <url><loc> blocks are not."""
+    from webcrawler_spark.sources.sitemap import is_sitemap_root, is_sitemap_root_py
+
+    loc = "<url><loc>http://www.example.com/x</loc></url>"
+    bodies = {
+        URLSET: True,
+        INDEX: True,
+        f"<urlset>{loc}</urlset>": True,
+        f' \n\t<?xml version="1.0"?>\r\n <sitemapindex></sitemapindex>': True,
+        f'<?xml version="1.0"?><rss><channel>{loc}</channel></rss>': False,
+        f'<feed xmlns="http://www.w3.org/2005/Atom">{loc}</feed>': False,
+        f"<rss><!-- <urlset> -->{loc}</rss>": False,
+        "<?xml version='1.0'": False,
+        "": False,
+    }
+    df = spark.createDataFrame([(b,) for b in bodies], "body string")
+    got = {
+        r["body"]: r["ok"]
+        for r in df.select("body", is_sitemap_root(F.col("body")).alias("ok")).collect()
+    }
+    assert got == bodies
+    assert {b: is_sitemap_root_py(b) for b in bodies} == bodies

@@ -533,7 +533,13 @@ def run_crawl(
         # admission as fetchable URLs, urlset entries as page candidates
         # carrying their <priority>. Per-body projection (regex once per
         # sitemap FILE); a crawl with no xml fetches pays an empty branch.
-        from ..sources.sitemap import parse_sitemaps, priority_units
+        # Only a <urlset>/<sitemapindex> root is a sitemap: other XML
+        # (feeds) yields no candidates.
+        from ..sources.sitemap import (
+            is_sitemap_root,
+            parse_sitemaps,
+            priority_units,
+        )
 
         xml_pages = fetched.filter(
             (F.col("status") == 200)
@@ -543,7 +549,7 @@ def run_crawl(
             F.col("depth").alias("_pdepth"),
             "host",
             F.decode(F.col("html"), "UTF-8").alias("body"),
-        )
+        ).filter(is_sitemap_root(F.col("body")))
         sm = parse_sitemaps(xml_pages, carry_cols=("_parent", "_pdepth"))
         sm_children = sm.select(
             F.col("loc").alias("url"),

@@ -55,6 +55,35 @@ def priority_units_py(priority: float) -> int:
     return int(math.floor(priority * PRIORITY_SCALE + 0.5))
 
 
+# a sitemap file's root element (after an optional <?xml ...?> prolog);
+# any other XML (RSS/Atom feeds, ...) is not parsed for <loc> blocks
+_SITEMAP_ROOTS = ("<urlset", "<sitemapindex")
+_XML_SPACE = " \t\r\n"
+
+
+def is_sitemap_root(body) -> "F.Column":
+    """True when the decoded body's root element is <urlset> or
+    <sitemapindex>: leading whitespace and one <?...?> declaration are
+    skipped, then a prefix test — byte scans, no regex. Gate for
+    :func:`parse_sitemaps` in the crawl, so a feed carrying <url><loc>
+    blocks can neither inject candidates nor take sitemap fetch slots."""
+    ws = F.lit(_XML_SPACE)
+    head = F.ltrim(body, ws)
+    head = F.when(
+        head.startswith("<?"),
+        F.ltrim(F.substr(head, F.instr(head, "?>") + 2), ws),
+    ).otherwise(head)
+    return head.startswith(_SITEMAP_ROOTS[0]) | head.startswith(_SITEMAP_ROOTS[1])
+
+
+def is_sitemap_root_py(body: str) -> bool:
+    """Python twin of :func:`is_sitemap_root` (tests/oracle.py)."""
+    head = body.lstrip(_XML_SPACE)
+    if head.startswith("<?"):
+        head = head[head.find("?>") + 2:].lstrip(_XML_SPACE)
+    return head.startswith(_SITEMAP_ROOTS)
+
+
 def parse_sitemaps(
     bodies: DataFrame,
     host_col: str = "host",
