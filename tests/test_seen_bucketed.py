@@ -58,7 +58,7 @@ def test_bucket_count_pinned(spark, tmp_path):
     # a later open with a different request keeps the pinned count
     s2 = RoundStore(root)
     s2.ensure_seen_table(spark, n_buckets=16)
-    assert s2._seen_buckets == 4
+    assert s2.seen_buckets == 4
 
 
 def test_anti_join_has_no_seen_side_exchange(spark, store):
@@ -92,6 +92,20 @@ def test_one_file_per_bucket_per_insert(spark, store):
         f for f in glob.glob(os.path.join(store._seen_location(), "*.parquet"))
     ]
     assert len(files) <= 8
+
+
+def test_fresh_store_appends_one_file_per_bucket(spark, store):
+    """A second RoundStore over an existing store (never ran
+    ensure_seen_table itself) appends with the PINNED bucket count: one
+    more file per bucket, not one per default partition per bucket —
+    which would trip compaction that many rounds early."""
+    store.ensure_seen_table(spark, n_buckets=4)
+    store.append_seen_bucketed(_keys(spark, 0, 2000), rnd=0)
+    assert store.seen_files_per_bucket() == 1
+    s2 = RoundStore(store.root)
+    s2.append_seen_bucketed(_keys(spark, 2000, 4000).repartition(16), rnd=1)
+    assert s2.seen_files_per_bucket() == store.seen_files_per_bucket() == 2
+    assert s2.read_seen_bucketed(spark, upto=1).count() == 4000
 
 
 def test_compaction_bounds_files_preserves_plan_and_data(spark, store):

@@ -26,6 +26,17 @@ import time
 from pyspark.sql import DataFrame, SparkSession
 
 
+def _write_json_atomic(path: str, obj: dict) -> None:
+    """Write ``obj`` beside ``path`` and rename it into place: readers see
+    the old file or the new one, never a torn write. Every commit point of
+    the store (round manifests, their done/stats rewrites, the store meta)
+    goes through this one os.replace."""
+    tmp = path + ".tmp"
+    with open(tmp, "w") as f:
+        json.dump(obj, f)
+    os.replace(tmp, path)
+
+
 class RoundStore:
     def __init__(self, root: str):
         self.root = root
@@ -94,20 +105,14 @@ class RoundStore:
             "stats": stats or {},
             "done": done,
         }
-        tmp = self._manifest_path(rnd) + ".tmp"
-        with open(tmp, "w") as f:
-            json.dump(manifest, f)
-        os.replace(tmp, self._manifest_path(rnd))  # atomic commit point
+        _write_json_atomic(self._manifest_path(rnd), manifest)  # commit point
         return manifest
 
     def mark_done(self, rnd: int) -> None:
         """Flip the done flag on an already-committed round (atomic)."""
         manifest = self.manifest(rnd)
         manifest["done"] = True
-        tmp = self._manifest_path(rnd) + ".tmp"
-        with open(tmp, "w") as f:
-            json.dump(manifest, f)
-        os.replace(tmp, self._manifest_path(rnd))
+        _write_json_atomic(self._manifest_path(rnd), manifest)
 
     def update_stats(self, rnd: int, stats: dict) -> None:
         """Replace the stats block of a committed round (atomic rewrite).
@@ -117,10 +122,7 @@ class RoundStore:
         sees complete lineage."""
         manifest = self.manifest(rnd)
         manifest["stats"] = stats
-        tmp = self._manifest_path(rnd) + ".tmp"
-        with open(tmp, "w") as f:
-            json.dump(manifest, f)
-        os.replace(tmp, self._manifest_path(rnd))
+        _write_json_atomic(self._manifest_path(rnd), manifest)
 
     # -- resume ------------------------------------------------------------
     def committed_rounds(self) -> list[int]:
@@ -207,10 +209,14 @@ class RoundStore:
         return {}
 
     def _write_meta(self, meta: dict) -> None:
-        tmp = self._meta_path() + ".tmp"
-        with open(tmp, "w") as f:
-            json.dump(meta, f)
-        os.replace(tmp, self._meta_path())
+        _write_json_atomic(self._meta_path(), meta)
+
+    @property
+    def seen_buckets(self) -> int:
+        """Bucket count pinned in _store_meta.json by ensure_seen_table —
+        the one source every appender and counter reads, so a second
+        RoundStore over the same root writes the same layout."""
+        return int(self._read_meta()["seen_buckets"])
 
     def check_seen_table_resumable(self) -> None:
         """Refuse to resume a store whose committed seen keys are not in the
@@ -267,7 +273,6 @@ class RoundStore:
             meta["seen_buckets"] = int(n_buckets)
             meta["seen_provider"] = provider
             self._write_meta(meta)
-        self._seen_buckets = n_buckets
         self._drop_if_location_stale(spark)
         self._clean_stale_seen_dirs()
         spark.sql(self.seen_table_ddl(n_buckets, provider))
@@ -333,13 +338,10 @@ class RoundStore:
         under data/<partition>/ subdirectories."""
         import glob as _glob
 
-        n = getattr(self, "_seen_buckets", None) or int(
-            self._read_meta().get("seen_buckets", 1) or 1
-        )
         files = _glob.glob(
             os.path.join(self._seen_location(), "**", "part-*"), recursive=True
         )
-        return len(files) / max(1, n)
+        return len(files) / self.seen_buckets
 
     def compact_seen_bucketed(self, spark: SparkSession, upto: int) -> str:
         """Bucket-preserving compaction: rewrite the seen table into a
@@ -389,7 +391,7 @@ class RoundStore:
         file per bucket instead of tasks x buckets."""
         from pyspark.sql import functions as F
 
-        n = getattr(self, "_seen_buckets", None) or 32
+        n = self.seen_buckets
         (
             keys.select(
                 F.col("url_sha1").cast("string").alias("url_sha1"),
