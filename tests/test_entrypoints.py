@@ -1,12 +1,17 @@
-"""The spark-submit jobs and the tools scripts still import and compile.
+"""The spark-submit jobs and the tools scripts still import and compile,
+and every CrawlConfig knob is exercised somewhere.
 
 The imports run inside the tests, not at module level, so a job that
 imports a deleted name fails here as a test instead of dropping out of
 the suite as a collection error.
 """
 
+import dataclasses
 import importlib
 import py_compile
+import re
+import subprocess
+import sys
 from pathlib import Path
 
 import pytest
@@ -26,3 +31,29 @@ def test_tool_compiles(script, tmp_path):
     py_compile.compile(
         str(REPO / script), cfile=str(tmp_path / "out.pyc"), doraise=True
     )
+
+
+def test_crawl_round_help_parses():
+    out = subprocess.run(
+        [sys.executable, str(REPO / "jobs" / "crawl_round.py"), "--help"],
+        capture_output=True, text=True, timeout=60, check=True,
+    ).stdout
+    assert "--checkpoint" in out and "--robots-from-pages" in out
+
+
+def test_every_crawl_config_knob_is_exercised():
+    """Every CrawlConfig field is set by some test or benchmark workload:
+    a knob nothing exercises is a plan nobody checks, and goes instead."""
+    from webcrawler_spark.plans.crawl import CrawlConfig
+
+    sources = "".join(
+        p.read_text()
+        for d in ("tests", "perfbench")
+        for p in sorted((REPO / d).glob("*.py"))
+        if p.name != Path(__file__).name
+    )
+    unused = [
+        f.name for f in dataclasses.fields(CrawlConfig)
+        if not re.search(rf"\b{f.name}\b", sources)
+    ]
+    assert not unused, f"CrawlConfig fields no test or workload sets: {unused}"
