@@ -98,8 +98,7 @@ class BloomTable:
     MAX_SHARD_BYTES = 16 << 20  # per-shard bitmap cap: one task holds one
 
     def __init__(self, shard_bits: int, m_bits_per_shard: int, k: int,
-                 bitmaps: DataFrame, persist: bool = True,
-                 capacity_keys: int | None = None):
+                 bitmaps: DataFrame, capacity_keys: int, persist: bool = True):
         self.shard_bits = shard_bits
         self.m = m_bits_per_shard
         self.k = k
@@ -164,8 +163,7 @@ class BloomTable:
         m = cls._optimal_m(per_shard, fpp)
         k = max(1, round(m / per_shard * math.log(2)))
         bitmaps = cls._bitmap_table(seen, key_col, shard_bits, m, k)
-        return cls(shard_bits, m, k, bitmaps,
-                   capacity_keys=per_shard * (1 << shard_bits))
+        return cls(shard_bits, m, k, bitmaps, per_shard * (1 << shard_bits))
 
     @staticmethod
     def _bitmap_table(keys: DataFrame, key_col: str, shard_bits: int,
@@ -248,8 +246,8 @@ class BloomTable:
         )
         self.unpersist()
         return BloomTable(
-            self.shard_bits, self.m, self.k, merged, persist=False,
-            capacity_keys=self.capacity_keys,
+            self.shard_bits, self.m, self.k, merged, self.capacity_keys,
+            persist=False,
         )
 
     def unpersist(self) -> None:

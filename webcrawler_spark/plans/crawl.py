@@ -366,7 +366,6 @@ def run_crawl(
         if seen is not None and n_seen_total >= BLOOM_MIN_SEEN:
             if (
                 bloom_table is not None
-                and bloom_table.capacity_keys is not None
                 and n_seen_total * 1.2 > bloom_table.capacity_keys
             ):
                 # seen outgrew the sized capacity (fpp would degrade):
@@ -622,10 +621,10 @@ def run_crawl(
         if budgets is not None:
             hot_host = False
             if n_fetch + deferred_c > HOT_HOST_MIN_ROWS:
-                q_hosts = store.read(spark, rnd, "order").select(
-                    "host").unionByName(deferred.select("host"))
                 top = (
-                    q_hosts.groupBy("host").count()
+                    store.read(spark, rnd, "order").select("host")
+                    .unionByName(deferred.select("host"))
+                    .groupBy("host").count()
                     .agg(F.max("count").alias("mx"), F.sum("count").alias("total"))
                     .first()
                 )
