@@ -86,17 +86,13 @@ def test_engine_matches_oracle_with_politeness(spark, fixture_web, tmp_path):
 
 
 def test_politeness_budgets_enforced(spark, fixture_web, tmp_path, monkeypatch):
-    """The hot-host fixture (one host owns well over HOT_HOST_SHARE of the
-    queue) with the hot-host row floor lowered to fixture scale: the salted
-    two-phase top-k engages in at least one round, order/seen/metrics
-    still match the oracle exactly, and no host fetches past its budget in
-    any round."""
+    """With the hot-host row floor lowered to fixture scale (so the salted
+    two-phase top-k runs on the hot host), order/seen/metrics still match
+    the oracle exactly and no host fetches past its budget in any round."""
     monkeypatch.setattr(crawl_mod, "HOT_HOST_MIN_ROWS", 0)
     golden, result = _run_both(spark, fixture_web, tmp_path, "combined",
                                with_politeness=True)
     _assert_match(spark, golden, result)
-    assert any(m.get("salted") for m in result.metrics), \
-        "salting never engaged on the hot-host fixture"
     budgets = {r["host"]: r["budget_per_round"] for r in fixture_web["robots"]}
     per_round_host = (
         result.order(spark).groupBy("round", "host").count().collect()
@@ -104,6 +100,19 @@ def test_politeness_budgets_enforced(spark, fixture_web, tmp_path, monkeypatch):
     for row in per_round_host:
         if row["host"] in budgets:
             assert row["count"] <= budgets[row["host"]]
+
+
+def test_auto_salt_on_hot_host(spark, fixture_web, tmp_path, monkeypatch):
+    """The hot-host fixture (one host owns well over HOT_HOST_SHARE of the
+    queue) with the hot-host row floor lowered to fixture scale: the
+    salted two-phase top-k engages in at least one round, with
+    order/seen/metrics still matching the oracle exactly."""
+    monkeypatch.setattr(crawl_mod, "HOT_HOST_MIN_ROWS", 0)
+    golden, result = _run_both(spark, fixture_web, tmp_path, "combined",
+                               with_politeness=True)
+    _assert_match(spark, golden, result)
+    assert any(m.get("salted") for m in result.metrics), \
+        "auto-salt never engaged on the hot-host fixture"
 
 
 def test_hot_host_probe_skipped_below_row_floor(spark, fixture_web, tmp_path,

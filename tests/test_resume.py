@@ -97,7 +97,8 @@ def reference(spark, fixture_web, tmp_path_factory):
 
 def _kill_mid_dataset_writes(mp, spark, crash_dir):
     """One dataset write of round KILL_ROUND fails; the round's other
-    writes (and its seen insert) run to completion beside it."""
+    writes run to completion beside it, and the seen insert lands after
+    them."""
     target = os.path.join(f"r={KILL_ROUND}", "next_candidates")
     real = DataFrameWriter.parquet
 

@@ -52,6 +52,64 @@ def test_orphan_round_invisible(spark, store):
     assert out.count() == 50  # 200..250 survive exactly once
 
 
+def test_commit_inserts_seen_keys_after_dataset_writes(spark, store,
+                                                       monkeypatch):
+    """The crawl's commit shape: round datasets read a persisted admitted
+    set (candidates anti-joined against the seen table) while the seen
+    insert of those same keys rides along as an extra write. The insert
+    drops every cached plan over the seen table's path, so it must land
+    only after every dataset write has finished — a dataset write still
+    running would lose its cached input mid-job. One dataset write is
+    slowed so an insert running free would land first; the insert still
+    adds one file per bucket."""
+    import threading
+    import time
+
+    from pyspark import StorageLevel
+    from pyspark.sql import DataFrameWriter
+
+    store.ensure_seen_table(spark, n_buckets=4)
+    store.append_seen_bucketed(_keys(spark, 0, 100), rnd=0)
+    admitted = anti_join_seen(
+        _keys(spark, 50, 250), store.read_seen_bucketed(spark, upto=0)
+    ).persist(StorageLevel.MEMORY_AND_DISK)
+
+    events: list[str] = []
+    lock = threading.Lock()
+    real_parquet = DataFrameWriter.parquet
+    real_insert = DataFrameWriter.insertInto
+
+    def parquet(self, path, *a, **kw):
+        if path.endswith("slow"):
+            time.sleep(2)
+        real_parquet(self, path, *a, **kw)
+        with lock:
+            events.append("dataset")
+
+    def insert_into(self, table, *a, **kw):
+        with lock:
+            events.append("insert")
+        real_insert(self, table, *a, **kw)
+
+    monkeypatch.setattr(DataFrameWriter, "parquet", parquet)
+    monkeypatch.setattr(DataFrameWriter, "insertInto", insert_into)
+    try:
+        manifest = store.commit_round(
+            1,
+            {"fast": admitted, "slow": admitted.select("url_sha1")},
+            extra_writes=[
+                lambda: store.append_seen_bucketed(admitted.select("url_sha1"), 1)
+            ],
+        )
+    finally:
+        admitted.unpersist()
+    assert events == ["dataset", "dataset", "insert"]
+    assert manifest["counts"] == {"fast": 150, "slow": 150}
+    assert store.read(spark, 1, "slow").count() == 150
+    assert store.read_seen_bucketed(spark, upto=1).count() == 250
+    assert store.seen_files_per_bucket() == 2.0  # one file per bucket per insert
+
+
 def test_bucket_count_pinned(spark, tmp_path):
     root = str(tmp_path / "ckpt")
     RoundStore(root).ensure_seen_table(spark, n_buckets=4)

@@ -21,6 +21,7 @@ from __future__ import annotations
 import json
 import os
 import shutil
+import threading
 import time
 
 from pyspark.sql import DataFrame, SparkSession
@@ -40,6 +41,7 @@ def _write_json_atomic(path: str, obj: dict) -> None:
 class RoundStore:
     def __init__(self, root: str):
         self.root = root
+        self._insert_gate: threading.Event | None = None  # set by commit_round
         self.rounds_dir = os.path.join(root, "rounds")
         self.manifest_dir = os.path.join(root, "_manifests")
         os.makedirs(self.rounds_dir, exist_ok=True)
@@ -87,15 +89,33 @@ class RoundStore:
                 "overwrite"
             ).parquet(path)
 
-        n_jobs = len(datasets) + len(extra_writes or [])
-        with ThreadPoolExecutor(max_workers=min(8, n_jobs)) as pool:
-            futures = [pool.submit(write_one, item) for item in datasets.items()]
-            # extra_writes: zero-arg callables committed with the round (e.g.
-            # the bucketed-seen insert) — they run before the manifest rename,
-            # so a committed manifest implies they completed
-            futures += [pool.submit(fn) for fn in (extra_writes or [])]
-            for fut in futures:
-                fut.result()
+        # extra_writes: zero-arg callables committed with the round (e.g. the
+        # bucketed-seen insert). They start alongside the dataset writes and
+        # finish before the manifest rename, so a committed manifest implies
+        # they completed. A seen insert made here computes its keys at once
+        # but lands only after every dataset write has finished (the gate,
+        # see append_seen_bucketed): an insert into a table makes Spark drop
+        # every cached plan over the table's path, and a dataset write still
+        # reading a persisted input derived from it (the crawl's admitted
+        # set) would lose its blocks mid-job ("Block rdd_N_M does not exist")
+        gate = threading.Event()
+        self._insert_gate = gate
+        extra_writes = extra_writes or []
+        try:
+            with ThreadPoolExecutor(
+                max_workers=max(1, min(8, len(datasets)) + len(extra_writes))
+            ) as pool:
+                extra = [pool.submit(fn) for fn in extra_writes]
+                try:
+                    for fut in [pool.submit(write_one, item)
+                                for item in datasets.items()]:
+                        fut.result()
+                finally:
+                    gate.set()
+                for fut in extra:
+                    fut.result()
+        finally:
+            self._insert_gate = None
         counts = {name: int(obs.get["rows"]) for name, obs in observations.items()}
         manifest = {
             "round": rnd,
@@ -392,15 +412,17 @@ class RoundStore:
         from pyspark.sql import functions as F
 
         n = self.seen_buckets
-        (
-            keys.select(
-                F.col("url_sha1").cast("string").alias("url_sha1"),
-                F.lit(rnd).cast("long").alias("round"),
-            )
-            .repartition(n, "url_sha1")
-            .write.mode("append")
-            .insertInto(self.seen_table)
-        )
+        staged = keys.select(
+            F.col("url_sha1").cast("string").alias("url_sha1"),
+            F.lit(rnd).cast("long").alias("round"),
+        ).repartition(n, "url_sha1")
+        gate = self._insert_gate
+        if gate is not None:
+            # inside commit_round: shuffle the keys now, beside the dataset
+            # writes, and insert once they have all finished
+            staged = staged.localCheckpoint()
+            gate.wait()
+        staged.write.mode("append").insertInto(self.seen_table)
 
     def read_seen_bucketed(self, spark: SparkSession, upto: int) -> DataFrame:
         """All committed seen keys (round <= upto) — exchange-free join side."""
