@@ -85,31 +85,35 @@ def test_engine_matches_oracle_with_politeness(spark, fixture_web, tmp_path):
     _assert_match(spark, golden, result)
 
 
-def test_politeness_budgets_enforced(spark, fixture_web, tmp_path, monkeypatch):
-    """With the hot-host row floor lowered to fixture scale (so the salted
-    two-phase top-k runs on the hot host), order/seen/metrics still match
-    the oracle exactly and no host fetches past its budget in any round."""
-    monkeypatch.setattr(crawl_mod, "HOT_HOST_MIN_ROWS", 0)
-    golden, result = _run_both(spark, fixture_web, tmp_path, "combined",
-                               with_politeness=True)
-    _assert_match(spark, golden, result)
+@pytest.fixture(scope="module")
+def salted_crawl(spark, fixture_web, tmp_path_factory):
+    """The budgeted combined crawl with the hot-host row floor lowered to
+    fixture scale, so the salted two-phase top-k runs on the hot host (one
+    host owns well over HOT_HOST_SHARE of the queue). Run once; the tests
+    below each check one property of it."""
+    with pytest.MonkeyPatch.context() as mp:
+        mp.setattr(crawl_mod, "HOT_HOST_MIN_ROWS", 0)
+        return _run_both(spark, fixture_web, tmp_path_factory.mktemp("salted"),
+                         "combined", with_politeness=True)
+
+
+def test_politeness_budgets_enforced(spark, fixture_web, salted_crawl):
+    """No host fetches past its budget in any round, salted or not."""
+    _golden, result = salted_crawl
     budgets = {r["host"]: r["budget_per_round"] for r in fixture_web["robots"]}
     per_round_host = (
         result.order(spark).groupBy("round", "host").count().collect()
     )
+    assert any(row["host"] in budgets for row in per_round_host)
     for row in per_round_host:
         if row["host"] in budgets:
             assert row["count"] <= budgets[row["host"]]
 
 
-def test_auto_salt_on_hot_host(spark, fixture_web, tmp_path, monkeypatch):
-    """The hot-host fixture (one host owns well over HOT_HOST_SHARE of the
-    queue) with the hot-host row floor lowered to fixture scale: the
-    salted two-phase top-k engages in at least one round, with
+def test_auto_salt_on_hot_host(spark, salted_crawl):
+    """The salted top-k engages in at least one round, with
     order/seen/metrics still matching the oracle exactly."""
-    monkeypatch.setattr(crawl_mod, "HOT_HOST_MIN_ROWS", 0)
-    golden, result = _run_both(spark, fixture_web, tmp_path, "combined",
-                               with_politeness=True)
+    golden, result = salted_crawl
     _assert_match(spark, golden, result)
     assert any(m.get("salted") for m in result.metrics), \
         "auto-salt never engaged on the hot-host fixture"

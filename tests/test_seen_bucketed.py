@@ -242,11 +242,13 @@ def _crawl_vs_oracle(spark, fixture_web, ckpt, **cfg_kw):
 
 
 def test_crawl_with_aggressive_compaction_matches(spark, fixture_web, tmp_path):
-    """Compacting after (almost) every round must not change crawl
-    semantics: identical order + seen set vs the oracle, and the store
-    ends compacted."""
+    """Compacting after (almost) every round, over a seen table with a
+    bucket count of its own, must not change crawl semantics: identical
+    order + seen set vs the oracle, the store pins the configured bucket
+    count, and it ends compacted."""
     res = _crawl_vs_oracle(spark, fixture_web, str(tmp_path / "ckpt"),
-                           seen_compact_files_per_bucket=1)
+                           seen_compact_files_per_bucket=1, seen_buckets=3)
+    assert res.store.seen_buckets == 3
     assert res.store.seen_files_per_bucket() <= 2  # compacted near the end
 
 

@@ -148,8 +148,9 @@ def test_recrawl_candidates_rules(spark):
 
 def test_sitemap_root_gate_engine_equals_python_twin(spark):
     """is_sitemap_root (engine) and is_sitemap_root_py (oracle) agree: a
-    <urlset>/<sitemapindex> root, after whitespace and an XML declaration,
-    is a sitemap; feeds and other XML with <url><loc> blocks are not."""
+    <urlset>/<sitemapindex> root, after a BOM, whitespace, processing
+    instructions and comments, is a sitemap; feeds and other XML with
+    <url><loc> blocks are not."""
     from webcrawler_spark.sources.sitemap import is_sitemap_root, is_sitemap_root_py
 
     loc = "<url><loc>http://www.example.com/x</loc></url>"
@@ -158,6 +159,18 @@ def test_sitemap_root_gate_engine_equals_python_twin(spark):
         INDEX: True,
         f"<urlset>{loc}</urlset>": True,
         f' \n\t<?xml version="1.0"?>\r\n <sitemapindex></sitemapindex>': True,
+        # WordPress core's wp-sitemap.xml: declaration, then a stylesheet PI
+        '<?xml version="1.0" encoding="UTF-8"?><?xml-stylesheet type="text/xsl"'
+        ' href="https://e/wp-sitemap-index.xsl" ?>\n<sitemapindex'
+        ' xmlns="http://www.sitemaps.org/schemas/sitemap/0.9"></sitemapindex>': True,
+        # a generator comment (with a '?>' and '<url' inside) before the root
+        f'<?xml version="1.0"?>\n<!-- generated by x?> <url> -->\n<urlset>{loc}</urlset>': True,
+        f"\ufeff<?xml version='1.0'?><urlset>{loc}</urlset>": True,
+        "\ufeff<urlset/>": True,
+        f"<urlsetx>{loc}</urlsetx>": False,
+        f"<?xml version='1.0'?><!-- <urlset> --><rss>{loc}</rss>": False,
+        f"\ufeff<rss>{loc}</rss>": False,
+        f"<!-- unterminated <urlset>{loc}</urlset>": False,
         f'<?xml version="1.0"?><rss><channel>{loc}</channel></rss>': False,
         f'<feed xmlns="http://www.w3.org/2005/Atom">{loc}</feed>': False,
         f"<rss><!-- <urlset> -->{loc}</rss>": False,
@@ -171,3 +184,6 @@ def test_sitemap_root_gate_engine_equals_python_twin(spark):
     }
     assert got == bodies
     assert {b: is_sitemap_root_py(b) for b in bodies} == bodies
+    # the crawl gates the UTF-8 decode of the fetched bytes: a BOM survives it
+    raw = spark.createDataFrame([(b"\xef\xbb\xbf<urlset>" + loc.encode(),)], "html binary")
+    assert raw.select(is_sitemap_root(F.decode("html", "UTF-8"))).first()[0] is True

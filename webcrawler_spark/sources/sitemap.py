@@ -55,33 +55,35 @@ def priority_units_py(priority: float) -> int:
     return int(math.floor(priority * PRIORITY_SCALE + 0.5))
 
 
-# a sitemap file's root element (after an optional <?xml ...?> prolog);
-# any other XML (RSS/Atom feeds, ...) is not parsed for <loc> blocks
-_SITEMAP_ROOTS = ("<urlset", "<sitemapindex")
-_XML_SPACE = " \t\r\n"
+# a sitemap file's root element is <urlset> or <sitemapindex>, after an
+# optional BOM and any whitespace, <?...?> processing instructions (the XML
+# declaration, WordPress's xml-stylesheet) and <!--...--> comments; any
+# other XML (RSS/Atom feeds, ...) is not parsed for <loc> blocks. Anchored,
+# and each prolog item is an atomic group, so a non-sitemap fails at its
+# first element and no lazy match is re-extended on backtracking. Only the
+# four XML whitespace characters are spelled out: Java's and Python's \s
+# differ outside ASCII, and this pattern runs on both.
+_SITEMAP_ROOT = (
+    r"(?s)^\uFEFF?(?>[ \t\r\n]+|<\?.*?\?>|<!--.*?-->)*"
+    r"<(?:urlset|sitemapindex)(?=[ \t\r\n/>])"
+)
 
 
 def is_sitemap_root(body) -> "F.Column":
     """True when the decoded body's root element is <urlset> or
-    <sitemapindex>: leading whitespace and one <?...?> declaration are
-    skipped, then a prefix test — byte scans, no regex. Gate for
-    :func:`parse_sitemaps` in the crawl, so a feed carrying <url><loc>
-    blocks can neither inject candidates nor take sitemap fetch slots."""
-    ws = F.lit(_XML_SPACE)
-    head = F.ltrim(body, ws)
-    head = F.when(
-        head.startswith("<?"),
-        F.ltrim(F.substr(head, F.instr(head, "?>") + 2), ws),
-    ).otherwise(head)
-    return head.startswith(_SITEMAP_ROOTS[0]) | head.startswith(_SITEMAP_ROOTS[1])
+    <sitemapindex> (:data:`_SITEMAP_ROOT`). Gate for :func:`parse_sitemaps`
+    in the crawl, so a feed carrying <url><loc> blocks can neither inject
+    candidates nor take sitemap fetch slots. The regex runs once per XML
+    body, like the parse's own."""
+    return body.rlike(_SITEMAP_ROOT)
 
 
 def is_sitemap_root_py(body: str) -> bool:
-    """Python twin of :func:`is_sitemap_root` (tests/oracle.py)."""
-    head = body.lstrip(_XML_SPACE)
-    if head.startswith("<?"):
-        head = head[head.find("?>") + 2:].lstrip(_XML_SPACE)
-    return head.startswith(_SITEMAP_ROOTS)
+    """Python twin of :func:`is_sitemap_root` (tests/oracle.py): the same
+    pattern, so engine and oracle cannot drift."""
+    import re
+
+    return re.match(_SITEMAP_ROOT, body) is not None
 
 
 def parse_sitemaps(
