@@ -122,8 +122,8 @@ def test_auto_salt_on_hot_host(spark, salted_crawl):
 def test_hot_host_probe_skipped_below_row_floor(spark, fixture_web, tmp_path,
                                                monkeypatch):
     """A budgeted crawl whose queues never exceed HOT_HOST_MIN_ROWS skips
-    the hot-host probe: the commit's observe() counts already rule a hot
-    host out, so no round re-reads its committed order after the commit."""
+    the hot-host probe: the committed observe() counts already rule a hot
+    host out, so no round prologue re-reads the previous round's order."""
     from webcrawler_spark.storage import RoundStore
 
     reads: list[str] = []
@@ -144,9 +144,9 @@ def test_hot_host_probe_skipped_below_row_floor(spark, fixture_web, tmp_path,
         budgets=robots_df.select("host", "budget_per_round"),
     )
     assert any(m["deferred"] > 0 for m in result.metrics)  # budgets bind
-    assert "deferred" in reads  # the post-commit re-reads go through read
+    assert "deferred" in reads  # the round prologue reads go through read
     assert "order" not in reads
-    assert not any(m["salted"] or m["hot_host_next"] for m in result.metrics)
+    assert not any(m["salted"] for m in result.metrics)
 
 
 def test_items_and_byte_identical_text(spark, fixture_web, tmp_path):

@@ -1,5 +1,6 @@
 """The spark-submit jobs and the tools scripts still import and compile,
-and every CrawlConfig knob is exercised somewhere.
+the crawl job runs and resumes end to end, and every CrawlConfig knob is
+exercised somewhere.
 
 The imports run inside the tests, not at module level, so a job that
 imports a deleted name fails here as a test instead of dropping out of
@@ -9,6 +10,8 @@ the suite as a collection error.
 import dataclasses
 import importlib
 import io
+import json
+import os
 import py_compile
 import subprocess
 import sys
@@ -40,6 +43,36 @@ def test_crawl_round_help_parses():
         capture_output=True, text=True, timeout=60, check=True,
     ).stdout
     assert "--checkpoint" in out and "--robots-from-pages" in out
+
+
+def _crawl_round(tmp_path, paths, *extra):
+    """Run jobs/crawl_round.py as its own process and return the JSON
+    summary it prints last."""
+    env = dict(os.environ)
+    env["PYTHONPATH"] = os.pathsep.join(
+        p for p in (str(REPO), env.get("PYTHONPATH")) if p
+    )
+    out = subprocess.run(
+        [sys.executable, str(REPO / "jobs" / "crawl_round.py"),
+         "--pages", paths["pages"], "--seeds", paths["seeds"],
+         "--checkpoint", str(tmp_path / "ckpt"),
+         "--max-depth", "1", "--max-rounds", "1", *extra],
+        capture_output=True, text=True, timeout=600, check=True,
+        cwd=str(tmp_path), env=env,
+    ).stdout
+    return json.loads(out.strip().splitlines()[-1])
+
+
+def test_crawl_round_runs_and_resumes(fixture_web, tmp_path):
+    """The spark-submit entry crawls the fixture web end to end, and a
+    --resume of the finished checkpoint prints the same round metrics."""
+    paths = fixture_web["paths"]
+    first = _crawl_round(tmp_path, paths)
+    again = _crawl_round(tmp_path, paths, "--resume")
+    assert first["rounds"] == 2
+    assert [m["round"] for m in first["metrics"]] == [0, 1]
+    assert first["metrics"][1]["fetched"] > 0
+    assert again == first
 
 
 def _names_used(path: Path) -> set[str]:

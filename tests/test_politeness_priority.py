@@ -8,6 +8,7 @@ priority column (it is one more sort key, never a new shuffle)."""
 
 import re
 
+import pytest
 from pyspark.sql import functions as F
 
 from webcrawler_spark.operators.politeness import assign_fetch_slots, ranked
@@ -31,12 +32,14 @@ def _exchanges(df) -> list[str]:
     return re.findall(r"Exchange hashpartitioning\(host", plan)
 
 
-def test_priority_ranks_first_then_depth_then_sha(spark):
+@pytest.mark.parametrize("salt_buckets", [None, 4])
+def test_priority_ranks_first_then_depth_then_sha(spark, salt_buckets):
     q = _queue(spark, with_priority=True)
     budgets = spark.createDataFrame(
         [("h0", 3), ("h1", 3)], "host string, budget_per_round long"
     )
-    fetch_now, deferred = assign_fetch_slots(q, budgets)
+    fetch_now, deferred = assign_fetch_slots(q, budgets,
+                                             salt_buckets=salt_buckets)
     got = sorted((r["host"], r["priority"], r["depth"], r["url_sha1"])
                  for r in fetch_now.collect())
     # per host: all slots go to priority-20 rows (there are >3 of them),
@@ -49,6 +52,14 @@ def test_priority_ranks_first_then_depth_then_sha(spark):
     # deferral keeps the column intact
     assert "priority" in deferred.columns
     assert deferred.filter(F.col("priority").isNull()).count() == 0
+    # the salted two-phase top-k splits the queue exactly as the plain rank
+    plain_now, plain_deferred = assign_fetch_slots(q, budgets)
+
+    def rows(df):
+        return sorted(tuple(r) for r in df.select(*q.columns).collect())
+
+    assert rows(fetch_now) == rows(plain_now)
+    assert rows(deferred) == rows(plain_deferred)
 
 
 def test_priority_is_one_sort_key_not_a_new_exchange(spark):

@@ -12,11 +12,21 @@ The kill-point matrix covers every boundary of the commit protocol:
 * ``mid_compaction`` — the compacted seen table's new versioned directory
   is written, the meta pointer has not advanced;
 * ``mid_export`` — the ordered export is staged, the rename did not run.
+  The crawl's last round had committed, so the resume commits no new
+  round.
+
+A separate test kills a budgeted crawl whose later rounds salt the
+politeness window:
+
+* ``after_manifest_rename`` — round k's manifest rename landed, the
+  process died right after it: the manifest alone must carry the round
+  (its stats, and the next round's salting decision).
 
 Every kill except the first is injected in-process by a monkeypatched
 raise at that boundary. Each case checks that the resumed crawl equals
 the uninterrupted one on (round, url) order, the seen set with its
-first_round, the items and the export bytes.
+first_round, the items, the export bytes, the per-round metrics and the
+round count.
 """
 
 import glob
@@ -27,6 +37,7 @@ import shutil
 import pytest
 from pyspark.sql import DataFrameWriter
 
+import webcrawler_spark.plans.crawl as crawl_mod
 from webcrawler_spark.fixtures import WHITELIST
 from webcrawler_spark.plans.crawl import CrawlConfig, run_crawl
 from webcrawler_spark.storage import RoundStore
@@ -81,18 +92,47 @@ def _drop_rounds_after(store: RoundStore, k: int) -> None:
 
 @pytest.fixture(scope="module")
 def reference(spark, fixture_web, tmp_path_factory):
-    """The uninterrupted crawl every kill point must reproduce."""
+    """The uninterrupted crawl every kill point must reproduce, with the
+    destination of every os.replace it made."""
     paths = fixture_web["paths"]
     pages_df = spark.read.parquet(paths["pages"])
     seeds_df = spark.read.parquet(paths["seeds"])
     full_dir = str(tmp_path_factory.mktemp("resume_full"))
-    full = run_crawl(spark, pages_df, seeds_df, _cfg(), checkpoint_dir=full_dir)
+    renames: list[str] = []
+    real = os.replace
+
+    def replace(src, dst, *a, **kw):
+        renames.append(os.fspath(dst))
+        return real(src, dst, *a, **kw)
+
+    with pytest.MonkeyPatch.context() as mp:
+        mp.setattr(os, "replace", replace)
+        full = run_crawl(spark, pages_df, seeds_df, _cfg(),
+                         checkpoint_dir=full_dir)
     assert full.rounds > KILL_ROUND + 1  # needs something to kill
     return {
         "dir": full_dir,
         "state": _collect_state(spark, full),
         "export": _export_bytes(full_dir),
+        "metrics": full.metrics,
+        "rounds": full.rounds,
+        "renames": renames,
     }
+
+
+def test_one_manifest_write_per_round(reference):
+    """Each round's manifest is renamed into place once, at its commit;
+    the last round's is renamed once more, for the done flag."""
+    store = RoundStore(reference["dir"])
+    rounds = store.committed_rounds()
+    assert rounds == list(range(reference["rounds"]))
+    writes = [
+        os.path.basename(d) for d in reference["renames"]
+        if os.path.dirname(d) == store.manifest_dir
+    ]
+    want = [f"round_{r}.json" for r in rounds] + [f"round_{rounds[-1]}.json"]
+    assert writes == want
+    assert store.manifest(rounds[-1])["done"]
 
 
 def _kill_mid_dataset_writes(mp, spark, crash_dir):
@@ -217,6 +257,54 @@ def test_kill_after_round_k_resume(spark, fixture_web, reference, tmp_path,
                         checkpoint_dir=crash_dir, resume=True)
     assert _collect_state(spark, resumed) == reference["state"]
     assert _export_bytes(crash_dir) == reference["export"]
+    assert resumed.metrics == reference["metrics"]
+    assert resumed.rounds == reference["rounds"]
+
+
+def _budgeted_crawl(spark, fixture_web, ckpt, resume=False):
+    """The resume-matrix crawl under the fixture's robots budgets."""
+    paths = fixture_web["paths"]
+    robots_df = spark.read.parquet(paths["robots"])
+    return run_crawl(
+        spark, spark.read.parquet(paths["pages"]),
+        spark.read.parquet(paths["seeds"]), _cfg(), checkpoint_dir=ckpt,
+        budgets=robots_df.select("host", "budget_per_round"), resume=resume,
+    )
+
+
+def test_kill_after_manifest_rename_resume(spark, fixture_web, tmp_path,
+                                           monkeypatch):
+    """Round KILL_ROUND's manifest rename lands and the process dies right
+    after it. With the hot-host floor at 0 the rounds after it salt, so
+    the resumed crawl must recover both the round's stats and the next
+    round's salting from the committed manifests alone."""
+    monkeypatch.setattr(crawl_mod, "HOT_HOST_MIN_ROWS", 0)
+    full_dir = str(tmp_path / "full")
+    full = _budgeted_crawl(spark, fixture_web, full_dir)
+    assert any(m["salted"] for m in full.metrics[KILL_ROUND + 1:])
+
+    crash_dir = str(tmp_path / "crash")
+    target = os.path.join(crash_dir, "_manifests", f"round_{KILL_ROUND}.json")
+    real = os.replace
+
+    def replace(src, dst, *a, **kw):
+        first = os.fspath(dst) == target and not os.path.exists(target)
+        out = real(src, dst, *a, **kw)
+        if first:
+            raise InjectedKill(target)
+        return out
+
+    with monkeypatch.context() as mp:
+        mp.setattr(os, "replace", replace)
+        with pytest.raises(InjectedKill):
+            _budgeted_crawl(spark, fixture_web, crash_dir)
+    assert RoundStore(crash_dir).last_committed() == KILL_ROUND
+
+    resumed = _budgeted_crawl(spark, fixture_web, crash_dir, resume=True)
+    assert _collect_state(spark, resumed) == _collect_state(spark, full)
+    assert _export_bytes(crash_dir) == _export_bytes(full_dir)
+    assert resumed.metrics == full.metrics
+    assert resumed.rounds == full.rounds
 
 
 def test_export_is_ordered_and_enriched(spark, reference):
@@ -243,3 +331,5 @@ def test_resume_on_done_store_is_noop(spark, fixture_web, tmp_path):
     first = run_crawl(spark, pages_df, seeds_df, cfg, checkpoint_dir=d)
     again = run_crawl(spark, pages_df, seeds_df, cfg, checkpoint_dir=d, resume=True)
     assert _collect_state(spark, first) == _collect_state(spark, again)
+    assert again.metrics == first.metrics
+    assert again.rounds == first.rounds

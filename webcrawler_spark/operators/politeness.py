@@ -41,18 +41,15 @@ def ranked(queue: DataFrame, salt_buckets: int | None = None,
         order = [F.col("priority").desc()] + order
     if salt_buckets and max_budget:
         # phase 1: top max_budget per (host, salt) — shrinks hot hosts from
-        # |host| rows to ≤ max_budget × salt_buckets before the global rank
-        salted = queue.withColumn(
-            "_salt", F.pmod(F.xxhash64("url_sha1"), F.lit(salt_buckets))
-        )
+        # |host| rows to ≤ max_budget × salt_buckets before the global rank.
+        # The losers are the same tagged frame's rows past max_budget: each
+        # row lands on exactly one side, with no join back on url_sha1
         w_local = Window.partitionBy("host", "_salt").orderBy(*order)
-        survivors = (
-            salted.withColumn("_lr", F.row_number().over(w_local))
-            .filter(F.col("_lr") <= max_budget)
-            .drop("_salt", "_lr")
-        )
-        losers = salted.join(survivors.select("url_sha1"), "url_sha1", "left_anti") \
-                       .drop("_salt", "_lr")
+        tagged = queue.withColumn(
+            "_salt", F.pmod(F.xxhash64("url_sha1"), F.lit(salt_buckets))
+        ).withColumn("_lr", F.row_number().over(w_local))
+        survivors = tagged.filter(F.col("_lr") <= max_budget).drop("_salt", "_lr")
+        losers = tagged.filter(F.col("_lr") > max_budget).drop("_salt", "_lr")
         w_global = Window.partitionBy("host").orderBy(*order)
         top = survivors.withColumn("slot_rank", F.row_number().over(w_global))
         # losers can never be within budget: give them rank past any budget

@@ -20,13 +20,17 @@ side of the plan: at 10^10-frontier scale the anti-join prunes the fetch
 join's probe side.
 
 Every round commits atomically through RoundStore (frontier, seen delta,
-items, errors, per-partition lineage, metrics) so a killed job resumes at
-the last manifest.
+items, errors, per-partition lineage, metrics), with one manifest write.
+Every round after the first starts from the previous round's manifest and
+committed datasets alone (the round prologue: read the carry-over, compact
+the seen table, maintain the bloom, decide salting and whether to stop),
+so a killed job resumes at the last manifest through the same code path a
+continuing crawl takes.
 """
 
 from __future__ import annotations
 
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -125,7 +129,22 @@ class CrawlConfig:
 class CrawlResult:
     store: RoundStore
     rounds: int = 0
-    metrics: list[dict] = field(default_factory=list)
+
+    @property
+    def metrics(self) -> list[dict]:
+        """Per-round stats, read back from the committed manifests: what
+        each round knew when it started, plus the row counts its commit
+        observed."""
+        out = []
+        for rnd in range(self.rounds):
+            m = self.store.manifest(rnd)
+            c = m["counts"]
+            out.append({
+                **m["stats"], "admitted": c["seen_delta"], "fetched": c["order"],
+                "items": c["items"], "errors": c["errors"],
+                "deferred": c["deferred"], "retried": c["retry"],
+            })
+        return out
 
     def order(self, spark: SparkSession) -> DataFrame | None:
         return self.store.read_all(spark, "order")
@@ -246,6 +265,26 @@ def _items_schema_img(fetched: DataFrame, rnd: int) -> DataFrame:
     )
 
 
+def _hot_host(spark: SparkSession, store: RoundStore, rnd: int,
+              counts: dict, deferred: DataFrame) -> bool:
+    """Salting trigger for the round after ``rnd``: one host holds more
+    than HOT_HOST_MIN_ROWS rows and more than HOT_HOST_SHARE of round
+    ``rnd``'s committed queue (order ∪ deferred). The probe is a columnar
+    scan of the committed host column, skipped when the commit's counts
+    alone rule a hot host out (no host can hold more than the floor of a
+    queue that small)."""
+    if counts["order"] + counts["deferred"] <= HOT_HOST_MIN_ROWS:
+        return False
+    top = (
+        store.read(spark, rnd, "order").select("host")
+        .unionByName(deferred.select("host"))
+        .groupBy("host").count()
+        .agg(F.max("count").alias("mx"), F.sum("count").alias("total"))
+        .first()
+    )
+    return top["mx"] > HOT_HOST_MIN_ROWS and top["mx"] / top["total"] > HOT_HOST_SHARE
+
+
 def run_crawl(
     spark: SparkSession,
     pages: DataFrame,
@@ -272,8 +311,6 @@ def run_crawl(
     result = CrawlResult(store=store)
     last = store.last_committed() if resume else None
     if last is not None:
-        manifests = [store.manifest(r) for r in store.committed_rounds()]
-        result.metrics = [m["stats"] for m in manifests]
         if store.is_done():
             result.rounds = last + 1
             return result
@@ -309,83 +346,99 @@ def run_crawl(
                 delay_budgets.join(budgets.select("host"), "host", "left_anti")
             ).localCheckpoint()
 
-    # ---- resume or cold start -------------------------------------------
-    if last is not None:
-        candidates = store.read(spark, last, "next_candidates")
-        deferred = store.read(spark, last, "deferred")
-        retry = store.read(spark, last, "retry")
-        seen = store.read_seen_bucketed(spark, upto=last)
-        rnd = last + 1
-        # driver-side running count from the committed manifests — no
-        # re-count of the seen table on resume
-        n_seen_total = sum(m["counts"]["seen_delta"] for m in manifests)
-        # skew signal from the last committed round's queue, so a resumed
-        # run salts its first round when that queue had a hot host (instead
-        # of waiting one round to re-learn); absent if the kill came
-        # between the commit and its stats update
-        hot_host = bool(manifests[-1]["stats"].get("hot_host_next", False))
-    else:
-        candidates = seeds_to_candidates(seeds)
-        deferred = _empty(spark, QUEUE_SCHEMA)
-        retry = _empty(spark, QUEUE_SCHEMA)
-        seen = None
-        rnd = 0
-        n_seen_total = 0
-        hot_host = False
-    if robots_bodies is not None:
-        # Sitemap: pointers bootstrap the frontier alongside the seeds. On
-        # resume too: a crawl started without robots_bodies never admitted
-        # them, and the seen anti-join drops the ones already admitted
-        candidates = candidates.unionByName(
-            sitemap_pointer_candidates(robots_bodies)
-        )
-    n_candidates = candidates.count()
-
     # pages is scanned every round: url + html only (column pruning reaches
     # the parquet scan; `text`/`lang` are never read by the crawl plan)
     pages_fetch = pages.select("url", "html")
 
     # the bloom lives ACROSS rounds: built once from the full seen set when
     # the threshold is crossed (or on resume), then maintained per round by
-    # OR-merging only that round's committed seen_delta (BloomTable.
+    # OR-merging only the previous round's committed seen_delta (BloomTable.
     # merge_delta) — never rebuilt from the full 10^10-key corpus per round
     bloom_table = None
 
+    start = rnd = 0 if last is None else last + 1
+    # committed seen keys of the rounds before rnd-1 (the prologue adds
+    # round rnd-1's): a driver-side sum of manifest counts, no table scan
+    n_seen = sum(
+        store.manifest(k)["counts"]["seen_delta"] for k in range(rnd - 1)
+    )
     while rnd <= cfg.max_rounds:
+        first = rnd == start  # the first round this call runs
+        pointers = first and robots_bodies is not None  # injects Sitemap: URLs
+        scratch: list = []
+        prefilter = salt_buckets = None
+        if rnd == 0:
+            candidates = seeds_to_candidates(seeds)
+            deferred = _empty(spark, QUEUE_SCHEMA)
+            retry = _empty(spark, QUEUE_SCHEMA)
+            seen = _empty(
+                spark, T.StructType([T.StructField("url_sha1", T.StringType())])
+            )
+        else:
+            # ---- prologue: round rnd starts from round rnd-1's manifest
+            # and committed datasets alone, so a continuing crawl and a
+            # resumed one run the same round
+            prev = store.manifest(rnd - 1)["counts"]
+            # stop when nothing is left to admit, fetch or retry; a round
+            # that injects Sitemap: pointers still runs
+            if (
+                not pointers
+                and prev["next_candidates"] == prev["deferred"] == prev["retry"] == 0
+            ):
+                break
+            candidates = store.read(spark, rnd - 1, "next_candidates")
+            deferred = store.read(spark, rnd - 1, "deferred")
+            retry = store.read(spark, rnd - 1, "retry")
+            if (
+                cfg.seen_compact_files_per_bucket
+                and store.seen_files_per_bucket() > cfg.seen_compact_files_per_bucket
+            ):
+                store.compact_seen_bucketed(spark, upto=rnd - 1)
+            seen = store.read_seen_bucketed(spark, upto=rnd - 1)
+            n_seen += prev["seen_delta"]
+            if n_seen >= BLOOM_MIN_SEEN:
+                if bloom_table is None or n_seen * 1.2 > bloom_table.capacity_keys:
+                    # first use, or seen outgrew the sized capacity (fpp
+                    # would degrade): build ONCE at the next headroom step.
+                    # Bitmaps stay a persisted (shard, bitmap) DataFrame;
+                    # the probe cogroups candidates with it so each task
+                    # holds ONE <=16 MB shard — no whole-filter broadcast
+                    if bloom_table is not None:
+                        bloom_table.unpersist()
+                    bloom_table = BloomTable.build(
+                        seen, n_seen=n_seen,
+                        fpp=cfg.bloom_fpp, shard_bits=cfg.bloom_shard_bits,
+                        headroom=cfg.bloom_headroom,
+                    )
+                elif prev["seen_delta"] > 0:
+                    # fold ONLY the previous round's committed delta into
+                    # the bitmaps (cost ~ |delta| + filter size)
+                    bloom_table = bloom_table.merge_delta(
+                        store.read(spark, rnd - 1, "seen_delta").select("url_sha1")
+                    )
+                prefilter = (
+                    lambda d, _bt=bloom_table: _bt.split(d, scratch=scratch)
+                )
+            if budgets is not None and _hot_host(spark, store, rnd - 1, prev,
+                                                 deferred):
+                salt_buckets = spark.sparkContext.defaultParallelism
+        if pointers:
+            # Sitemap: pointers bootstrap the frontier alongside the seeds.
+            # On resume too: a crawl started without robots_bodies never
+            # admitted them, and the seen anti-join drops the ones already
+            # admitted
+            candidates = candidates.unionByName(
+                sitemap_pointer_candidates(robots_bodies)
+            )
+        n_candidates = candidates.count() if first else prev["next_candidates"]
+
         # all per-round counts come from observe() metrics captured during
         # the commit writes (see RoundStore.commit_round) — the only full
         # passes per round are: admission, the politeness window, and the
         # fetch-join + parse (each executed exactly once thanks to the
         # persists below).
-        seen_df = seen if seen is not None else _empty(
-            spark, T.StructType([T.StructField("url_sha1", T.StringType())])
-        )
-
-        scratch: list = []
-        prefilter = None
-        if seen is not None and n_seen_total >= BLOOM_MIN_SEEN:
-            if (
-                bloom_table is not None
-                and n_seen_total * 1.2 > bloom_table.capacity_keys
-            ):
-                # seen outgrew the sized capacity (fpp would degrade):
-                # rebuild ONCE at the next headroom step, not every round
-                bloom_table.unpersist()
-                bloom_table = None
-            if bloom_table is None:
-                # bitmaps stay a persisted (shard, bitmap) DataFrame; the
-                # probe cogroups candidates with it so each task holds ONE
-                # <=16 MB shard — no whole-filter broadcast at 10^10 keys
-                bloom_table = BloomTable.build(
-                    seen, n_seen=n_seen_total,
-                    fpp=cfg.bloom_fpp, shard_bits=cfg.bloom_shard_bits,
-                    headroom=cfg.bloom_headroom,
-                )
-            prefilter = (
-                lambda d, _bt=bloom_table: _bt.split(d, scratch=scratch)
-            )
         admitted = admission.admit(
-            candidates, seen_df, cfg.whitelist, cfg.max_depth,
+            candidates, seen, cfg.whitelist, cfg.max_depth,
             robots=robots, bloom_prefilter=prefilter, scratch=scratch,
         )
         admitted = admitted.persist(StorageLevel.MEMORY_AND_DISK)
@@ -413,7 +466,6 @@ def run_crawl(
             "url_sha1", "url", F.lit(rnd).cast("long").alias("first_round")
         )
 
-        salt_buckets = spark.sparkContext.defaultParallelism if hot_host else None
         fetch_now, deferred_next = assign_fetch_slots(
             queue, budgets, salt_buckets=salt_buckets
         )
@@ -571,16 +623,15 @@ def run_crawl(
             F.sum(F.when(F.col("status") == 200, 1).otherwise(0)).alias("fetched_ok"),
         ).withColumn("round", F.lit(rnd).cast("long"))
 
+        # the manifest is written once, at the commit: stats hold only what
+        # the round knew when it started; CrawlResult.metrics adds the row
+        # counts the commit observed
         stats = {
             "round": rnd,
             "candidates": n_candidates,
-            "admitted": 0,  # filled below from the commit's observe() counts
-            "fetched": 0,
-            "items": 0,
-            "errors": 0,
-            "deferred": 0,
+            "salted": bool(salt_buckets),
         }
-        manifest = store.commit_round(
+        store.commit_round(
             rnd,
             {
                 "seen_delta": seen_delta,
@@ -602,71 +653,13 @@ def run_crawl(
             ],
         )
 
-        # post-commit stats: observe() metrics captured during the writes
-        counts = manifest["counts"]
-        n_admitted = counts["seen_delta"]
-        n_fetch = counts["order"]
-        items_c = counts["items"]
-        errors_c = counts["errors"]
-        deferred_c = counts["deferred"]
-        retry_c = counts["retry"]
-        n_seen_total += n_admitted
-        deferred = store.read(spark, rnd, "deferred")
-        retry = store.read(spark, rnd, "retry")
-
-        # hot-host probe for next round's salting: committed host column
-        # of this round's queue (order ∪ deferred) — a cheap columnar scan,
-        # skipped when the committed counts alone rule a hot host out (no
-        # host can hold more than HOT_HOST_MIN_ROWS of a queue that small)
-        if budgets is not None:
-            hot_host = False
-            if n_fetch + deferred_c > HOT_HOST_MIN_ROWS:
-                top = (
-                    store.read(spark, rnd, "order").select("host")
-                    .unionByName(deferred.select("host"))
-                    .groupBy("host").count()
-                    .agg(F.max("count").alias("mx"), F.sum("count").alias("total"))
-                    .first()
-                )
-                hot_host = bool(
-                    top["mx"] > HOT_HOST_MIN_ROWS
-                    and top["mx"] / top["total"] > HOT_HOST_SHARE
-                )
-        stats.update({"admitted": n_admitted, "fetched": n_fetch,
-                      "items": items_c, "errors": errors_c,
-                      "deferred": deferred_c, "retried": retry_c,
-                      "salted": bool(salt_buckets),
-                      "hot_host_next": bool(hot_host)})
-        store.update_stats(rnd, stats)
-        result.metrics.append(stats)
-
-        candidates = store.read(spark, rnd, "next_candidates")
-        if (
-            cfg.seen_compact_files_per_bucket
-            and store.seen_files_per_bucket() > cfg.seen_compact_files_per_bucket
-        ):
-            store.compact_seen_bucketed(spark, upto=rnd)
-        seen = store.read_seen_bucketed(spark, upto=rnd)
-
-        # incremental bloom maintenance: fold ONLY this round's committed
-        # delta into the persisted bitmaps (cost ~ |delta| + filter size),
-        # instead of rebuilding from the full seen set next round
-        if bloom_table is not None and n_admitted > 0:
-            bloom_table = bloom_table.merge_delta(
-                store.read(spark, rnd, "seen_delta").select("url_sha1")
-            )
-
         for df in scratch:  # safe: admitted materialized during commit
             df.unpersist()
         admitted.unpersist()
         fetch_now.unpersist()
         fetched.unpersist()
         parsed_all.unpersist()
-
-        n_candidates = counts["next_candidates"]
         rnd += 1
-        if n_candidates == 0 and deferred_c == 0 and retry_c == 0:
-            break
 
     if bloom_table is not None:
         bloom_table.unpersist()

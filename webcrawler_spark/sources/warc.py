@@ -133,16 +133,19 @@ def write_warc_sink(
     of WARC/1.0 response records, Common-Crawl layout (per-record gzip
     members, so downstream range requests decompress one record).
 
-    Deterministic output: rows are range-partitioned and sorted on the URL
+    Deterministic output: rows are hash-partitioned and sorted on the URL
     column, and the file name is the partition id — same input, same
-    ``files``, byte-identical archive set on any cluster. Content-Type
+    ``files``, byte-identical archive set on any cluster. (A range
+    partitioning would sample its bounds with a seed that changes per
+    job, so the same row could land in a different file.) Content-Type
     comes from the URL extension (the same mapping the crawl's fetch uses)
     and WARC-Date from ``ts_col`` (UTC, second granularity; NULL -> epoch).
 
     Returns the lazy one-row-per-file manifest (warc_file, n_records,
     n_bytes); any action on it performs the export. Task retries rewrite
-    their partition's file in place (open 'wb' truncates), so a failed/
-    speculative attempt cannot duplicate records in a file — but the
+    their partition's file in place (open 'wb' truncates), so a failed
+    attempt cannot duplicate records in a file. Speculative execution must
+    be off: two live attempts of one task write the same local path. The
     directory is not committed atomically; wrap in a staging-dir rename
     (RoundStore.write_export pattern) if the destination must flip
     all-or-nothing."""
@@ -167,7 +170,7 @@ def write_warc_sink(
         ).alias("d"),
         F.col(body_col).cast("binary").alias("b"),
         F.substring_index(U.content_type_for(F.col(url_col)), ";", 1).alias("m"),
-    ).repartitionByRange(n_files, F.col("u")).sortWithinPartitions("u")
+    ).repartition(n_files, "u").sortWithinPartitions("u")
 
     suffix = ".warc.gz" if gzip_members else ".warc"
 

@@ -30,8 +30,8 @@ from pyspark.sql import DataFrame, SparkSession
 def _write_json_atomic(path: str, obj: dict) -> None:
     """Write ``obj`` beside ``path`` and rename it into place: readers see
     the old file or the new one, never a torn write. Every commit point of
-    the store (round manifests, their done/stats rewrites, the store meta)
-    goes through this one os.replace."""
+    the store (round manifests, the done flip, the store meta) goes through
+    this one os.replace."""
     tmp = path + ".tmp"
     with open(tmp, "w") as f:
         json.dump(obj, f)
@@ -132,16 +132,6 @@ class RoundStore:
         """Flip the done flag on an already-committed round (atomic)."""
         manifest = self.manifest(rnd)
         manifest["done"] = True
-        _write_json_atomic(self._manifest_path(rnd), manifest)
-
-    def update_stats(self, rnd: int, stats: dict) -> None:
-        """Replace the stats block of a committed round (atomic rewrite).
-
-        Row counts are cheapest to read from the committed parquet metadata
-        AFTER the commit; this folds them back into the manifest so resume
-        sees complete lineage."""
-        manifest = self.manifest(rnd)
-        manifest["stats"] = stats
         _write_json_atomic(self._manifest_path(rnd), manifest)
 
     # -- resume ------------------------------------------------------------
