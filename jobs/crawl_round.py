@@ -6,12 +6,14 @@ Usage:
         --pages PATH --seeds PATH [--robots PATH] \
         [--robots-bodies PATH | --robots-from-pages] [--round-seconds 60] \
         --checkpoint DIR [--whitelist d1,d2] [--max-depth 3] \
-        [--max-rounds 20] [--max-fetch-retries 0] [--seen-buckets N] \
-        [--resume]
+        [--max-rounds 20] [--max-fetch-retries 0] [--seen-buckets N]
 
-All engine state lives in the checkpoint dir (per-round atomic manifests),
-so re-submitting with --resume continues exactly where a killed job
-stopped. On a real cluster nothing changes except --master and the
+The checkpoint dir is the crawl's state (per-round atomic manifests):
+re-submitting the same command continues the crawl from its last committed
+round, so a killed job, or a cluster's automatic retry of a failed
+submission, picks up exactly where it stopped, and a finished checkpoint
+is left as it is. A new crawl needs a fresh or empty --checkpoint
+directory. On a real cluster nothing changes except --master and the
 executor/memory flags; the plan shapes (broadcast dims, url_sha1-keyed
 shuffles, salted politeness ranking) were chosen for that case; the crawl
 picks the bloom prefilter and the salting from the sizes it measures.
@@ -40,7 +42,9 @@ def main() -> None:
     ap.add_argument("--round-seconds", type=float, default=60.0,
                     help="polite wall-clock one round models (Crawl-delay "
                          "d => floor(round_seconds/d) fetch slots)")
-    ap.add_argument("--checkpoint", required=True)
+    ap.add_argument("--checkpoint", required=True,
+                    help="the crawl's state: a directory with commits is "
+                         "continued; a new crawl needs a fresh one")
     ap.add_argument("--whitelist", default=None,
                     help="comma-separated primary domains; default: fixtures.WHITELIST")
     ap.add_argument("--max-depth", type=int, default=3)
@@ -50,7 +54,6 @@ def main() -> None:
                     help="bucket count for the seen table (pinned at store "
                          "creation; default = defaultParallelism — pick "
                          "~fleet cores at 10^10 URLs)")
-    ap.add_argument("--resume", action="store_true")
     args = ap.parse_args()
 
     from pyspark.sql import SparkSession
@@ -91,7 +94,6 @@ def main() -> None:
     result = run_crawl(
         spark, pages, seeds, cfg, checkpoint_dir=args.checkpoint,
         budgets=budgets, robots=robots, robots_bodies=robots_bodies,
-        resume=args.resume,
     )
     print(json.dumps({"rounds": result.rounds, "metrics": result.metrics}))
     spark.stop()

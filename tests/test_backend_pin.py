@@ -3,8 +3,8 @@ fails loudly.
 
 A checkpoint written by the retired parquet seen backend, or before the
 bucketed table existed, holds its seen set only in per-round seen_delta
-parquet. Resuming it would read an EMPTY bucketed table and silently
-re-admit every URL already crawled, so resume raises instead.
+parquet. Continuing it would read an EMPTY bucketed table and silently
+re-admit every URL already crawled, so a call over it raises instead.
 """
 
 import json
@@ -41,12 +41,12 @@ def test_backend_mismatch_fails_loudly(spark, fixture_web, tmp_path):
     with open(store._meta_path(), "w") as f:
         json.dump({"seen_backend": "parquet"}, f)
     with pytest.raises(ValueError, match=re.escape(f"checkpoint at {d}")):
-        run_crawl(spark, pages, seeds, cfg, checkpoint_dir=d, resume=True)
+        run_crawl(spark, pages, seeds, cfg, checkpoint_dir=d)
     with open(store._meta_path()) as f:
         assert json.load(f) == {"seen_backend": "parquet"}
 
     os.remove(store._meta_path())
     with pytest.raises(ValueError, match="no bucketed seen table"):
-        run_crawl(spark, pages, seeds, cfg, checkpoint_dir=d, resume=True)
+        run_crawl(spark, pages, seeds, cfg, checkpoint_dir=d)
     assert not os.path.exists(store._meta_path())
     assert store.last_committed() == last

@@ -71,7 +71,7 @@ def _pages() -> list[dict]:
 
 
 def _run_engine(spark, tmp_path, pages, budgets_rows=None, max_depth=4,
-                from_pages=False):
+                from_pages=False, round_seconds=60.0):
     pages_df = spark.createDataFrame(
         [(p["url"], bytearray(p["html"])) for p in pages], "url string, html binary"
     )
@@ -89,7 +89,7 @@ def _run_engine(spark, tmp_path, pages, budgets_rows=None, max_depth=4,
         else None
     )
     cfg = CrawlConfig(whitelist=WHITELIST, max_depth=max_depth, max_rounds=12,
-                      parsers="generic")
+                      parsers="generic", round_seconds=round_seconds)
     return run_crawl(
         spark, pages_df, seeds_df, cfg,
         checkpoint_dir=str(tmp_path / "ckpt"),
@@ -172,6 +172,22 @@ def test_explicit_budget_overrides_crawl_delay(spark, tmp_path):
     _assert_match(spark, golden, result)
     per_round = result.order(spark).groupBy("round").count().collect()
     assert max(r["count"] for r in per_round) > 2  # the override engaged
+
+
+def test_round_seconds_scales_crawl_delay_budget(spark, tmp_path):
+    """A longer round fits more Crawl-delay slots: at 90 s per round the
+    `Crawl-delay: 30` host gets floor(90/30) = 3 fetches per round, not
+    the 2 of a 60 s round — engine still matches the oracle."""
+    pages = _pages()
+    result = _run_engine(spark, tmp_path, pages, round_seconds=90.0)
+    golden = _run_oracle(pages, budgets={HOT_HOST: 3})
+    _assert_match(spark, golden, result)
+    per_round = [
+        r["count"]
+        for r in result.order(spark).filter(f"host = '{HOT_HOST}'")
+        .groupBy("round").count().collect()
+    ]
+    assert max(per_round) == 3
 
 
 def test_robots_bodies_from_pages_self_configures_the_crawl(spark, tmp_path):
@@ -280,7 +296,7 @@ def test_resume_adds_sitemap_pointers(spark, tmp_path):
         spark, pages_df, seeds_df,
         CrawlConfig(whitelist=WHITELIST, max_depth=4, max_rounds=12,
                     parsers="generic"),
-        checkpoint_dir=d, robots_bodies=robots_bodies, resume=True,
+        checkpoint_dir=d, robots_bodies=robots_bodies,
     )
     first_round = {
         r["url"]: r["first_round"] for r in resumed.seen(spark).collect()

@@ -1,6 +1,6 @@
 """The spark-submit jobs and the tools scripts still import and compile,
-the crawl job runs and resumes end to end, and every CrawlConfig knob is
-exercised somewhere.
+the crawl job runs and continues end to end, and every CrawlConfig knob
+is set somewhere.
 
 The imports run inside the tests, not at module level, so a job that
 imports a deleted name fails here as a test instead of dropping out of
@@ -43,6 +43,7 @@ def test_crawl_round_help_parses():
         capture_output=True, text=True, timeout=60, check=True,
     ).stdout
     assert "--checkpoint" in out and "--robots-from-pages" in out
+    assert "--resume" not in out  # every run continues its checkpoint
 
 
 def _crawl_round(tmp_path, paths, *extra):
@@ -64,42 +65,43 @@ def _crawl_round(tmp_path, paths, *extra):
 
 
 def test_crawl_round_runs_and_resumes(fixture_web, tmp_path):
-    """The spark-submit entry crawls the fixture web end to end, and a
-    --resume of the finished checkpoint prints the same round metrics."""
+    """The spark-submit entry crawls the fixture web end to end, and the
+    same command re-submitted over the finished checkpoint prints the same
+    round metrics."""
     paths = fixture_web["paths"]
     first = _crawl_round(tmp_path, paths)
-    again = _crawl_round(tmp_path, paths, "--resume")
+    again = _crawl_round(tmp_path, paths)
     assert first["rounds"] == 2
     assert [m["round"] for m in first["metrics"]] == [0, 1]
     assert first["metrics"][1]["fetched"] > 0
     assert again == first
 
 
-def _names_used(path: Path) -> set[str]:
-    """Names a source file sets or reads off an object: a NAME token
-    followed by ``=`` (keyword arguments, assignments) or preceded by
-    ``.`` (``cfg.bloom_fpp``). Comments and strings are tokens of their
-    own, so a mention there uses nothing."""
+def _names_set(path: Path) -> set[str]:
+    """Names a source file sets: a NAME token followed by ``=`` (keyword
+    arguments, assignments). A read (``cfg.max_depth``) sets nothing, and
+    comments and strings are tokens of their own, so a mention there sets
+    nothing either."""
     toks = [
         t for t in tokenize.generate_tokens(io.StringIO(path.read_text()).readline)
         if t.type not in (tokenize.COMMENT, tokenize.NL, tokenize.NEWLINE)
     ]
     return {
-        b.string for a, b, c in zip(toks, toks[1:], toks[2:])
-        if b.type == tokenize.NAME and (a.string == "." or c.string == "=")
+        a.string for a, b in zip(toks, toks[1:])
+        if a.type == tokenize.NAME and b.string == "="
     }
 
 
 def test_every_crawl_config_knob_is_exercised():
-    """Every CrawlConfig field is set or read in the code of some test or
-    benchmark workload: a knob nothing exercises is a plan nobody checks,
-    and goes instead."""
+    """Every CrawlConfig field is set in the code of some test or benchmark
+    workload: a knob nothing sets is a plan nobody checks, and goes (or
+    becomes a constant) instead."""
     from webcrawler_spark.plans.crawl import CrawlConfig
 
     used = set().union(*(
-        _names_used(p)
+        _names_set(p)
         for d in ("tests", "perfbench")
         for p in sorted((REPO / d).glob("*.py"))
     ))
     unused = [f.name for f in dataclasses.fields(CrawlConfig) if f.name not in used]
-    assert not unused, f"CrawlConfig fields no test or workload uses: {unused}"
+    assert not unused, f"CrawlConfig fields no test or workload sets: {unused}"

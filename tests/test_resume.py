@@ -1,5 +1,7 @@
-"""Checkpoint/resume: kill the crawl at a commit boundary, rerun with
-resume=True, and get the uninterrupted run's final state.
+"""Checkpoint/resume: kill the crawl at a commit boundary, re-run the
+identical call over the same checkpoint, and get the uninterrupted run's
+final state. The checkpoint alone decides where a call starts: the re-run
+commits only the rounds after the last committed one.
 
 The kill-point matrix covers every boundary of the commit protocol:
 
@@ -29,6 +31,7 @@ first_round, the items, the export bytes, the per-round metrics and the
 round count.
 """
 
+import dataclasses
 import glob
 import json
 import os
@@ -253,22 +256,33 @@ def test_kill_after_round_k_resume(spark, fixture_web, reference, tmp_path,
                           checkpoint_dir=crash_dir)
         check(RoundStore(crash_dir))
 
-    resumed = run_crawl(spark, pages_df, seeds_df, cfg,
-                        checkpoint_dir=crash_dir, resume=True)
+    last = RoundStore(crash_dir).last_committed()
+    committed: list[int] = []
+    real_commit = RoundStore.commit_round
+
+    def commit_round(self, rnd, *a, **kw):
+        committed.append(rnd)
+        return real_commit(self, rnd, *a, **kw)
+
+    with monkeypatch.context() as mp:
+        mp.setattr(RoundStore, "commit_round", commit_round)
+        resumed = run_crawl(spark, pages_df, seeds_df, cfg,
+                            checkpoint_dir=crash_dir)
+    assert committed == list(range(last + 1, reference["rounds"]))
     assert _collect_state(spark, resumed) == reference["state"]
     assert _export_bytes(crash_dir) == reference["export"]
     assert resumed.metrics == reference["metrics"]
     assert resumed.rounds == reference["rounds"]
 
 
-def _budgeted_crawl(spark, fixture_web, ckpt, resume=False):
+def _budgeted_crawl(spark, fixture_web, ckpt):
     """The resume-matrix crawl under the fixture's robots budgets."""
     paths = fixture_web["paths"]
     robots_df = spark.read.parquet(paths["robots"])
     return run_crawl(
         spark, spark.read.parquet(paths["pages"]),
         spark.read.parquet(paths["seeds"]), _cfg(), checkpoint_dir=ckpt,
-        budgets=robots_df.select("host", "budget_per_round"), resume=resume,
+        budgets=robots_df.select("host", "budget_per_round"),
     )
 
 
@@ -300,7 +314,7 @@ def test_kill_after_manifest_rename_resume(spark, fixture_web, tmp_path,
             _budgeted_crawl(spark, fixture_web, crash_dir)
     assert RoundStore(crash_dir).last_committed() == KILL_ROUND
 
-    resumed = _budgeted_crawl(spark, fixture_web, crash_dir, resume=True)
+    resumed = _budgeted_crawl(spark, fixture_web, crash_dir)
     assert _collect_state(spark, resumed) == _collect_state(spark, full)
     assert _export_bytes(crash_dir) == _export_bytes(full_dir)
     assert resumed.metrics == full.metrics
@@ -322,14 +336,23 @@ def test_export_is_ordered_and_enriched(spark, reference):
 
 
 def test_resume_on_done_store_is_noop(spark, fixture_web, tmp_path):
+    """A call over a finished checkpoint returns the finished crawl, even
+    when its own config would have stopped earlier: the done flag, not the
+    call's max_rounds, decides."""
     paths = fixture_web["paths"]
     pages_df = spark.read.parquet(paths["pages"])
     seeds_df = spark.read.parquet(paths["seeds"])
-    cfg = CrawlConfig(whitelist=WHITELIST, max_depth=1, max_rounds=4,
-                      parsers="bm1365")
+    cfg = CrawlConfig(whitelist=WHITELIST, max_depth=1, max_rounds=4)
     d = str(tmp_path / "done")
     first = run_crawl(spark, pages_df, seeds_df, cfg, checkpoint_dir=d)
-    again = run_crawl(spark, pages_df, seeds_df, cfg, checkpoint_dir=d, resume=True)
-    assert _collect_state(spark, first) == _collect_state(spark, again)
-    assert again.metrics == first.metrics
-    assert again.rounds == first.rounds
+    # the result is a view over the checkpoint: snapshot it before the
+    # second call
+    state, export = _collect_state(spark, first), _export_bytes(d)
+    metrics, rounds = first.metrics, first.rounds
+    assert rounds > 2  # the second call's max_rounds=1 would stop earlier
+    again = run_crawl(spark, pages_df, seeds_df,
+                      dataclasses.replace(cfg, max_rounds=1), checkpoint_dir=d)
+    assert again.rounds == rounds
+    assert _collect_state(spark, again) == state
+    assert _export_bytes(d) == export
+    assert again.metrics == metrics

@@ -21,7 +21,7 @@ from __future__ import annotations
 from dataclasses import dataclass, field
 
 from . import htmldom
-from .urlnorm import basename, resolve, url_path
+from .urlnorm import basename, resolve
 
 # The 8 labeled fields, label -> output column (JcUx.go:173-190).
 JCUX_LABELS = {
@@ -175,16 +175,6 @@ def image_format_from_content_type(content_type: str) -> str:
         if i1 < i2:
             return content_type[i1 + 1 : i2]
     return ""
-
-
-def image_item(page_url: str, content_type: str) -> dict[str, str] | None:
-    """parseImg item (bmParser.go:126-156): only for image/* responses."""
-    if not content_type.startswith("image"):
-        return None
-    fmt = image_format_from_content_type(content_type)
-    if fmt == "":
-        return None
-    return {"file_name": basename(url_path(page_url)), "file_ext": fmt}
 
 
 @dataclass

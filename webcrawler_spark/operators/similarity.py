@@ -102,10 +102,6 @@ def topk_bruteforce(
     )
 
 
-def _lit_vec(vals: list[float]) -> Column:
-    return F.array(*[F.lit(float(x)) for x in vals])
-
-
 def _lit_dot(vec: Column, vals: list[float]) -> Column:
     """Dot of a column vector against a DRIVER-SIDE literal vector, as the
     same strict left fold ((0 + a1*b1) + a2*b2)... the oracle uses — no

@@ -176,16 +176,3 @@ def repetition_stats(
         )
     )
 
-
-def annotate(df: DataFrame, text_col: str = "text") -> DataFrame:
-    """One codegen'd projection adding all text-analysis columns."""
-    t = F.col(text_col)
-    return (
-        df.withColumn("n_tokens", token_count(t))
-        .withColumn("n_bpe_tokens", bpe_token_count(t))
-        .withColumn("n_punct", punct_count(t))
-        .withColumn("mean_word_len", mean_word_len(t))
-        .withColumn("quality", quality_score(t))
-        .withColumn("lang_pred", lang_id(t))
-        .withColumn("fingerprint", fingerprint(t))
-    )

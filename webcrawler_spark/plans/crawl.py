@@ -23,14 +23,16 @@ Every round commits atomically through RoundStore (frontier, seen delta,
 items, errors, per-partition lineage, metrics), with one manifest write.
 Every round after the first starts from the previous round's manifest and
 committed datasets alone (the round prologue: read the carry-over, compact
-the seen table, maintain the bloom, decide salting and whether to stop),
-so a killed job resumes at the last manifest through the same code path a
-continuing crawl takes.
+the seen table, maintain the bloom, decide salting and whether to stop).
+The checkpoint is the crawl: every call continues at the round after the
+last manifest, so a killed job re-submitted unchanged resumes through the
+same code path a continuing crawl takes.
 """
 
 from __future__ import annotations
 
 from dataclasses import dataclass
+from typing import ClassVar
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -44,18 +46,10 @@ from ..operators.bloom import BloomTable
 from ..operators.politeness import assign_fetch_slots
 from ..storage import RoundStore
 
-CANDIDATE_SCHEMA = T.StructType(
-    [
-        T.StructField("url", T.StringType()),
-        T.StructField("url_sha1", T.StringType()),
-        T.StructField("host", T.StringType()),
-        T.StructField("path", T.StringType()),
-        T.StructField("depth", T.LongType()),
-        T.StructField("parent_url", T.StringType()),
-        T.StructField("link_pos", T.LongType()),
-        T.StructField("priority", T.LongType()),
-    ]
-)
+# queue rows = admitted candidate columns + fetch-attempt counter (retry
+# support), in the committed deferred/retry datasets' column order
+QUEUE_COLUMNS = ["url", "url_sha1", "host", "path", "depth", "parent_url",
+                 "link_pos", "priority", "attempts"]
 
 # frontier priority units (SURVEY §1 `priority long`): plain links rank 0,
 # sitemap-discovered URLs carry their <priority> x PRIORITY_SCALE (0-100),
@@ -75,11 +69,6 @@ BLOOM_MIN_SEEN = 100_000
 HOT_HOST_SHARE = 0.05
 HOT_HOST_MIN_ROWS = 100_000
 
-# queue rows = candidate columns + fetch-attempt counter (retry support)
-QUEUE_SCHEMA = T.StructType(
-    list(CANDIDATE_SCHEMA.fields) + [T.StructField("attempts", T.LongType())]
-)
-
 
 @dataclass
 class CrawlConfig:
@@ -97,13 +86,14 @@ class CrawlConfig:
     # parse failure is deterministic (same bytes every attempt) so its
     # retries always exhaust; live fetches make them transient — the
     # counter-gated plumbing is identical for both.
-    bloom_fpp: float = 0.01              # target false-positive rate of
-    # the prefilter (gated on BLOOM_MIN_SEEN)
-    bloom_shard_bits: int | None = None  # None = auto-size from n_seen
-                                         # (each shard bitmap <= 16 MB)
-    bloom_headroom: float = 4.0          # over-size the bloom by this factor
-    # so per-round maintenance is an OR-merge of the seen DELTA only; the
-    # full build re-runs only when n_seen outgrows the sized capacity —
+    # bloom prefilter sizing (gated on BLOOM_MIN_SEEN): constants, not
+    # fields, so CrawlConfig(bloom_fpp=...) is a TypeError
+    bloom_fpp: ClassVar[float] = 0.01    # target false-positive rate
+    bloom_shard_bits: ClassVar[int | None] = None  # None = auto-size from
+    # n_seen (each shard bitmap <= 16 MB)
+    bloom_headroom: ClassVar[float] = 4.0  # over-size the bloom by this
+    # factor so per-round maintenance is an OR-merge of the seen DELTA only;
+    # the full build re-runs only when n_seen outgrows the sized capacity —
     # geometric steps, so amortized O(1) work per key over the crawl life
     seen_buckets: int | None = None      # bucket count of the seen table
     # (RoundStore.ensure_seen_table), pinned at store creation
@@ -127,8 +117,16 @@ class CrawlConfig:
 
 @dataclass
 class CrawlResult:
+    """A view over the crawl's checkpoint: ``rounds``, ``metrics`` and
+    the datasets are read back from what the store has committed."""
+
     store: RoundStore
-    rounds: int = 0
+
+    @property
+    def rounds(self) -> int:
+        """Committed rounds (0..last)."""
+        last = self.store.last_committed()
+        return 0 if last is None else last + 1
 
     @property
     def metrics(self) -> list[dict]:
@@ -236,10 +234,6 @@ def sitemap_pointer_candidates(robots_bodies: DataFrame) -> DataFrame:
     )
 
 
-def _empty(spark: SparkSession, schema: T.StructType) -> DataFrame:
-    return spark.createDataFrame([], schema)
-
-
 def _items_schema_img(fetched: DataFrame, rnd: int) -> DataFrame:
     """parseImg items (bmParser.go:126-156) + savePicture enrichment
     (bmProcessor.go:56-61): name, format, size — all native expressions.
@@ -294,9 +288,15 @@ def run_crawl(
     budgets: DataFrame | None = None,
     robots: DataFrame | None = None,
     robots_bodies: DataFrame | None = None,
-    resume: bool = False,
 ) -> CrawlResult:
-    """See module docstring. ``robots_bodies`` is the raw-robots.txt entry
+    """See module docstring. ``checkpoint_dir`` is the crawl's state, and
+    it alone decides where a call starts: a call over a store with commits
+    continues from the round after the last committed one (the same call
+    re-submitted after a kill resumes the crawl), a call over a finished
+    store returns it unchanged, and a new crawl needs a fresh or empty
+    directory.
+
+    ``robots_bodies`` is the raw-robots.txt entry
     point ((host, body) rows): when given, the crawl derives everything a
     robots file feeds — admission rules (parse_robots, unless an explicit
     ``robots`` table overrides), default per-host politeness budgets from
@@ -309,10 +309,9 @@ def run_crawl(
     discovery chain, closed inside the round DAG."""
     store = RoundStore(checkpoint_dir)
     result = CrawlResult(store=store)
-    last = store.last_committed() if resume else None
+    last = store.last_committed()
     if last is not None:
         if store.is_done():
-            result.rounds = last + 1
             return result
         store.check_seen_table_resumable()
     store.ensure_seen_table(
@@ -369,10 +368,9 @@ def run_crawl(
         prefilter = salt_buckets = None
         if rnd == 0:
             candidates = seeds_to_candidates(seeds)
-            deferred = _empty(spark, QUEUE_SCHEMA)
-            retry = _empty(spark, QUEUE_SCHEMA)
-            seen = _empty(
-                spark, T.StructType([T.StructField("url_sha1", T.StringType())])
+            # an empty in-memory seen side: Catalyst drops the anti-join
+            seen = spark.createDataFrame(
+                [], T.StructType([T.StructField("url_sha1", T.StringType())])
             )
         else:
             # ---- prologue: round rnd starts from round rnd-1's manifest
@@ -424,9 +422,9 @@ def run_crawl(
                 salt_buckets = spark.sparkContext.defaultParallelism
         if pointers:
             # Sitemap: pointers bootstrap the frontier alongside the seeds.
-            # On resume too: a crawl started without robots_bodies never
-            # admitted them, and the seen anti-join drops the ones already
-            # admitted
+            # On a continued crawl too: one started without robots_bodies
+            # never admitted them, and the seen anti-join drops the ones
+            # already admitted
             candidates = candidates.unionByName(
                 sitemap_pointer_candidates(robots_bodies)
             )
@@ -458,9 +456,11 @@ def run_crawl(
                 F.lit("host_cap").alias("message"),
             )
 
-        queue = deferred.unionByName(
-            queue_src.withColumn("attempts", F.lit(0).cast("long"))
-        ).unionByName(retry)
+        queue = queue_src.select(
+            *QUEUE_COLUMNS[:-1], F.lit(0).cast("long").alias("attempts")
+        )
+        if rnd > 0:
+            queue = deferred.unionByName(queue).unionByName(retry)
 
         seen_delta = admitted.select(
             "url_sha1", "url", F.lit(rnd).cast("long").alias("first_round")
@@ -487,27 +487,11 @@ def run_crawl(
             .persist(StorageLevel.MEMORY_AND_DISK)
         )
 
-        misses = fetched.filter(F.col("status") != 200)
-        errors = misses.select(
-            F.lit(rnd).cast("long").alias("round"),
-            "url",
-            F.lit("fetch").alias("stage"),
-            F.lit("fetch_miss").alias("message"),
-        )
-        # retry re-enqueue (fetch-level: retried URLs are already seen, so
-        # they bypass admission — matching scheduler.go:574 timing)
-        retry_next = misses.filter(
-            F.col("attempts") < F.lit(cfg.max_fetch_retries)
-        ).select(
-            "url", "url_sha1", "host", "path", "depth", "parent_url",
-            "link_pos", "priority", (F.col("attempts") + 1).alias("attempts"),
-        )
-
         items_img = _items_schema_img(fetched, rnd)
 
         html_pages = fetched.filter(
             (F.col("status") == 200) & F.col("content_type").startswith("text/html")
-        ).select("url", "host", "depth", "html")
+        ).select(*QUEUE_COLUMNS, "html")
 
         # widen the parse stage: AQE coalesces the fetch-join output by
         # BYTES, but HTML parsing is per-ROW cpu — small pages would leave
@@ -516,35 +500,34 @@ def run_crawl(
 
         parsed_all = html_pages.withColumn(
             "p", parse_html_udf(F.col("html"), F.col("url"))
-        ).select("url", "host", "depth", "p").persist(StorageLevel.MEMORY_AND_DISK)
+        ).select(*QUEUE_COLUMNS, "p").persist(StorageLevel.MEMORY_AND_DISK)
 
-        # row-level parse failures: error rows go to the errors table and
-        # yield no items/links; the task itself never fails on one page
-        parse_errors = parsed_all.filter(F.col("p.error").isNotNull()).select(
-            F.lit(rnd).cast("long").alias("round"),
-            "url",
-            F.lit("parse").alias("stage"),
-            F.col("p.error").alias("message"),
+        # the round's failures, one queue row each: fetch misses (the
+        # 404/non-200 path) and row-level parse failures (no items/links;
+        # the task itself never fails on one page). A URL is fetched at
+        # most once per round, so the two parts are disjoint
+        failed = fetched.filter(F.col("status") != 200).select(
+            *QUEUE_COLUMNS,
+            F.lit("fetch").alias("stage"),
+            F.lit("fetch_miss").alias("message"),
+        ).unionByName(
+            parsed_all.filter(F.col("p.error").isNotNull()).select(
+                *QUEUE_COLUMNS,
+                F.lit("parse").alias("stage"),
+                F.col("p.error").alias("message"),
+            )
         )
-        errors = errors.unionByName(parse_errors)
+        errors = failed.select(
+            F.lit(rnd).cast("long").alias("round"), "url", "stage", "message"
+        )
         if capped_errors is not None:
             errors = errors.unionByName(capped_errors)
-        # analyze-failure retry parity (scheduler.go:394): re-enqueue parse
-        # errors like fetch misses, counter-gated; both frames are persisted
-        # so the semi-join reads cache, not a recompute
-        parse_retry = (
-            fetched.join(
-                parsed_all.filter(F.col("p.error").isNotNull()).select("url"),
-                on="url",
-                how="left_semi",
-            )
-            .filter(F.col("attempts") < F.lit(cfg.max_fetch_retries))
-            .select(
-                "url", "url_sha1", "host", "path", "depth", "parent_url",
-                "link_pos", "priority", (F.col("attempts") + 1).alias("attempts"),
-            )
-        )
-        retry_next = retry_next.unionByName(parse_retry)
+        # counter-gated re-enqueue of both kinds (download and analyze
+        # failures, scheduler.go:386,394). Retried URLs are already seen,
+        # so they bypass admission — matching scheduler.go:574 timing
+        retry_next = failed.filter(
+            F.col("attempts") < F.lit(cfg.max_fetch_retries)
+        ).select(*QUEUE_COLUMNS[:-1], (F.col("attempts") + 1).alias("attempts"))
         parsed = parsed_all.filter(F.col("p.error").isNull())
 
         if cfg.parsers == "bm1365":
@@ -667,7 +650,6 @@ def run_crawl(
     if last is not None:
         export_items(spark, store)
         store.mark_done(last)
-    result.rounds = rnd
     return result
 
 

@@ -56,7 +56,7 @@ class RoundStore:
 
     # -- commit ------------------------------------------------------------
     def commit_round(self, rnd: int, datasets: dict[str, DataFrame],
-                     stats: dict | None = None, done: bool = False,
+                     stats: dict | None = None,
                      extra_writes: list | None = None) -> dict:
         """Write all datasets of a round, then the manifest (atomic rename).
 
@@ -123,7 +123,7 @@ class RoundStore:
             "datasets": sorted(datasets.keys()),
             "counts": counts,
             "stats": stats or {},
-            "done": done,
+            "done": False,
         }
         _write_json_atomic(self._manifest_path(rnd), manifest)  # commit point
         return manifest
@@ -425,15 +425,15 @@ class RoundStore:
         )
 
     # -- final export ------------------------------------------------------
-    def export_path(self, name: str = "items_sorted") -> str:
-        return os.path.join(self.root, "export", name)
+    def export_path(self) -> str:
+        return os.path.join(self.root, "export", "items_sorted")
 
-    def write_export(self, df: DataFrame, name: str = "items_sorted") -> str:
+    def write_export(self, df: DataFrame) -> str:
         """One ordered single-file artifact (the Excel sink's insertion-order
         file, exampes/finder/bm1365Model/JcUx.go:117-148, saved once at
         shutdown — finder.go:122). Staged write + directory rename, so a
         crash mid-export leaves either the old artifact or none."""
-        dest = self.export_path(name)
+        dest = self.export_path()
         tmp = dest + "._tmp"
         shutil.rmtree(tmp, ignore_errors=True)
         df.coalesce(1).write.mode("overwrite").parquet(tmp)
@@ -441,5 +441,5 @@ class RoundStore:
         os.replace(tmp, dest)
         return dest
 
-    def read_export(self, spark: SparkSession, name: str = "items_sorted") -> DataFrame:
-        return spark.read.parquet(self.export_path(name))
+    def read_export(self, spark: SparkSession) -> DataFrame:
+        return spark.read.parquet(self.export_path())

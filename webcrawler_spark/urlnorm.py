@@ -222,10 +222,6 @@ def sha1_hex(s: str) -> str:
     return hashlib.sha1(s.encode("utf-8")).hexdigest()
 
 
-def md5_hex(s: str) -> str:
-    return hashlib.md5(s.encode("utf-8")).hexdigest()
-
-
 def basename(path: str) -> str:
     """path.Base semantics used for image file names (bmParser.go:153).
 
