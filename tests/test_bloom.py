@@ -135,14 +135,32 @@ def test_crawl_builds_bloom_once_then_merges_deltas(spark, fixture_web, tmp_path
                                                     monkeypatch):
     """The round loop must never rebuild the bloom from the full seen set:
     ONE full build when the threshold is crossed, then one merge_delta per
-    committed round whose input is exactly that round's seen_delta."""
+    committed round whose input is exactly that round's seen_delta.
+
+    The same crawl checks how the rounds hold their frames: every dataset
+    a commit writes reads materialized round frames, never the seen table
+    (the commit's seen insert refreshes every cached plan over it), and
+    everything a round checkpoints or persists, the carried bloom included,
+    is freed by the time run_crawl returns."""
     import webcrawler_spark.plans.crawl as crawl_mod
     from webcrawler_spark.fixtures import WHITELIST
     from webcrawler_spark.plans.crawl import CrawlConfig, run_crawl
+    from webcrawler_spark.storage import RoundStore
 
     builds: list[int] = []
     merges: list[int] = []
+    seen_readers: list[tuple[int, str]] = []
     orig_build, orig_merge = BloomTable.build.__func__, BloomTable.merge_delta
+    orig_commit = RoundStore.commit_round
+
+    def checking_commit(self, rnd, datasets, *a, **kw):
+        for name, df in datasets.items():
+            if self.seen_table in df._jdf.queryExecution().analyzed().toString():
+                seen_readers.append((rnd, name))
+        return orig_commit(self, rnd, datasets, *a, **kw)
+
+    def stored_rdd_ids():
+        return {i.id() for i in spark.sparkContext._jsc.sc().getRDDStorageInfo()}
 
     def counting_build(cls, seen, **kw):
         builds.append(seen.count())
@@ -163,6 +181,8 @@ def test_crawl_builds_bloom_once_then_merges_deltas(spark, fixture_web, tmp_path
     want = sorted((r["round"], r["url"]) for r in ref.order(spark).collect())
 
     monkeypatch.setattr(crawl_mod, "BLOOM_MIN_SEEN", 1)
+    monkeypatch.setattr(RoundStore, "commit_round", checking_commit)
+    stored_before = stored_rdd_ids()
     try:
         crawl_mod.BloomTable.build = classmethod(counting_build)
         crawl_mod.BloomTable.merge_delta = counting_merge
@@ -171,6 +191,8 @@ def test_crawl_builds_bloom_once_then_merges_deltas(spark, fixture_web, tmp_path
     finally:
         crawl_mod.BloomTable.build = classmethod(orig_build)
         crawl_mod.BloomTable.merge_delta = orig_merge
+    assert stored_rdd_ids() - stored_before == set()
+    assert seen_readers == []
 
     got = sorted((r["round"], r["url"]) for r in res.order(spark).collect())
     assert got == want  # bloom is an optimization, never a semantic change

@@ -225,6 +225,7 @@ def _kill_mid_export(mp, spark, crash_dir):
     return check
 
 
+# kill -> (injector, CrawlConfig constants the crash and the resume share)
 KILLS = {
     "mid_dataset_writes": (_kill_mid_dataset_writes, {}),
     "seen_appended_before_manifest": (_kill_before_manifest_rename, {}),
@@ -247,8 +248,10 @@ def test_kill_after_round_k_resume(spark, fixture_web, reference, tmp_path,
         run_crawl(spark, pages_df, seeds_df, cfg, checkpoint_dir=crash_dir)
         _drop_rounds_after(RoundStore(crash_dir), k=1)
     else:
-        inject, cfg_kw = KILLS[kill]
-        cfg = _cfg(**cfg_kw)
+        inject, consts = KILLS[kill]
+        cfg = _cfg()
+        for name, value in consts.items():
+            monkeypatch.setattr(CrawlConfig, name, value)
         with monkeypatch.context() as mp:
             check = inject(mp, spark, crash_dir)
             with pytest.raises(InjectedKill):

@@ -54,14 +54,15 @@ def test_orphan_round_invisible(spark, store):
 
 def test_commit_inserts_seen_keys_after_dataset_writes(spark, store,
                                                        monkeypatch):
-    """The crawl's commit shape: round datasets read a persisted admitted
-    set (candidates anti-joined against the seen table) while the seen
-    insert of those same keys rides along as an extra write. The insert
-    drops every cached plan over the seen table's path, so it must land
-    only after every dataset write has finished — a dataset write still
-    running would lose its cached input mid-job. One dataset write is
-    slowed so an insert running free would land first; the insert still
-    adds one file per bucket."""
+    """A direct caller's commit shape (perfbench's frontier rounds, not the
+    crawl's, whose datasets read checkpointed frames): round datasets read
+    a persisted admitted set (candidates anti-joined against the seen
+    table) while the seen insert of those same keys rides along as an
+    extra write. The insert drops every cached plan over the seen table's
+    path, so it must land only after every dataset write has finished — a
+    dataset write still running would lose its cached input mid-job. One
+    dataset write is slowed so an insert running free would land first;
+    the insert still adds one file per bucket."""
     import threading
     import time
 
@@ -241,13 +242,17 @@ def _crawl_vs_oracle(spark, fixture_web, ckpt, **cfg_kw):
     return res
 
 
-def test_crawl_with_aggressive_compaction_matches(spark, fixture_web, tmp_path):
+def test_crawl_with_aggressive_compaction_matches(spark, fixture_web, tmp_path,
+                                                  monkeypatch):
     """Compacting after (almost) every round, over a seen table with a
     bucket count of its own, must not change crawl semantics: identical
     order + seen set vs the oracle, the store pins the configured bucket
     count, and it ends compacted."""
+    from webcrawler_spark.plans.crawl import CrawlConfig
+
+    monkeypatch.setattr(CrawlConfig, "seen_compact_files_per_bucket", 1)
     res = _crawl_vs_oracle(spark, fixture_web, str(tmp_path / "ckpt"),
-                           seen_compact_files_per_bucket=1, seen_buckets=3)
+                           seen_buckets=3)
     assert res.store.seen_buckets == 3
     assert res.store.seen_files_per_bucket() <= 2  # compacted near the end
 

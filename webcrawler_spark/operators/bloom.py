@@ -35,6 +35,9 @@ import pandas as pd
 import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.storagelevel import StorageLevel
+
+from ..session import release
 
 
 def _hashes(sha1_hex: pd.Series) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
@@ -98,18 +101,14 @@ class BloomTable:
     MAX_SHARD_BYTES = 16 << 20  # per-shard bitmap cap: one task holds one
 
     def __init__(self, shard_bits: int, m_bits_per_shard: int, k: int,
-                 bitmaps: DataFrame, capacity_keys: int, persist: bool = True):
+                 bitmaps: DataFrame, capacity_keys: int):
         self.shard_bits = shard_bits
         self.m = m_bits_per_shard
         self.k = k
         # keys the (shard_bits, m, k) geometry was sized for at target fpp;
         # inserting past this degrades fpp — callers rebuild then
         self.capacity_keys = capacity_keys
-        if persist:
-            from pyspark.storagelevel import StorageLevel
-
-            bitmaps = bitmaps.persist(StorageLevel.MEMORY_AND_DISK)
-        self.bitmaps = bitmaps
+        self.bitmaps = bitmaps  # persisted by build, checkpointed by merge
 
     @classmethod
     def plan(cls, n_seen: int, fpp: float = 0.01) -> tuple[int, int]:
@@ -163,7 +162,8 @@ class BloomTable:
         m = cls._optimal_m(per_shard, fpp)
         k = max(1, round(m / per_shard * math.log(2)))
         bitmaps = cls._bitmap_table(seen, key_col, shard_bits, m, k)
-        return cls(shard_bits, m, k, bitmaps, per_shard * (1 << shard_bits))
+        return cls(shard_bits, m, k, bitmaps.persist(StorageLevel.MEMORY_AND_DISK),
+                   per_shard * (1 << shard_bits))
 
     @staticmethod
     def _bitmap_table(keys: DataFrame, key_col: str, shard_bits: int,
@@ -230,11 +230,9 @@ class BloomTable:
 
         The merged table is localCheckpoint()ed: it is state carried across
         crawl rounds, and without truncation its lineage would chain one
-        union+groupBy per round for the life of the crawl. (On a real
-        cluster, periodically persisting the small bitmap table to reliable
-        storage — it already has a stable (shard, bitmap) schema — bounds
-        recompute-on-executor-loss; the RoundStore checkpoint makes even a
-        full loss a one-time rebuild, never a correctness event.)"""
+        union+groupBy per round for the life of the crawl. A lost executor
+        fails the round instead of recomputing it; the re-submitted crawl
+        rebuilds the bloom from its committed seen table."""
         partials = self._bitmap_table(
             delta, key_col, self.shard_bits, self.m, self.k, merge=False
         )
@@ -245,13 +243,11 @@ class BloomTable:
             .localCheckpoint(eager=True)
         )
         self.unpersist()
-        return BloomTable(
-            self.shard_bits, self.m, self.k, merged, self.capacity_keys,
-            persist=False,
-        )
+        return BloomTable(self.shard_bits, self.m, self.k, merged,
+                          self.capacity_keys)
 
     def unpersist(self) -> None:
-        self.bitmaps.unpersist()
+        release(self.bitmaps)
 
     def split(self, df: DataFrame, key_col: str = "url_sha1",
               scratch: list | None = None) -> tuple[DataFrame, DataFrame]:
@@ -262,7 +258,6 @@ class BloomTable:
         execution — without it each branch would re-run the cogroup.
         """
         from pyspark.sql import types as T
-        from pyspark.storagelevel import StorageLevel
 
         spark = df.sparkSession
         sb, m, k = self.shard_bits, self.m, self.k

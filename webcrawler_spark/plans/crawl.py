@@ -21,6 +21,13 @@ join's probe side.
 
 Every round commits atomically through RoundStore (frontier, seen delta,
 items, errors, per-partition lineage, metrics), with one manifest write.
+The frames the commit reads (admitted, fetch_now | deferred_r, fetched,
+the parse) are eager localCheckpoints taken where each is built, so the
+commit's concurrent writers read materialized blocks and no dataset reads
+the seen table the commit inserts into; they are released when the round
+ends. Checkpoint blocks live only on the executors: a lost executor fails
+the round instead of recomputing them, and the re-submitted call continues
+from the last commit (the bloom's merged bitmaps already work this way).
 Every round after the first starts from the previous round's manifest and
 committed datasets alone (the round prologue: read the carry-over, compact
 the seen table, maintain the bloom, decide salting and whether to stop).
@@ -37,13 +44,17 @@ from typing import ClassVar
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
-from pyspark.storagelevel import StorageLevel
 
 from ..functions import urls as U
 from ..functions.html import JCUX_SCHEMA, parse_html_udf
 from ..operators import admission
 from ..operators.bloom import BloomTable
 from ..operators.politeness import assign_fetch_slots
+from ..session import release
+from ..sources.robots import (
+    budgets_from_crawl_delay, crawl_delays, parse_robots, robots_sitemaps,
+)
+from ..sources.sitemap import is_sitemap_root, parse_sitemaps, priority_units
 from ..storage import RoundStore
 
 # queue rows = admitted candidate columns + fetch-attempt counter (retry
@@ -98,10 +109,10 @@ class CrawlConfig:
     seen_buckets: int | None = None      # bucket count of the seen table
     # (RoundStore.ensure_seen_table), pinned at store creation
     # (None = defaultParallelism); pick ~fleet-cores at 10^10
-    seen_compact_files_per_bucket: int | None = 16  # compact the bucketed
-    # seen table (one-file-per-bucket rewrite, committed rounds only) when
-    # the per-round inserts have stacked more than this many files per
-    # bucket; None disables. The trigger probe is a directory listing, the
+    seen_compact_files_per_bucket: ClassVar[int] = 16  # compact the
+    # bucketed seen table (one-file-per-bucket rewrite, committed rounds
+    # only) when the per-round inserts have stacked more than this many
+    # files per bucket. The trigger probe is a directory listing, the
     # rewrite one bucket-preserving shuffle of the table — amortized over
     # the threshold's worth of rounds
     max_admissions_per_host: int | None = None  # crawl-trap guard: bound
@@ -223,8 +234,6 @@ def sitemap_pointer_candidates(robots_bodies: DataFrame) -> DataFrame:
     page. link_pos is the constant SITEMAP_LINK_POS: pointer rows need no
     within-parent order, and duplicates (two hosts naming one sitemap)
     pack identical winner metadata — deterministic without a global rank."""
-    from ..sources.robots import robots_sitemaps
-
     return robots_sitemaps(robots_bodies).select(
         F.col("sitemap_url").alias("url"),
         F.lit(0).cast("long").alias("depth"),
@@ -294,7 +303,9 @@ def run_crawl(
     continues from the round after the last committed one (the same call
     re-submitted after a kill resumes the crawl), a call over a finished
     store returns it unchanged, and a new crawl needs a fresh or empty
-    directory.
+    directory. A round holds its frames as local checkpoints (see the
+    module docstring), so a lost executor fails the call; re-submitting
+    it continues from the last commit.
 
     ``robots_bodies`` is the raw-robots.txt entry
     point ((host, body) rows): when given, the crawl derives everything a
@@ -318,41 +329,35 @@ def run_crawl(
         spark, cfg.seen_buckets or spark.sparkContext.defaultParallelism
     )
 
+    held: list = []  # the crawl-long checkpoints this call makes
     if robots_bodies is not None:
         # bounded (one row per robots file): the checkpoint keeps the
         # robots scan (e.g. robots_bodies_from_pages) out of every plan
         # derived from it
         robots_bodies = robots_bodies.localCheckpoint()
-        from ..sources.robots import (
-            budgets_from_crawl_delay,
-            crawl_delays,
-            parse_robots,
-        )
-
         if robots is None:
             # localCheckpoint: the rules dim table is broadcast every round;
             # materializing it once keeps the per-host window parse out of
             # every round's plan (bounded: one row per restricted host)
             robots = parse_robots(robots_bodies).localCheckpoint()
+            held.append(robots)
         delay_budgets = budgets_from_crawl_delay(
             crawl_delays(robots_bodies), cfg.round_seconds
         )
-        if budgets is None:
-            budgets = delay_budgets.localCheckpoint()
-        else:
+        if budgets is not None:
             # explicit budgets override per host; Crawl-delay fills the rest
-            budgets = budgets.unionByName(
+            delay_budgets = budgets.unionByName(
                 delay_budgets.join(budgets.select("host"), "host", "left_anti")
-            ).localCheckpoint()
+            )
+        budgets = delay_budgets.localCheckpoint()
+        held += [robots_bodies, budgets]
 
     # pages is scanned every round: url + html only (column pruning reaches
     # the parquet scan; `text`/`lang` are never read by the crawl plan)
     pages_fetch = pages.select("url", "html")
 
-    # the bloom lives ACROSS rounds: built once from the full seen set when
-    # the threshold is crossed (or on resume), then maintained per round by
-    # OR-merging only the previous round's committed seen_delta (BloomTable.
-    # merge_delta) — never rebuilt from the full 10^10-key corpus per round
+    # the bloom lives ACROSS rounds: built once from the full seen set, then
+    # OR-merged with each committed seen_delta (BloomTable.merge_delta)
     bloom_table = None
 
     start = rnd = 0 if last is None else last + 1
@@ -387,22 +392,16 @@ def run_crawl(
             candidates = store.read(spark, rnd - 1, "next_candidates")
             deferred = store.read(spark, rnd - 1, "deferred")
             retry = store.read(spark, rnd - 1, "retry")
-            if (
-                cfg.seen_compact_files_per_bucket
-                and store.seen_files_per_bucket() > cfg.seen_compact_files_per_bucket
-            ):
+            if store.seen_files_per_bucket() > cfg.seen_compact_files_per_bucket:
                 store.compact_seen_bucketed(spark, upto=rnd - 1)
             seen = store.read_seen_bucketed(spark, upto=rnd - 1)
             n_seen += prev["seen_delta"]
             if n_seen >= BLOOM_MIN_SEEN:
                 if bloom_table is None or n_seen * 1.2 > bloom_table.capacity_keys:
                     # first use, or seen outgrew the sized capacity (fpp
-                    # would degrade): build ONCE at the next headroom step.
-                    # Bitmaps stay a persisted (shard, bitmap) DataFrame;
-                    # the probe cogroups candidates with it so each task
-                    # holds ONE <=16 MB shard — no whole-filter broadcast
+                    # would degrade): build ONCE at the next headroom step
                     if bloom_table is not None:
-                        bloom_table.unpersist()
+                        release(bloom_table.bitmaps)
                     bloom_table = BloomTable.build(
                         seen, n_seen=n_seen,
                         fpp=cfg.bloom_fpp, shard_bits=cfg.bloom_shard_bits,
@@ -430,16 +429,13 @@ def run_crawl(
             )
         n_candidates = candidates.count() if first else prev["next_candidates"]
 
-        # all per-round counts come from observe() metrics captured during
-        # the commit writes (see RoundStore.commit_round) — the only full
-        # passes per round are: admission, the politeness window, and the
-        # fetch-join + parse (each executed exactly once thanks to the
-        # persists below).
+        # each fixed point is checkpointed (one job, in this thread) where
+        # it is built; all per-round counts come from observe() metrics
+        # captured during the commit writes (see RoundStore.commit_round)
         admitted = admission.admit(
             candidates, seen, cfg.whitelist, cfg.max_depth,
             robots=robots, bloom_prefilter=prefilter, scratch=scratch,
-        )
-        admitted = admitted.persist(StorageLevel.MEMORY_AND_DISK)
+        ).localCheckpoint()
 
         # crawl-trap guard: overflow beyond the per-host cap is marked SEEN
         # (below: seen_delta uses the FULL admitted set, so trap URLs are
@@ -469,7 +465,8 @@ def run_crawl(
         fetch_now, deferred_next = assign_fetch_slots(
             queue, budgets, salt_buckets=salt_buckets
         )
-        fetch_now = fetch_now.persist(StorageLevel.MEMORY_AND_DISK)
+        fetch_now = fetch_now.localCheckpoint()
+        deferred_next = deferred_next.localCheckpoint()
 
         order = fetch_now.select(
             F.lit(rnd).cast("long").alias("round"), "host", "url", "url_sha1"
@@ -484,7 +481,7 @@ def run_crawl(
                 "status",
                 F.when(F.col("html").isNotNull(), F.lit(200)).otherwise(F.lit(404)),
             )
-            .persist(StorageLevel.MEMORY_AND_DISK)
+            .localCheckpoint()
         )
 
         items_img = _items_schema_img(fetched, rnd)
@@ -500,7 +497,7 @@ def run_crawl(
 
         parsed_all = html_pages.withColumn(
             "p", parse_html_udf(F.col("html"), F.col("url"))
-        ).select(*QUEUE_COLUMNS, "p").persist(StorageLevel.MEMORY_AND_DISK)
+        ).select(*QUEUE_COLUMNS, "p").localCheckpoint()
 
         # the round's failures, one queue row each: fetch misses (the
         # 404/non-200 path) and row-level parse failures (no items/links;
@@ -569,12 +566,6 @@ def run_crawl(
         # sitemap FILE); a crawl with no xml fetches pays an empty branch.
         # Only a <urlset>/<sitemapindex> root is a sitemap: other XML
         # (feeds) yields no candidates.
-        from ..sources.sitemap import (
-            is_sitemap_root,
-            parse_sitemaps,
-            priority_units,
-        )
-
         xml_pages = fetched.filter(
             (F.col("status") == 200)
             & (F.col("content_type") == "application/xml")
@@ -636,16 +627,15 @@ def run_crawl(
             ],
         )
 
-        for df in scratch:  # safe: admitted materialized during commit
-            df.unpersist()
-        admitted.unpersist()
-        fetch_now.unpersist()
-        fetched.unpersist()
-        parsed_all.unpersist()
+        for df in (*scratch, admitted, fetch_now, deferred_next, fetched,
+                   parsed_all):
+            release(df)
         rnd += 1
 
     if bloom_table is not None:
-        bloom_table.unpersist()
+        release(bloom_table.bitmaps)
+    for df in held:
+        release(df)
     last = store.last_committed()
     if last is not None:
         export_items(spark, store)

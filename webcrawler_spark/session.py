@@ -15,7 +15,7 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
 
 
 def default_parallelism() -> int:
@@ -49,3 +49,14 @@ def get_spark(
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
     return builder.getOrCreate()
+
+
+def release(df: DataFrame) -> None:
+    """Free the blocks that hold ``df``: its cache, or the RDD behind a
+    (local) checkpoint, which ``DataFrame.unpersist()`` leaves alone and
+    PySpark has no public call for (pyspark 4.1.2: ``LogicalRDD.rdd()``).
+    A frame that is neither is left as it is."""
+    df.unpersist()
+    plan = df._jdf.queryExecution().analyzed()
+    if plan.nodeName() == "LogicalRDD":
+        plan.rdd().unpersist(False)

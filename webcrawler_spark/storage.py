@@ -26,6 +26,8 @@ import time
 
 from pyspark.sql import DataFrame, SparkSession
 
+from .session import release
+
 
 def _write_json_atomic(path: str, obj: dict) -> None:
     """Write ``obj`` beside ``path`` and rename it into place: readers see
@@ -96,8 +98,8 @@ class RoundStore:
         # but lands only after every dataset write has finished (the gate,
         # see append_seen_bucketed): an insert into a table makes Spark drop
         # every cached plan over the table's path, and a dataset write still
-        # reading a persisted input derived from it (the crawl's admitted
-        # set) would lose its blocks mid-job ("Block rdd_N_M does not exist")
+        # reading a persisted input derived from it would lose its blocks
+        # mid-job ("Block rdd_N_M does not exist")
         gate = threading.Event()
         self._insert_gate = gate
         extra_writes = extra_writes or []
@@ -413,6 +415,7 @@ class RoundStore:
             staged = staged.localCheckpoint()
             gate.wait()
         staged.write.mode("append").insertInto(self.seen_table)
+        release(staged)
 
     def read_seen_bucketed(self, spark: SparkSession, upto: int) -> DataFrame:
         """All committed seen keys (round <= upto) — exchange-free join side."""
