@@ -1,6 +1,7 @@
 """The spark-submit jobs and the tools scripts still import and compile,
-the crawl job runs and continues end to end, and every CrawlConfig knob
-is set somewhere.
+the crawl job runs and continues end to end, every CrawlConfig knob
+is set somewhere, and perfbench's tracer still finds every layer entry
+point it patches.
 
 The imports run inside the tests, not at module level, so a job that
 imports a deleted name fails here as a test instead of dropping out of
@@ -48,33 +49,53 @@ def test_crawl_round_help_parses():
 
 def _crawl_round(tmp_path, paths, *extra):
     """Run jobs/crawl_round.py as its own process and return the JSON
-    summary it prints last."""
+    summary it prints last, with the process's stderr."""
     env = dict(os.environ)
     env["PYTHONPATH"] = os.pathsep.join(
         p for p in (str(REPO), env.get("PYTHONPATH")) if p
     )
-    out = subprocess.run(
+    proc = subprocess.run(
         [sys.executable, str(REPO / "jobs" / "crawl_round.py"),
          "--pages", paths["pages"], "--seeds", paths["seeds"],
          "--checkpoint", str(tmp_path / "ckpt"),
          "--max-depth", "1", "--max-rounds", "1", *extra],
         capture_output=True, text=True, timeout=600, check=True,
         cwd=str(tmp_path), env=env,
-    ).stdout
-    return json.loads(out.strip().splitlines()[-1])
+    )
+    return json.loads(proc.stdout.strip().splitlines()[-1]), proc.stderr
 
 
 def test_crawl_round_runs_and_resumes(fixture_web, tmp_path):
     """The spark-submit entry crawls the fixture web end to end, and the
     same command re-submitted over the finished checkpoint prints the same
-    round metrics."""
+    round metrics. A healthy crawl logs no missing-path stack trace for the
+    fresh seen table and no warning for a released checkpoint."""
     paths = fixture_web["paths"]
-    first = _crawl_round(tmp_path, paths)
-    again = _crawl_round(tmp_path, paths)
+    first, first_err = _crawl_round(tmp_path, paths)
+    again, _ = _crawl_round(tmp_path, paths)
     assert first["rounds"] == 2
     assert [m["round"] for m in first["metrics"]] == [0, 1]
     assert first["metrics"][1]["fetched"] > 0
     assert again == first
+    assert "FileNotFoundException" not in first_err
+    assert "lineage has been truncated" not in first_err
+
+
+def test_traced_entry_points_stay_patchable(spark):
+    """perfbench's tracer patches the engine's layer entry points by name;
+    a refactor that renames or drops one fails here, not in the traced
+    benchmark run."""
+    from perfbench.spans import Tracer
+    from webcrawler_spark.operators import admission
+
+    admit = admission.admit
+    tracer = Tracer(spark)
+    try:
+        tracer.install()
+        assert admission.admit is not admit
+    finally:
+        tracer.uninstall()
+    assert admission.admit is admit
 
 
 def _names_set(path: Path) -> set[str]:

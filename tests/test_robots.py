@@ -292,6 +292,29 @@ def test_feeds_admission_filter(spark):
     ]
 
 
+def test_robots_table_joined_once(spark):
+    """Whitelist membership depends on the host alone, so the distinct-host
+    set is built before the robots join: the optimized plan joins the
+    robots table once, not once per branch."""
+    from pyspark.sql import functions as F
+
+    from webcrawler_spark.operators import admission
+
+    robots = spark.createDataFrame(
+        [("www.example.com", ["/private/"])],
+        "host: string, disallow_prefixes: array<string>",
+    )
+    cand = spark.createDataFrame(
+        [("http://www.example.com/private/x", "www.example.com", "/private/x"),
+         ("http://www.example.com/ok", "www.example.com", "/ok")],
+        "url: string, host: string, path: string",
+    ).withColumn("depth", F.lit(0).cast("long"))
+    out = admission.admission_filters(cand, ["example.com"], 3, robots=robots)
+    assert [r["path"] for r in out.collect()] == ["/ok"]
+    plan = out._jdf.queryExecution().optimizedPlan().toString()
+    assert plan.count("Join LeftOuter") == 1, plan
+
+
 # ---- Sitemap: pointers + Crawl-delay (round 5) ----------------------------
 
 BODY_DISCOVERY = """# discovery fields

@@ -233,3 +233,22 @@ class TestFastCanonicalPredicate:
         ).collect():
             if r["c"]:
                 assert canonicalize(r["url"]) == r["url"], r["url"]
+
+
+def test_canonicalizer_runs_once_per_row(spark):
+    """The executed plan of canonicalize_candidates invokes the Python
+    canonicalizer in ONE ArrowEvalPython node: the ``url IS NOT NULL``
+    filter Catalyst pushes below the projection must not run it again."""
+    from webcrawler_spark.operators.admission import canonicalize_candidates
+
+    cand = spark.createDataFrame(
+        [("HTTP://H.com/a/../b", 0, None, 0), ("http://h.com/c", 1, "", 1),
+         ("javascript:void(0)", 1, "", 2), (None, 1, "", 3)],
+        "url string, depth long, parent_url string, link_pos long",
+    )
+    out = canonicalize_candidates(cand)
+    assert sorted(r["url"] for r in out.collect()) == [
+        "http://h.com/b", "http://h.com/c",
+    ]
+    plan = out._jdf.queryExecution().executedPlan().toString()
+    assert plan.count("ArrowEvalPython") == 1, plan

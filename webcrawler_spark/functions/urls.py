@@ -65,6 +65,13 @@ def canonicalize_udf(urls: pd.Series) -> pd.Series:
     return urls.map(urlnorm.canonicalize, na_action="ignore")
 
 
+# Nondeterministic so each row crosses into Python once: Catalyst copies a
+# deterministic UDF into every filter it pushes below the projection that
+# computes it (admission's ``url IS NOT NULL``), a second Arrow pass over
+# the same rows. PySpark documents asNondeterministic for exactly this.
+canonicalize_udf = canonicalize_udf.asNondeterministic()
+
+
 def url_scheme(url: Column) -> Column:
     """Scheme of a canonical URL (already lowercased by canonicalization)."""
     return F.regexp_extract(url, r"^([a-z][a-z0-9+.\-]*)://", 1)

@@ -12,8 +12,9 @@ Plan-shape notes for 100 TB scale:
 * dedup-before-fetch is manual predicate pushdown: the anti-join runs
   BEFORE the expensive fetch join (Catalyst will not reorder across the
   parse UDF, so the round plan fixes this order — SURVEY.md §4);
-* in-round duplicate resolution is an aggregation (min struct), never
-  "first row wins" (task order is nondeterministic);
+* in-round duplicate resolution is one aggregation, the min of the
+  (depth, parent_url, link_pos, ...) struct, never "first row wins"
+  (task order is nondeterministic);
 * the seen anti-join is a shuffle on url_sha1; callers can pre-filter with
   the sharded bloom (operators/bloom.BloomTable.split) so only probably-
   seen URLs reach the exact join.
@@ -190,19 +191,42 @@ def admission_filters(
         F.col("url").startswith("http://") | F.col("url").startswith("https://")
     )
 
+    # Whitelist: the primary-domain extraction is the one genuinely
+    # regex-bound step, so it runs once per DISTINCT host, not once per
+    # URL — a semi-join on the (small relative to the frontier) host set.
+    # At 10^10 URLs the distinct-host aggregation is a partial-agg shuffle
+    # of short strings; the join back is host-keyed (AQE broadcasts it
+    # when the host set is small). Membership depends on the host alone,
+    # so the host set is taken BEFORE the robots join, which then runs in
+    # one branch of the plan only.
+    #
+    # The F.when(_n > 0, ...) guard is load-bearing: a predicate over only
+    # the grouping column would be PUSHED BELOW the aggregate by Catalyst
+    # (PushDownPredicates), silently re-evaluating the regex per URL —
+    # measured 25s vs 0.5s at 750k rows / 137 hosts on local[32].
+    # Referencing the aggregated _n (always >= 1, so semantics unchanged)
+    # pins the filter above the distinct.
+    ok_hosts = (
+        out.groupBy("host").agg(F.count(F.lit(1)).alias("_n"))
+        .filter(
+            F.when(F.col("_n") > 0, U.primary_domain(F.col("host"))).isin(whitelist)
+        )
+        .select("host")
+    )
+
     if robots is not None:
         # robots: tiny dim table, broadcast. Preferred shape is
         # (host, rules array<struct<prefix, allow, segments, anchored>>)
         # from sources.robots.parse_robots (wildcard patterns pre-compiled
-        # to segment arrays); plain (host, disallow_prefixes) or legacy
+        # to segment arrays); plain (host, disallow_prefixes) or
         # (prefix, allow)-only rules are promoted to single-segment
-        # unanchored rules, for which the matcher degenerates to the old
-        # startswith. Decision per candidate = RFC 9309 §2.2.2
-        # most-specific-match: among matching rules the LONGEST PATTERN
-        # wins; an equal-length allow/disallow tie resolves to allow; no
-        # matching rule (or no robots row) = allowed. All native: filter +
-        # transform + array_max over (len, allow) structs — struct
-        # comparison gives exactly the (longest, then allow-wins) order.
+        # unanchored rules, for which rule_matches is a plain startswith.
+        # Decision per candidate = RFC 9309 §2.2.2 most-specific-match:
+        # among matching rules the LONGEST PATTERN wins; an equal-length
+        # allow/disallow tie resolves to allow; no matching rule (or no
+        # robots row) = allowed. All native: filter + transform +
+        # array_max over (len, allow) structs — struct comparison gives
+        # exactly the (longest, then allow-wins) order.
         def _promote(prefix_col, allow_col):
             return F.struct(
                 prefix_col.alias("prefix"),
@@ -211,29 +235,18 @@ def admission_filters(
                 F.lit(False).alias("anchored"),
             )
 
-        # plan-time fast path: promoted plain-prefix rules (legacy rules /
-        # disallow_prefixes inputs) are KNOWN single-segment unanchored, so
-        # they match with a bare startswith — the general wildcard matcher
-        # runs only for parse_robots output that actually carries segments
-        wildcard = False
-        if "rules" in robots.columns:
-            elem = robots.schema["rules"].dataType.elementType
-            if "segments" in elem.names:
-                rules_col, wildcard = F.col("rules"), True
-            else:
-                rules_col = F.transform(
-                    F.col("rules"), lambda r: _promote(r["prefix"], r["allow"])
-                )
+        if "rules" not in robots.columns:
+            rules_col = F.transform(
+                F.col("disallow_prefixes"), lambda p: _promote(p, F.lit(False))
+            )
+        elif "segments" in robots.schema["rules"].dataType.elementType.names:
+            rules_col = F.col("rules")
         else:
             rules_col = F.transform(
-                F.col("disallow_prefixes"),
-                lambda p: _promote(p, F.lit(False)),
+                F.col("rules"), lambda r: _promote(r["prefix"], r["allow"])
             )
         matched = F.filter(
-            F.col("_r_rules"),
-            (lambda r: rule_matches(F.col("path"), r))
-            if wildcard
-            else (lambda r: F.col("path").startswith(r["prefix"])),
+            F.col("_r_rules"), lambda r: rule_matches(F.col("path"), r)
         )
         best = F.array_max(
             F.transform(
@@ -259,26 +272,6 @@ def admission_filters(
             .drop("_r_host", "_r_rules")
         )
 
-    # Whitelist: the primary-domain extraction is the one genuinely
-    # regex-bound step, so it runs once per DISTINCT host, not once per
-    # URL — a semi-join on the (small relative to the frontier) host set.
-    # At 10^10 URLs the distinct-host aggregation is a partial-agg shuffle
-    # of short strings; the join back is host-keyed (AQE broadcasts it
-    # when the host set is small).
-    #
-    # The F.when(_n > 0, ...) guard is load-bearing: a predicate over only
-    # the grouping column would be PUSHED BELOW the aggregate by Catalyst
-    # (PushDownPredicates), silently re-evaluating the regex per URL —
-    # measured 25s vs 0.5s at 750k rows / 137 hosts on local[32].
-    # Referencing the aggregated _n (always >= 1, so semantics unchanged)
-    # pins the filter above the distinct.
-    ok_hosts = (
-        out.groupBy("host").agg(F.count(F.lit(1)).alias("_n"))
-        .filter(
-            F.when(F.col("_n") > 0, U.primary_domain(F.col("host"))).isin(whitelist)
-        )
-        .select("host")
-    )
     out = out.join(ok_hosts, on="host", how="left_semi")
     out = out.filter(F.col("depth") <= F.lit(max_depth))
     return out
@@ -290,59 +283,25 @@ def dedup_in_round(cand: DataFrame) -> DataFrame:
     winner: min (depth, parent_url, link_pos). Aggregation, not
     dropDuplicates — task order must not pick the winner.
 
+    The winner is one struct min: struct comparison is field by field, so
+    a NULL parent_url sorts first, a parent sorts before its own
+    extensions and depth/link_pos compare as numbers, negative ones
+    included. url/host/path are 1:1 with the group key and ride along as
+    the struct's tail. min over a struct runs as a SortAggregate; partial
+    aggregation still combines map-side, so the shuffle moves one row per
+    (partition, url_sha1).
+
     A `priority` column, when present, is NOT part of the winner ordering:
     the admitted row carries the MAX priority over all duplicates (a URL
     discovered both by a 0.9-priority sitemap entry and a plain link keeps
     the sitemap's urgency) — one more column in the same aggregate."""
-    has_priority = "priority" in cand.columns
-    # Winner ordering packed into ONE string:
-    #   packed = lpad(depth) \x00 parent_url \x00 lpad(link_pos)
-    # String compare == field-wise compare because depth/link_pos are
-    # fixed-width zero-padded and \x00 sorts below every URL character
-    # (so a shorter parent_url wins against its extensions, exactly like
-    # struct comparison). url/host/path are 1:1 with the group key, so
-    # plain min() carries them.
-    # NB: min over strings still executes as SortAggregate (UnsafeRow hash
-    # buffers are fixed-width only) — unavoidable while the tie-break
-    # includes parent_url; partial aggregation still combines map-side, so
-    # the shuffle moves one row per (partition, url_sha1). A fully numeric
-    # tie-break (hash of parent) would enable HashAggregate at the cost of
-    # a 2^-64 nondeterminism; not worth it for the frontier's semantics.
-    # NULL parent_url is preserved (not collapsed with "") by a 1-byte
-    # marker: NULL packs as the empty field (sorts first, like NULL in a
-    # struct-min), a real value packs as "\x01"+parent (\x01 sorts below
-    # every URL character but above the \x00 separator, so shorter parents
-    # still win against their extensions). depth/link_pos are non-negative
-    # by construction (seeds start at 0, links at depth+1 / enumerate
-    # index) — the lpad fixed-width encoding requires that; a negative
-    # value would mis-order, so it is asserted in debug runs via tests.
-    packed = F.concat_ws(
-        "\x00",
-        F.lpad(F.col("depth").cast("string"), 19, "0"),
-        F.when(F.col("parent_url").isNull(), F.lit("")).otherwise(
-            F.concat(F.lit("\x01"), F.col("parent_url"))
-        ),
-        F.lpad(F.col("link_pos").cast("string"), 19, "0"),
-    )
-    aggs = [
-        F.min("url").alias("url"),
-        F.min("host").alias("host"),
-        F.min("path").alias("path"),
-        F.min(packed).alias("_w"),
-    ]
-    if has_priority:
-        aggs.append(F.max("priority").alias("priority"))
-    agg = cand.groupBy("url_sha1").agg(*aggs)
-    parts = F.split(F.col("_w"), "\x00")
-    packed_parent = F.element_at(parts, 2)
-    return agg.select(
-        "url_sha1", "url", "host", "path",
-        F.element_at(parts, 1).cast("long").alias("depth"),
-        F.when(packed_parent == "", F.lit(None).cast("string"))
-        .otherwise(F.substring(packed_parent, 2, F.lit(1 << 30)))
-        .alias("parent_url"),
-        F.element_at(parts, 3).cast("long").alias("link_pos"),
-        *(["priority"] if has_priority else []),
+    extra = ["priority"] if "priority" in cand.columns else []
+    winner = F.struct("depth", "parent_url", "link_pos", "url", "host", "path")
+    return cand.groupBy("url_sha1").agg(
+        F.min(winner).alias("_w"), *(F.max(c).alias(c) for c in extra)
+    ).select(
+        "url_sha1", "_w.url", "_w.host", "_w.path",
+        "_w.depth", "_w.parent_url", "_w.link_pos", *extra,
     )
 
 
@@ -395,8 +354,8 @@ def admit(
 
     scratch: optional list the canonicalized intermediate is persisted into.
     The whitelist's distinct-host semi-join branches the plan, and without
-    a persist both branches recompute the canonicalize union (incl. the
-    Python UDF). Callers pass a list and unpersist its entries AFTER the
+    a persist both branches recompute the canonicalized candidates (incl.
+    the Python UDF). Callers pass a list and unpersist its entries AFTER the
     admitted frame is materialized.
     """
     cand = canonicalize_candidates(cand_raw)

@@ -55,8 +55,15 @@ def release(df: DataFrame) -> None:
     """Free the blocks that hold ``df``: its cache, or the RDD behind a
     (local) checkpoint, which ``DataFrame.unpersist()`` leaves alone and
     PySpark has no public call for (pyspark 4.1.2: ``LogicalRDD.rdd()``).
-    A frame that is neither is left as it is."""
+    A frame that is neither is left as it is.
+
+    The checkpoint's blocks go through ``SparkContext.unpersistRDD``
+    (``private[spark]``, reachable through the JVM gateway), the call
+    ``RDD.unpersist`` makes after it logs, for every locally
+    checkpointed RDD, a warning that its lineage has been truncated — a
+    line per released frame that says nothing about a finished round."""
     df.unpersist()
     plan = df._jdf.queryExecution().analyzed()
     if plan.nodeName() == "LogicalRDD":
-        plan.rdd().unpersist(False)
+        rdd = plan.rdd()
+        rdd.context().unpersistRDD(rdd.id(), False)

@@ -287,6 +287,9 @@ class RoundStore:
             self._write_meta(meta)
         self._drop_if_location_stale(spark)
         self._clean_stale_seen_dirs()
+        # create the location first: for a missing one Spark logs a
+        # FileNotFoundException stack trace at CREATE and at the first insert
+        os.makedirs(self._seen_location(), exist_ok=True)
         spark.sql(self.seen_table_ddl(n_buckets, provider))
         return self.seen_table
 
@@ -377,6 +380,7 @@ class RoundStore:
         staging = f"{self.seen_table}_v{new_v}"
         spark.sql(f"DROP TABLE IF EXISTS {staging}")
         shutil.rmtree(new_loc, ignore_errors=True)  # crashed prior attempt
+        os.makedirs(new_loc)  # as in ensure_seen_table
         spark.sql(self.seen_table_ddl(n, provider, table=staging, location=new_loc))
         (
             spark.table(self.seen_table)
