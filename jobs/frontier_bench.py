@@ -4,10 +4,10 @@ Builds a deterministic frontier of N candidate URLs with ``spark.range``
 (no I/O, so the measurement isolates engine work), then runs the full
 admission hot path exactly as a crawl round does (plans/crawl.py):
 
-    canonicalize (Arrow pandas UDF) → md5/host/path derivation →
+    canonicalize (Arrow pandas UDF) → sha1/host/path derivation →
     scheme/whitelist/depth filters → in-round dedup (min-struct agg) →
-    anti-join vs a seen set of N/4 hashes → per-host politeness ranking →
-    budget split
+    anti-join vs a seen set of the sha1s of ~1/4 of the canonical URLs →
+    per-host politeness ranking → budget split
 
 Reports frontier-URLs-processed/sec = N / wall. The same function runs at
 ``local[8]`` and ``local[32]`` for the N→4N-cores scaling-efficiency
@@ -25,6 +25,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from webcrawler_spark.operators import admission
+from webcrawler_spark.operators.politeness import assign_fetch_slots
+from webcrawler_spark.session import release
 
 WHITELIST = ["example.com", "example.com.cn", "example.net"]
 
@@ -65,12 +67,11 @@ def synth_candidates(spark: SparkSession, n: int, partitions: int) -> DataFrame:
 
 
 def synth_seen(spark: SparkSession, n: int, partitions: int) -> DataFrame:
-    """Seen set: the md5 of every 4th clean URL (hash-only table, like the
-    real seen store)."""
-    cand = synth_candidates(spark, n, partitions)
-    return cand.filter(F.crc32(F.col("url")) % 4 == 0).select(
-        F.md5(F.col("url")).alias("url_sha1")
-    ).distinct()
+    """Seen set: the `url_sha1` admission derives, of the canonical URLs
+    whose crc32 is 0 mod 4 (hash-only table, like the real seen store), so
+    the anti-join prunes about a quarter of the candidates."""
+    cand = admission.canonicalize_candidates(synth_candidates(spark, n, partitions))
+    return cand.filter(F.crc32(F.col("url")) % 4 == 0).select("url_sha1").distinct()
 
 
 def run_frontier_workload(
@@ -84,17 +85,15 @@ def run_frontier_workload(
     synthesizer's big CASE expressions out of the measured plan. The timed
     section is exactly the round hot path: parquet scan → canonicalize
     (native fast path + Arrow UDF for the rest) → admission filters →
-    in-round dedup agg → seen anti-join → politeness window → budget
-    split, all forced by ONE action (a tagged aggregate over the ranked
-    queue, so nothing runs twice).
+    in-round dedup agg → seen anti-join (admitted, checkpointed once) →
+    politeness window → budget split (`assign_fetch_slots`, one
+    checkpoint); the counts then read the checkpoints.
 
     Returns {"n": N, "admitted": ..., "fetch_now": ..., "wall_s": ...,
     "urls_per_sec": ...}.
     """
     import shutil
     import tempfile
-
-    from webcrawler_spark.operators.politeness import UNLIMITED, ranked
 
     if partitions is None:
         partitions = spark.sparkContext.defaultParallelism * 2
@@ -122,27 +121,19 @@ def run_frontier_workload(
         scratch: list = []
         admitted = admission.admit(
             cand, seen, WHITELIST, max_depth=max_depth, scratch=scratch,
-        )
-        r = ranked(admitted).join(
-            F.broadcast(budgets.select(F.col("host").alias("_b_host"),
-                                       F.col("budget_per_round").alias("_budget"))),
-            on=[F.col("host") == F.col("_b_host")], how="left",
-        ).withColumn("_budget", F.coalesce(F.col("_budget"), F.lit(UNLIMITED)))
-        row = r.agg(
-            F.count("*").alias("admitted"),
-            F.sum(F.when(F.col("slot_rank") <= F.col("_budget"), 1).otherwise(0)).alias("fetch_now"),
-        ).collect()[0]
+        ).localCheckpoint()
+        fetch_now, deferred = assign_fetch_slots(admitted, budgets)
+        counts = {"admitted": admitted.count(), "fetch_now": fetch_now.count(),
+                  "deferred": deferred.count()}
         wall = time.time() - t0
-        for df in scratch:
-            df.unpersist()
+        for df in (*scratch, admitted, fetch_now):
+            release(df)
     finally:
         if own_workdir:
             shutil.rmtree(workdir, ignore_errors=True)
     return {
         "n": n,
-        "admitted": row["admitted"],
-        "fetch_now": row["fetch_now"],
-        "deferred": row["admitted"] - row["fetch_now"],
+        **counts,
         "wall_s": round(wall, 3),
         "urls_per_sec": round(n / wall, 1),
     }

@@ -1,5 +1,6 @@
 """The spark-submit jobs and the tools scripts still import and compile,
-the crawl job runs and continues end to end, every CrawlConfig knob
+the crawl job runs and continues end to end, the scaling bench's
+frontier round runs and its seen set prunes, every CrawlConfig knob
 is set somewhere, and perfbench's tracer still finds every layer entry
 point it patches.
 
@@ -79,6 +80,22 @@ def test_crawl_round_runs_and_resumes(fixture_web, tmp_path):
     assert again == first
     assert "FileNotFoundException" not in first_err
     assert "lineage has been truncated" not in first_err
+
+
+def test_frontier_workload_prunes_seen_and_splits_admitted(spark):
+    """The scaling bench's round splits every admitted URL into exactly
+    one half, and its seen set holds admission's keys: it admits fewer
+    URLs than the same candidates against an empty seen set."""
+    from jobs.frontier_bench import WHITELIST, run_frontier_workload, synth_candidates
+    from webcrawler_spark.operators import admission
+
+    out = run_frontier_workload(spark, 2000)
+    assert out["fetch_now"] + out["deferred"] == out["admitted"]
+    empty_seen = spark.createDataFrame([], "url_sha1 string")
+    unpruned = admission.admit(
+        synth_candidates(spark, 2000, 4), empty_seen, WHITELIST, max_depth=4
+    ).count()
+    assert 0 < out["admitted"] < unpruned, (out, unpruned)
 
 
 def test_traced_entry_points_stay_patchable(spark):

@@ -18,28 +18,31 @@ Scale note: a plain `row_number() OVER (PARTITION BY host)` puts the entire
 hot host in one task. Since only the top-B per host is needed and B is
 small, `ranked()` uses a salted two-phase top-k: local rank within
 (host, salt) keeps ≤B rows per salt bucket, then the global rank runs over
-at most B×S rows per host. S defaults off for small inputs.
+at most B×S rows per host. S defaults off for small inputs. The phase-1
+bound is each host's own budget (budgets are joined before the rank), and
+both halves of a split are filters over one checkpoint of the tagged queue.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 UNLIMITED = 1 << 31
 
 
 def ranked(queue: DataFrame, salt_buckets: int | None = None,
-           max_budget: int | None = None) -> DataFrame:
+           max_budget: int | Column | None = None) -> DataFrame:
     """Add `slot_rank` = deterministic per-host priority-queue position.
 
     Ranks by (priority desc, depth asc, url_sha1 asc) when the queue
     carries a `priority` column, (depth, url_sha1) otherwise — budget
-    slots go to the highest-priority URLs first, shallowest as tiebreak."""
+    slots go to the highest-priority URLs first, shallowest as tiebreak.
+    Salted phase 1 keeps `max_budget` (an int or a per-row Column) rows."""
     order = [F.col("depth").asc(), F.col("url_sha1").asc()]
     if "priority" in queue.columns:
         order = [F.col("priority").desc()] + order
-    if salt_buckets and max_budget:
+    if salt_buckets and max_budget is not None:
         # phase 1: top max_budget per (host, salt) — shrinks hot hosts from
         # |host| rows to ≤ max_budget × salt_buckets before the global rank.
         # The losers are the same tagged frame's rows past max_budget: each
@@ -66,24 +69,24 @@ def assign_fetch_slots(
 ) -> tuple[DataFrame, DataFrame]:
     """Split the queue into (fetch_now, deferred) by per-host budget.
 
-    budgets: (host, budget_per_round) small dim table — broadcast join.
+    budgets: (host, budget_per_round) small dim table — broadcast join;
+    None fetches the whole queue. Both halves keep the queue's columns.
     """
     if budgets is None:
-        return queue, queue.limit(0)
-    max_budget = None
-    if salt_buckets:
-        max_budget = budgets.agg(F.max("budget_per_round")).collect()[0][0] or None
-    r = ranked(queue, salt_buckets=salt_buckets, max_budget=max_budget)
-    r = r.join(
-        F.broadcast(budgets.select(F.col("host").alias("_b_host"),
-                                   F.col("budget_per_round").alias("_budget"))),
-        on=[r["host"] == F.col("_b_host")],
-        how="left",
-    ).withColumn("_budget", F.coalesce(F.col("_budget"), F.lit(UNLIMITED)))
-    fetch_now = r.filter(F.col("slot_rank") <= F.col("_budget")).drop(
-        "_b_host", "_budget", "slot_rank"
-    )
-    deferred = r.filter(F.col("slot_rank") > F.col("_budget")).drop(
-        "_b_host", "_budget", "slot_rank"
-    )
-    return fetch_now, deferred
+        tagged = queue.withColumn("_fetch", F.lit(True))
+    else:
+        r = ranked(
+            queue.join(
+                F.broadcast(budgets.select(
+                    "host", F.col("budget_per_round").alias("_budget"))),
+                on="host", how="left",
+            ),
+            salt_buckets=salt_buckets,
+            max_budget=F.coalesce(F.col("_budget"), F.lit(0)),
+        )
+        tagged = r.select(*queue.columns, (
+            F.col("slot_rank") <= F.coalesce(F.col("_budget"), F.lit(UNLIMITED))
+        ).alias("_fetch"))
+    tagged = tagged.localCheckpoint()
+    return (tagged.filter(F.col("_fetch")).drop("_fetch"),
+            tagged.filter(~F.col("_fetch")).drop("_fetch"))

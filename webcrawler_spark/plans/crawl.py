@@ -22,12 +22,13 @@ join's probe side.
 Every round commits atomically through RoundStore (frontier, seen delta,
 items, errors, per-partition lineage, metrics), with one manifest write.
 The frames the commit reads (admitted, fetch_now | deferred_r, fetched,
-the parse) are eager localCheckpoints taken where each is built, so the
-commit's concurrent writers read materialized blocks and no dataset reads
-the seen table the commit inserts into; they are released when the round
-ends. Checkpoint blocks live only on the executors: a lost executor fails
-the round instead of recomputing them, and the re-submitted call continues
-from the last commit (the bloom's merged bitmaps already work this way).
+the parse) are eager localCheckpoints taken where each is built (the two
+politeness halves share one), so the commit's concurrent writers read
+materialized blocks and no dataset reads the seen table the commit
+inserts into; they are released when the round ends. Checkpoint blocks
+live only on the executors: a lost executor fails the round instead of
+recomputing them, and the re-submitted call continues from the last
+commit (the bloom's merged bitmaps already work this way).
 Every round after the first starts from the previous round's manifest and
 committed datasets alone (the round prologue: read the carry-over, compact
 the seen table, maintain the bloom, decide salting and whether to stop).
@@ -233,7 +234,8 @@ def sitemap_pointer_candidates(robots_bodies: DataFrame) -> DataFrame:
     depth 0 with SITEMAP_PRIORITY, so politeness fetches them before any
     page. link_pos is the constant SITEMAP_LINK_POS: pointer rows need no
     within-parent order, and duplicates (two hosts naming one sitemap)
-    pack identical winner metadata — deterministic without a global rank."""
+    tie on the struct-min winner's metadata — deterministic without a
+    global rank."""
     return robots_sitemaps(robots_bodies).select(
         F.col("sitemap_url").alias("url"),
         F.lit(0).cast("long").alias("depth"),
@@ -465,8 +467,6 @@ def run_crawl(
         fetch_now, deferred_next = assign_fetch_slots(
             queue, budgets, salt_buckets=salt_buckets
         )
-        fetch_now = fetch_now.localCheckpoint()
-        deferred_next = deferred_next.localCheckpoint()
 
         order = fetch_now.select(
             F.lit(rnd).cast("long").alias("round"), "host", "url", "url_sha1"

@@ -55,7 +55,9 @@ def release(df: DataFrame) -> None:
     """Free the blocks that hold ``df``: its cache, or the RDD behind a
     (local) checkpoint, which ``DataFrame.unpersist()`` leaves alone and
     PySpark has no public call for (pyspark 4.1.2: ``LogicalRDD.rdd()``).
-    A frame that is neither is left as it is.
+    A frame that is neither is left as it is; Filter and Project nodes
+    over a checkpoint lead to it, so releasing either half of
+    ``politeness.assign_fetch_slots`` frees the one both halves share.
 
     The checkpoint's blocks go through ``SparkContext.unpersistRDD``
     (``private[spark]``, reachable through the JVM gateway), the call
@@ -64,6 +66,8 @@ def release(df: DataFrame) -> None:
     line per released frame that says nothing about a finished round."""
     df.unpersist()
     plan = df._jdf.queryExecution().analyzed()
+    while plan.nodeName() in ("Filter", "Project"):
+        plan = plan.child()
     if plan.nodeName() == "LogicalRDD":
         rdd = plan.rdd()
         rdd.context().unpersistRDD(rdd.id(), False)
