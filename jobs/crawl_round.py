@@ -17,6 +17,10 @@ directory. On a real cluster nothing changes except --master and the
 executor/memory flags; the plan shapes (broadcast dims, url_sha1-keyed
 shuffles, salted politeness ranking) were chosen for that case; the crawl
 picks the bloom prefilter and the salting from the sizes it measures.
+The session takes the launcher's conf as given and fills in each of the
+engine's session defaults (``webcrawler_spark.session.ENGINE_DEFAULTS``:
+AQE, the Arrow batch cap, the codegen cache size, no Python call-site
+capture) that it leaves unset, so a ``--conf`` overrides any of them.
 """
 
 from __future__ import annotations
@@ -56,16 +60,15 @@ def main() -> None:
                          "~fleet cores at 10^10 URLs)")
     args = ap.parse_args()
 
-    from pyspark.sql import SparkSession
-
     from webcrawler_spark import fixtures
     from webcrawler_spark.plans.crawl import (
         CrawlConfig,
         robots_bodies_from_pages,
         run_crawl,
     )
+    from webcrawler_spark.session import submitted_spark
 
-    spark = SparkSession.builder.appName("webcrawler-spark-crawl").getOrCreate()
+    spark = submitted_spark("webcrawler-spark-crawl")
 
     pages = spark.read.parquet(args.pages)
     seeds = spark.read.parquet(args.seeds)

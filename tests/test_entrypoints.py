@@ -1,8 +1,9 @@
 """The spark-submit jobs and the tools scripts still import and compile,
-the crawl job runs and continues end to end, the scaling bench's
-frontier round runs and its seen set prunes, every CrawlConfig knob
-is set somewhere, and perfbench's tracer still finds every layer entry
-point it patches.
+the crawl job runs and continues end to end, its session carries the
+engine defaults (and no other file builds a session), the scaling
+bench's frontier round runs and its seen set prunes, every CrawlConfig
+knob is set somewhere, and perfbench's tracer still finds every layer
+entry point it patches.
 
 The imports run inside the tests, not at module level, so a job that
 imports a deleted name fails here as a test instead of dropping out of
@@ -143,3 +144,71 @@ def test_every_crawl_config_knob_is_exercised():
     ))
     unused = [f.name for f in dataclasses.fields(CrawlConfig) if f.name not in used]
     assert not unused, f"CrawlConfig fields no test or workload sets: {unused}"
+
+
+# runs jobs/crawl_round.py's main() with run_crawl replaced by a stub that
+# prints the settings of the session the job built, then crawls nothing
+_SESSION_PROBE = """
+import json, sys, types
+import webcrawler_spark.plans.crawl as crawl
+from jobs import crawl_round
+
+keys = json.loads(sys.argv.pop())
+def run_crawl(spark, *args, **kwargs):
+    print(json.dumps({k: spark.conf.get(k) for k in keys}))
+    return types.SimpleNamespace(rounds=0, metrics=[])
+crawl.run_crawl = run_crawl
+crawl_round.main()
+"""
+
+
+def test_crawl_round_session_takes_engine_defaults_under_launcher_conf(
+    fixture_web, tmp_path
+):
+    """The spark-submit job's session carries every engine default the
+    launcher leaves unset, and a launcher ``--conf`` wins over one."""
+    paths = fixture_web["paths"]
+    launcher = {"spark.sql.execution.arrow.maxRecordsPerBatch": "512"}
+    expected = {
+        "spark.sql.adaptive.enabled": "true",
+        "spark.sql.adaptive.coalescePartitions.enabled": "true",
+        "spark.sql.adaptive.skewJoin.enabled": "true",
+        "spark.sql.execution.arrow.pyspark.enabled": "true",
+        "spark.sql.files.maxPartitionBytes": "134217728",
+        "spark.sql.session.timeZone": "UTC",
+        "spark.sql.codegen.cache.maxEntries": "1000",
+        "spark.python.sql.dataFrameDebugging.enabled": "false",
+        **launcher,
+    }
+    env = dict(os.environ)
+    env["PYTHONPATH"] = os.pathsep.join(
+        p for p in (str(REPO), env.get("PYTHONPATH")) if p
+    )
+    env["PYSPARK_SUBMIT_ARGS"] = " ".join(
+        f"--conf {k}={v}" for k, v in launcher.items()
+    ) + " pyspark-shell"
+    proc = subprocess.run(
+        [sys.executable, "-c", _SESSION_PROBE,
+         "--pages", paths["pages"], "--seeds", paths["seeds"],
+         "--checkpoint", str(tmp_path / "ckpt"), json.dumps(list(expected))],
+        capture_output=True, text=True, timeout=600, check=True,
+        cwd=str(tmp_path), env=env,
+    )
+    assert json.loads(proc.stdout.strip().splitlines()[0]) == expected
+
+    from webcrawler_spark.session import ENGINE_DEFAULTS
+
+    assert expected == {**ENGINE_DEFAULTS, **launcher}
+
+
+def test_only_the_session_module_builds_a_session():
+    """Every session the engine starts goes through webcrawler_spark/session.py,
+    so none misses the engine defaults: no other file of the engine, the
+    jobs or the tools builds one itself."""
+    builders = [
+        str(p.relative_to(REPO))
+        for d in ("webcrawler_spark", "jobs", "tools")
+        for p in sorted((REPO / d).rglob("*.py"))
+        if "SparkSession.builder" in p.read_text()
+    ]
+    assert builders == ["webcrawler_spark/session.py"]

@@ -42,7 +42,7 @@ from __future__ import annotations
 from dataclasses import dataclass
 from typing import ClassVar
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -369,8 +369,8 @@ def run_crawl(
         store.manifest(k)["counts"]["seen_delta"] for k in range(rnd - 1)
     )
     while rnd <= cfg.max_rounds:
-        first = rnd == start  # the first round this call runs
-        pointers = first and robots_bodies is not None  # injects Sitemap: URLs
+        # the first round this call runs injects the Sitemap: URLs
+        pointers = rnd == start and robots_bodies is not None
         scratch: list = []
         prefilter = salt_buckets = None
         if rnd == 0:
@@ -429,15 +429,24 @@ def run_crawl(
             candidates = candidates.unionByName(
                 sitemap_pointer_candidates(robots_bodies)
             )
-        n_candidates = candidates.count() if first else prev["next_candidates"]
+        observed = Observation()
+        candidates = candidates.observe(observed, F.count(F.lit(1)).alias("rows"))
 
         # each fixed point is checkpointed (one job, in this thread) where
-        # it is built; all per-round counts come from observe() metrics
-        # captured during the commit writes (see RoundStore.commit_round)
+        # it is built; all per-round counts come from observe() metrics:
+        # the candidates stat from admitted's checkpoint, the rest captured
+        # during the commit writes (see RoundStore.commit_round)
         admitted = admission.admit(
             candidates, seen, cfg.whitelist, cfg.max_depth,
             robots=robots, bloom_prefilter=prefilter, scratch=scratch,
         ).localCheckpoint()
+        # AQE drops the observed scan from the final plan when it learns
+        # early that nothing is admissible (no whitelisted host, say): the
+        # observation then holds no row (``Observation.get`` fails on it),
+        # and only then is the count a job of its own
+        n_candidates = observed._jo.getAsJava().get("rows")
+        if n_candidates is None:
+            n_candidates = candidates.count()
 
         # crawl-trap guard: overflow beyond the per-host cap is marked SEEN
         # (below: seen_delta uses the FULL admitted set, so trap URLs are
